@@ -1,7 +1,7 @@
-"""Peak memory of this process and all its descendants (the driver Python,
-the JVM it launches and Spark's Python workers), read from /proc by a
-background thread that only sleeps and reads files, so it stays off the
-timed path.
+"""Peak memory and CPU time of this process and all its descendants (the
+driver Python, the JVM it launches and Spark's Python workers), read from
+/proc. Memory is sampled by a background thread that only sleeps and reads
+files, so it stays off the timed path.
 
 The measure is PSS (proportional set size): resident pages, with each
 shared page split among the processes that map it. Spark forks its Python
@@ -49,8 +49,27 @@ def tree_pss_bytes(root: int) -> int:
     return total
 
 
+_TICKS = os.sysconf("SC_CLK_TCK")
+
+
+def tree_cpu_s(root: int) -> float:
+    """CPU seconds (user + system) used so far by ``root`` and its live
+    descendants, plus the children they have reaped. The kernel leaves time
+    a virtual CPU spent waiting for its host (steal) out of these counters,
+    so the figure does not move with co-tenant load the way wall time does."""
+    total = 0
+    for pid in [root] + descendants(root):
+        try:
+            with open(f"/proc/{pid}/stat") as f:
+                fields = f.read().rsplit(")", 1)[1].split()
+        except OSError:
+            continue
+        total += sum(int(x) for x in fields[11:15])   # utime stime cutime cstime
+    return total / _TICKS
+
+
 class PeakPSS:
-    def __init__(self, interval_s: float = 0.2):
+    def __init__(self, interval_s: float = 0.5):
         self.interval_s = interval_s
         self.peak = 0
         self._stop = threading.Event()

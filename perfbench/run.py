@@ -1,6 +1,6 @@
 """Run one benchmark workload and print its result as one JSON line.
 
-    python3 perfbench/run.py --workload search --seed 1 --seconds 15 --trace 0
+    python3 perfbench/run.py --workload search --seed 1 --seconds 16 --trace 0
 
 Run it from the root of a checkout of this repository. With ``--trace 0``
 the result carries the end-to-end metrics; with ``--trace 1`` the package's
@@ -12,6 +12,7 @@ scratch files live under ``.perfbench_work/`` and are removed at exit.
 from __future__ import annotations
 
 import argparse
+import itertools
 import json
 import os
 import shutil
@@ -27,8 +28,12 @@ from contextlib import contextmanager, nullcontext
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = "distributedvectordatabase_spark"
 
+sys.path.insert(0, ROOT)
+from perfbench import memory  # noqa: E402
+
 # per workload: request kinds behind request_p50_ms, and behind
-# throughput_per_s (items landed or answered per second of their time)
+# cpu_ms_per_item and throughput_per_s (process-tree CPU per item answered,
+# and items answered per second of their time)
 PRIMARY = {"search": ("lsh", "exact", "ivf"), "curate": ("curate",)}
 THROUGHPUT = {"search": ("batch",), "curate": ("curate",)}
 INGEST_KINDS = ("append", "fresh", "compact", "delete", "ingest_stats", "reopen")
@@ -59,10 +64,12 @@ class Run:
         self.lat = defaultdict(list)       # kind -> ms
         self.build = defaultdict(list)     # kind -> ms until the lazy plan returned
         self.exec = defaultdict(list)      # kind -> ms of the action
+        self.cpu = defaultdict(float)      # kind -> process-tree CPU seconds
         self.items = defaultdict(int)
         self.scored = defaultdict(lambda: [0, 0])
         self.calls = defaultdict(int)
-        self.measure_start = None
+        self.timing = True                 # False while warming up
+        self.setup_end = None
 
     def path(self, name: str) -> str:
         return os.path.join(self.work, name)
@@ -79,11 +86,14 @@ class Run:
         """One operation: ``build()`` then ``act`` on its result. Returns
         the result, or FAILED after counting the exception."""
         self.attempted += 1
-        group = f"{kind}:{self.calls[kind]}"
-        self.calls[kind] += 1
+        # warm-up calls get their own job groups, so no per-kind record sees them
+        op_kind = kind if self.timing else f"warmup-{kind}"
+        group = f"{op_kind}:{self.calls[op_kind]}"
+        self.calls[op_kind] += 1
         op = self.tracer.operation(group) if self.tracer else nullcontext()
         try:
             with op:
+                c0 = memory.tree_cpu_s(os.getpid())
                 t0 = time.perf_counter()
                 out = build()
                 t1 = time.perf_counter()
@@ -94,13 +104,15 @@ class Run:
                     else:
                         out = act(out)
                 t2 = time.perf_counter()
+                c1 = memory.tree_cpu_s(os.getpid())
         except Exception as e:  # a failed operation is data, not a crash
             self.fail(kind, f"{type(e).__name__}: {e}")
             return Run.FAILED
-        if timed:
+        if timed and self.timing:
             self.lat[kind].append((t2 - t0) * 1e3)
             self.build[kind].append((t1 - t0) * 1e3)
             self.exec[kind].append((t2 - t1) * 1e3)
+            self.cpu[kind] += c1 - c0
             self.items[kind] += items
         return out
 
@@ -113,17 +125,38 @@ class Run:
         print(f"perfbench: {kind} failed: {msg[:500]}", file=sys.stderr, flush=True)
 
     def rows_scored(self, kind: str, scored: int, returned: int) -> None:
+        if not self.timing:
+            return
         self.scored[kind][0] += scored
         self.scored[kind][1] += returned
 
-    def loop(self, round_: list, do) -> None:
-        """Whole rounds until ``seconds`` have passed (at least one)."""
-        self.measure_start = time.perf_counter()
-        while True:
-            for kind in round_:
+    def end_setup(self) -> None:
+        self.setup_end = time.perf_counter()
+
+    def warm_up(self, kinds, do) -> None:
+        """Untimed requests, outputs still checked, so timed requests do not
+        pay for cold code paths, a JVM still compiling hot methods, and
+        empty plan caches."""
+        self.timing = False
+        try:
+            for kind in kinds:
                 do(kind)
-            if time.perf_counter() - self.measure_start >= self.seconds:
+        finally:
+            self.timing = True
+
+    def loop(self, cycle: list, do) -> None:
+        """Requests in a fixed cycle for ``seconds``: a request is started
+        only if, at its kind's previous latency, it ends in time (the first
+        one always starts), so no run overshoots by a long request."""
+        start = time.perf_counter()
+        last: dict = {}
+        for i in itertools.count():
+            kind = cycle[i % len(cycle)]
+            t0 = time.perf_counter()
+            if i and t0 - start + last.get(kind, 0.0) > self.seconds:
                 break
+            do(kind)
+            last[kind] = time.perf_counter() - t0
 
 
 # -- metrics -----------------------------------------------------------------
@@ -145,14 +178,18 @@ def tail(xs) -> tuple[float, float]:
     return float(np.percentile(xs, pct)), pct
 
 
-def end_to_end(run: Run, workload: str, setup_s: float, peak_mb: float) -> dict:
-    lat = [x for k in PRIMARY[workload] for x in run.lat[k]]
+def throughput(run: Run, workload: str) -> float:
     busy = sum(x for k in THROUGHPUT[workload] for x in run.lat[k]) / 1e3
+    items = sum(run.items[k] for k in THROUGHPUT[workload])
+    return items / busy if busy else 0.0
+
+
+def end_to_end(run: Run, workload: str, setup_s: float, peak_mb: float) -> dict:
+    cpu = sum(run.cpu[k] for k in THROUGHPUT[workload])
     items = sum(run.items[k] for k in THROUGHPUT[workload])
     return {
         "setup_s": (setup_s, "s"),
-        "request_p50_ms": (median(lat), "ms"),
-        "throughput_per_s": (items / busy if busy else 0.0, "1/s"),
+        "cpu_ms_per_item": (cpu * 1e3 / items if items else 0.0, "ms"),
         "peak_pss_mb": (peak_mb, "MB"),
     }
 
@@ -211,6 +248,8 @@ def per_layer(run: Run, workload: str, tracer, groups: dict, extra: dict,
         "recall_at_10": (extra.get("recall_at_10", 0.0), "ratio"),
         "space_amp": (extra.get("space_amp", 0.0), "ratio"),
         "stats_p50_ms": (median(run.lat["stats"]), "ms"),
+        "throughput_per_s": (throughput(run, workload), "1/s"),
+        "request_p50_ms": (median(lat), "ms"),
         "request_tail_ms": (tail_ms, "ms"),
         "request_tail_pct": (tail_pct, "pct"),
         "request_samples": (float(len(lat)), "count"),
@@ -225,7 +264,7 @@ def per_layer(run: Run, workload: str, tracer, groups: dict, extra: dict,
             m[f"spark.{op}.{field}"] = (rec[field], units[field])
     for stage, ms in trace.per_stage(groups, "curate").items():
         m[f"curation.{stage}.task_run_ms"] = (ms, "ms")
-    for name in ("setup_s", "request_p50_ms", "throughput_per_s"):
+    for name in ("setup_s", "cpu_ms_per_item"):
         m[f"traced.{name}"] = e2e[name]
     return m
 
@@ -312,8 +351,7 @@ def main(argv=None) -> int:
         "SPARK_LOCAL_DIRS": os.path.join(work, "local"),
         "TMPDIR": os.path.join(work, "tmp"),
     })
-    sys.path.insert(0, ROOT)
-    from perfbench import memory, workloads
+    from perfbench import workloads
 
     spark = None
     try:
@@ -329,7 +367,7 @@ def main(argv=None) -> int:
                 tracer.install()
             run = Run(spark, args.seed, args.seconds, work, tracer)
             extra = workloads.WORKLOADS[args.workload](run)
-            setup_s = run.measure_start - t0
+            setup_s = run.setup_end - t0
         e2e = end_to_end(run, args.workload, setup_s, peak.peak_mb)
         if args.trace:
             tracer.uninstall()

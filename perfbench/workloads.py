@@ -1,7 +1,7 @@
 """The workloads. Each is a closed loop with one client: a request is sent
-only after the previous one returned. Work is issued in fixed rounds, and
-rounds repeat until the measuring time is used up, so every run has the
-same mix of operations.
+only after the previous one returned. Requests follow a fixed cycle of
+kinds until the measuring time is used up, so every run has the same mix
+of operations.
 
 Every function reaches the package through module and class attributes at
 call time, so the traced run's wrappers see every call.
@@ -80,7 +80,7 @@ SEARCH_HELD_OUT = 1_000
 BATCH_QUERIES = 32
 N_CELLS = 16
 N_PROBE = 4
-SEARCH_ROUND = ["batch", "lsh", "exact", "ivf", "stats", "lsh", "exact", "ivf"]
+SEARCH_CYCLE = ["batch", "lsh", "batch", "exact", "batch", "ivf", "stats"]
 
 
 def search(run) -> dict:
@@ -104,8 +104,10 @@ def search(run) -> dict:
         store.write(corpus)
     with run.setup_phase("ivf_store.build"):
         ivf.build(corpus)
-    with run.setup_phase("ingest"):
-        extra = ingest(run, src)
+    run.end_setup()
+    # the write path's layers are per-layer metrics, so it runs only when
+    # they are recorded; untraced runs spend its time on timed requests
+    extra = ingest(run, src) if run.tracer else {}
     shard_of = store.lsh.bucket_of(X)
     C = ivf.centroids()
     cell_of = np.argmin(
@@ -142,7 +144,7 @@ def search(run) -> dict:
         got_ids, got_d = checks.answer(rows)
         (ref_ids, ref_d), scanned = reference(kind, q)
         run.check(kind, checks.check_topk(got_ids, got_d, ref_ids, ref_d, kind))
-        if kind != "exact":
+        if kind != "exact" and run.timing:
             truth, _ = checks.brute_topk(X, ids, q, K)
             recalls.append(len(set(got_ids) & set(map(int, truth))) / K)
         run.rows_scored(kind, scanned, len(got_ids))
@@ -190,11 +192,12 @@ def search(run) -> dict:
         else:
             single(kind, src.queries(held, 1)[0])
 
-    run.loop(SEARCH_ROUND, do)
+    run.warm_up(SEARCH_CYCLE, do)
+    run.loop(SEARCH_CYCLE, do)
     return {"recall_at_10": float(np.mean(recalls)) if recalls else 0.0, **extra}
 
 
-# -- ingest (part of search's setup) ----------------------------------------
+# -- ingest (the write path, in traced search runs) -------------------------
 
 INGEST_ROWS = 3_000
 APPEND_ROWS = 500
@@ -326,6 +329,7 @@ def curate(run) -> dict:
         docs = gen.documents(run.seed, CURATE_DOCS)
         df = spark.createDataFrame(docs.rows, "doc_id long, source string, text string")
         target = spark.createDataFrame([(i,) for i in docs.target_ids], "doc_id long")
+    run.end_setup()
     input_ids = [r[0] for r in docs.rows]
     select_k = (len(input_ids) - len(docs.planted_removed)) // 2
     calls = {"n": 0}
