@@ -23,6 +23,14 @@ Two implementations, same semantics:
   vectorized and spill-safe. At 100 TB this is the only viable shape:
   the corpus is scanned once, never shuffled.
 
+Every arrow search path collects the (bounded) query batch once and
+stacks it into one validated float64 matrix (:func:`query_matrix`:
+ragged, wrong-dimension and non-finite queries raise ``ValueError``
+before the scan is planned). That matrix is the partial top-k's
+broadcast payload, and the same matrix becomes the rescore's q side as
+an Arrow-built LocalRelation (:func:`local_query_relation`) — a
+LocalTableScan that broadcasts without a Spark job or any SQL text.
+
 Semantics pinned for reproducibility / oracle checks:
 - ties broken by (dist, neighbor_id) ascending — the reference's
   argsort tie order is undefined (coordinator/coordinator.py:229);
@@ -34,8 +42,11 @@ Semantics pinned for reproducibility / oracle checks:
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -79,44 +90,87 @@ def collect_query_batch(
     return rows
 
 
-def _dlit(x: float) -> str:
-    """A Spark SQL double literal that parses back to exactly ``x``
-    (repr round-trips through correctly-rounded decimal parsing on
-    both sides; the D suffix keeps the literal DOUBLE, not DECIMAL)."""
-    return repr(float(x)) + "D"
+class QueryBatch(NamedTuple):
+    """The collected query batch as arrays, built once per search call
+    by :func:`query_matrix`: ``qids`` (int64, nq) and ``Q`` (float64,
+    nq × dim). The Arrow partial's broadcast payload and the rescore's
+    q side both read this one matrix."""
+
+    qids: np.ndarray
+    Q: np.ndarray
 
 
-def local_query_relation(spark, qrows: list, qid_col: str, qvec_col: str) -> DataFrame:
-    """The already-collected query batch as a VALUES LocalRelation.
+def query_matrix(
+    qrows: list, qid_col: str, qvec_col: str, dim: int | None = None
+) -> QueryBatch:
+    """Validate the collected query rows and stack them into one float64
+    matrix, before any corpus scan is planned.
+
+    Raises ``ValueError`` naming the first offending ``qid`` for a null
+    query vector, a vector whose length differs from ``dim`` (the
+    store's dimension, as the reference checks on insert,
+    shard/shard_node.py:72-74) or, without ``dim``, from the batch's
+    first vector (a ragged batch), and a vector with a NaN, ±inf or
+    null component — no distance to such a query is defined."""
+    qids = np.fromiter((r[qid_col] for r in qrows), dtype=np.int64, count=len(qrows))
+    vecs = [r[qvec_col] for r in qrows]
+    for qid, v in zip(qids, vecs):
+        if v is None:
+            raise ValueError(f"query qid={qid} has a null vector")
+    lens = np.fromiter((len(v) for v in vecs), dtype=np.int64, count=len(vecs))
+    if dim is not None:
+        bad = np.flatnonzero(lens != dim)
+        if len(bad):
+            i = bad[0]
+            raise ValueError(
+                f"query qid={qids[i]} has dimension {lens[i]}, "
+                f"but the store's dimension is {dim}"
+            )
+    elif len(lens):
+        bad = np.flatnonzero(lens != lens[0])
+        if len(bad):
+            i = bad[0]
+            raise ValueError(
+                f"ragged query batch: qid={qids[i]} has dimension {lens[i]}, "
+                f"but qid={qids[0]} has {lens[0]}"
+            )
+    if not vecs:
+        return QueryBatch(qids, np.zeros((0, dim or 0), dtype=np.float64))
+    Q = np.array(vecs, dtype=np.float64)  # a null component becomes NaN
+    bad = np.flatnonzero(~np.isfinite(Q).all(axis=1))
+    if len(bad):
+        raise ValueError(
+            f"query qid={qids[bad[0]]} has a non-finite (NaN, inf or null) component"
+        )
+    return QueryBatch(qids, Q)
+
+
+def local_query_relation(
+    spark, batch: QueryBatch, qid_col: str, qvec_col: str
+) -> DataFrame:
+    """The query batch as an Arrow-built LocalRelation
+    ``(qid_col bigint, qvec_col array<double>)``.
 
     The deterministic re-score (``_rescored_topk``) broadcast-joins the
     query vectors back to the candidate slate. Referencing the original
     ``queries`` plan there makes the broadcast build re-run the whole
     query-side subplan (e.g. a TakeOrdered scan of the corpus) as its
     own Spark job — once per search call — even though the exact same
-    rows were just collected to the driver to build the numpy payload.
-    Rebuilding the q side from those rows as a literal VALUES relation
-    is row-identical by construction (same qid/qvec pairs; double
-    literals round-trip exactly, and every distance expression casts
-    its inputs to array<double> anyway) and broadcasts driver-side with
-    NO job at all (LocalTableScan collects without submitting tasks) —
-    one fewer job + one fewer corpus-scan subtree per query batch
-    (guide §5: the driver should do almost no data work, and bounded
-    work it already did should not be re-done as a cluster job)."""
-    if not qrows:
-        return spark.sql(
-            f"SELECT CAST(NULL AS BIGINT) AS `{qid_col}`, "
-            f"CAST(NULL AS ARRAY<DOUBLE>) AS `{qvec_col}` WHERE 1=0"
-        )
-    rows_sql = ", ".join(
-        "({}L, array({}))".format(
-            int(r[qid_col]), ",".join(_dlit(x) for x in r[qvec_col])
-        )
-        for r in qrows
-    )
-    return spark.sql(
-        f"SELECT col1 AS `{qid_col}`, col2 AS `{qvec_col}` FROM VALUES {rows_sql}"
-    )
+    rows were just collected to the driver. ``createDataFrame`` over a
+    ``pyarrow.Table`` hands the float64 matrix to the JVM as one Arrow
+    buffer: the values are bit-identical by construction (``-0.0``,
+    subnormals and all), there is no SQL text to print or parse, and the
+    result is a LocalRelation, which broadcasts as a LocalTableScan
+    without submitting a job (guide §5: bounded work the driver already
+    did should not be re-done as a cluster job)."""
+    nq, dim = batch.Q.shape
+    offsets = pa.array(np.arange(nq + 1, dtype=np.int32) * dim)
+    values = pa.array(batch.Q.reshape(-1), type=pa.float64())
+    table = pa.table({
+        qid_col: pa.array(batch.qids, type=pa.int64()),
+        qvec_col: pa.ListArray.from_arrays(offsets, values),
+    })
+    return spark.createDataFrame(table)
 
 
 def _dist_expr(metric: str, a, b) -> Column:
@@ -183,23 +237,21 @@ def _final_topk(scored: DataFrame, k: int) -> DataFrame:
 
 def _rescored_topk(
     partial: DataFrame,
-    queries: DataFrame,
+    batch: QueryBatch,
     k: int,
     metric: str,
-    qid_col: str,
-    qvec_col: str,
     join_corpus: DataFrame | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    qrows: list | None = None,
 ) -> DataFrame:
     """Deterministic final top-k over an Arrow partial that carries the
     neighbor vectors (``nvec``).
 
-    ``qrows`` — the already-collected query batch; when given, the
-    broadcast q side is rebuilt from it as a literal LocalRelation
-    (:func:`local_query_relation`) instead of re-executing the
-    ``queries`` subplan as a broadcast-build job.
+    The broadcast q side is the already-collected query ``batch`` as an
+    Arrow-built LocalRelation (:func:`local_query_relation`): the same
+    float64 matrix the partial's broadcast payload carries, handed to
+    the JVM as one Arrow buffer, so the rescore neither re-executes the
+    ``queries`` subplan as a broadcast-build job nor parses SQL text.
 
     The BLAS distance matrix sums in batch order, so its float64 values
     can land on either side of a rounding boundary depending on
@@ -259,13 +311,7 @@ def _rescored_topk(
             ),
             "neighbor_id",
         )
-    if qrows is not None:
-        queries = local_query_relation(
-            partial.sparkSession, qrows, qid_col, qvec_col
-        )
-    q = F.broadcast(
-        queries.select(F.col(qid_col).alias("qid"), F.col(qvec_col).alias("_qvec"))
-    )
+    q = F.broadcast(local_query_relation(partial.sparkSession, batch, "qid", "_qvec"))
     rescored = slate.join(q, "qid").select(
         "qid", "neighbor_id", _dist_expr(metric, "_qvec", "nvec").alias("dist")
     )
@@ -283,6 +329,7 @@ def knn(
     qvec_col: str = "qvec",
     impl: str = "arrow",
     rescore: str = "auto",
+    dim: int | None = None,
 ) -> DataFrame:
     """Batch exact kNN: for every query row, the k nearest corpus rows.
 
@@ -300,6 +347,11 @@ def knn(
     (the joinback's second corpus probe costs more than shipping small
     vectors). Resolved from the already-collected query batch — no
     extra Spark job.
+
+    ``dim`` (arrow impl) is the corpus dimension when the caller knows
+    it (a store does): a query of another length raises ``ValueError``
+    before the scan is planned. Ragged batches and non-finite query
+    components always raise (:func:`query_matrix`).
     """
     k = max(int(k), 1)
     if metric not in _METRICS:
@@ -315,19 +367,16 @@ def knn(
             "so there is nothing to re-score; drop rescore or use impl='arrow'"
         )
     if impl == "arrow":
-        qrows = collect_query_batch(queries, qid_col, qvec_col)
-        if rescore == "auto":
-            dim = len(qrows[0][qvec_col]) if qrows else 0
-            rescore = "joinback" if dim >= AUTO_JOINBACK_DIM else "carry"
-        carry = rescore == "carry"
+        batch = query_matrix(
+            collect_query_batch(queries, qid_col, qvec_col), qid_col, qvec_col, dim
+        )
+        carry = _resolve_rescore(rescore, batch) == "carry"
         partial = _arrow_partial_topk(
-            corpus, queries, k, metric, id_col, vec_col, qid_col, qvec_col,
-            qrows=qrows, carry_vectors=carry,
+            corpus, batch, k, metric, id_col, vec_col, carry_vectors=carry,
         )
         return _rescored_topk(
-            partial, queries, k, metric, qid_col, qvec_col,
+            partial, batch, k, metric,
             join_corpus=None if carry else corpus, id_col=id_col, vec_col=vec_col,
-            qrows=qrows,
         )
     if impl == "expr":
         pairs = corpus.join(F.broadcast(queries.select(qid_col, qvec_col)))
@@ -340,18 +389,22 @@ def knn(
     raise ValueError(f"unknown impl {impl!r}; use 'arrow' or 'expr'")
 
 
+def _resolve_rescore(rescore: str, batch: QueryBatch) -> str:
+    """``rescore="auto"`` → joinback at query dim >= AUTO_JOINBACK_DIM."""
+    if rescore != "auto":
+        return rescore
+    return "joinback" if batch.Q.shape[1] >= AUTO_JOINBACK_DIM else "carry"
+
+
 def _arrow_partial_topk(
     corpus: DataFrame,
-    queries: DataFrame,
+    batch: QueryBatch,
     k: int,
     metric: str,
     id_col: str,
     vec_col: str,
-    qid_col: str,
-    qvec_col: str,
     shard_col: str | None = None,
     cand_map: dict[int, frozenset] | None = None,
-    qrows: list | None = None,
     carry_vectors: bool = True,
 ) -> DataFrame:
     """mapInPandas partial top-k: per Arrow batch, a (nq × batch) BLAS
@@ -360,13 +413,8 @@ def _arrow_partial_topk(
     With ``shard_col``/``cand_map``, rows outside a query's candidate
     shards are masked to +inf before the top-k — the pruned search then
     runs on the same BLAS path as the exact one instead of interpreted
-    per-pair expressions (10× at 500k rows; see bench_scale.py).
-    ``qrows`` lets a caller that already collected the query batch (e.g.
-    IVFStore centroid probing) reuse it instead of a second collect."""
-    if qrows is None:
-        qrows = collect_query_batch(queries, qid_col, qvec_col)
-    qids = np.array([r[qid_col] for r in qrows], dtype=np.int64)
-    Q = np.array([list(r[qvec_col]) for r in qrows], dtype=np.float64)
+    per-pair expressions (10× at 500k rows; see bench_scale.py)."""
+    qids, Q = batch
     spark = corpus.sparkSession
     take = 2 * k  # slack so dist-ties at the k boundary survive to the merge
 
@@ -496,14 +544,13 @@ def knn_pruned(
             "rescore applies to impl='arrow' only: the expr impl already "
             "scores with the sequential aggregate(zip_with(...)) expression"
         )
-    qrows = collect_query_batch(queries, qid_col, qvec_col)
-    if rescore == "auto":
-        dim = len(qrows[0][qvec_col]) if qrows else 0
-        rescore = "joinback" if dim >= AUTO_JOINBACK_DIM else "carry"
+    batch = query_matrix(
+        collect_query_batch(queries, qid_col, qvec_col), qid_col, qvec_col, lsh.dim
+    )
     cand_pairs = [
-        (int(r[qid_col]), int(s))
-        for r in qrows
-        for s in lsh.candidate_shards(list(r[qvec_col]), num_candidates=num_candidates)
+        (int(qid), int(s))
+        for qid, qv in zip(*batch)
+        for s in lsh.candidate_shards(qv, num_candidates=num_candidates)
     ]
     spark = corpus_bucketed.sparkSession
     all_shards = sorted({s for _, s in cand_pairs})
@@ -514,16 +561,14 @@ def knn_pruned(
         for qid, s in cand_pairs:
             cand_map.setdefault(qid, set()).add(s)
         cand_map = {q: frozenset(s) for q, s in cand_map.items()}
-        carry = rescore == "carry"
+        carry = _resolve_rescore(rescore, batch) == "carry"
         partial = _arrow_partial_topk(
-            pruned, queries, k, metric, id_col, vec_col, qid_col, qvec_col,
-            shard_col=shard_col, cand_map=cand_map, qrows=qrows,
-            carry_vectors=carry,
+            pruned, batch, k, metric, id_col, vec_col,
+            shard_col=shard_col, cand_map=cand_map, carry_vectors=carry,
         )
         return _rescored_topk(
-            partial, queries, k, metric, qid_col, qvec_col,
+            partial, batch, k, metric,
             join_corpus=None if carry else pruned, id_col=id_col, vec_col=vec_col,
-            qrows=qrows,
         )
 
     cand_df = spark.createDataFrame(cand_pairs, schema=f"{qid_col} long, {shard_col} int")
@@ -563,6 +608,7 @@ def filtered_knn(
     qvec_col: str = "qvec",
     impl: str = "arrow",
     rescore: str = "auto",
+    dim: int | None = None,
 ) -> DataFrame:
     """Metadata-filtered exact kNN — attribute predicates composed with
     vector search (the reference lists metadata filtering as explicit
@@ -597,6 +643,8 @@ def filtered_knn(
     type works — negative ints, sparse tenant ids, strings. A NULL
     constraint matches nothing (SQL equality), so that query yields no
     rows.
+
+    ``dim`` and the query-vector checks are :func:`knn`'s.
     """
     k = max(int(k), 1)
     if predicate is not None:
@@ -606,6 +654,7 @@ def filtered_knn(
         return knn(
             corpus, queries, k=k, metric=metric, id_col=id_col, vec_col=vec_col,
             qid_col=qid_col, qvec_col=qvec_col, impl=impl, rescore=rescore,
+            dim=dim,
         )
     qf = qfilter_col or filter_col
     if impl == "expr":
@@ -630,6 +679,7 @@ def filtered_knn(
         raise ValueError(f"unknown impl {impl!r}; use 'arrow' or 'expr'")
 
     qrows = collect_query_batch(queries, qid_col, qvec_col, qf)
+    batch = query_matrix(qrows, qid_col, qvec_col, dim)
     # dictionary-encode constraint values: the Arrow mask is a dense
     # boolean LUT, so raw values must become contiguous indices — raw
     # negative values would wrap and sparse large ids would blow the
@@ -654,18 +704,12 @@ def filtered_knn(
     else:
         masked = pruned.withColumn("_fidx", F.lit(0))  # pruned is already empty
 
-    if rescore == "auto":
-        dim = len(qrows[0][qvec_col]) if qrows else 0
-        rescore = "joinback" if dim >= AUTO_JOINBACK_DIM else "carry"
-    carry = rescore == "carry"
+    carry = _resolve_rescore(rescore, batch) == "carry"
     partial = _arrow_partial_topk(
-        masked, queries, k, metric, id_col, vec_col, qid_col, qvec_col,
-        shard_col="_fidx", cand_map=cand_map,
-        qrows=[{qid_col: r[qid_col], qvec_col: r[qvec_col]} for r in qrows],
-        carry_vectors=carry,
+        masked, batch, k, metric, id_col, vec_col,
+        shard_col="_fidx", cand_map=cand_map, carry_vectors=carry,
     )
     return _rescored_topk(
-        partial, queries, k, metric, qid_col, qvec_col,
+        partial, batch, k, metric,
         join_corpus=None if carry else pruned, id_col=id_col, vec_col=vec_col,
-        qrows=[{qid_col: r[qid_col], qvec_col: r[qvec_col]} for r in qrows],
     )

@@ -589,6 +589,7 @@ def hybrid_serve_batch(
                 store.read(spark, as_of_gen=store_as_of).filter(where),
                 qvecs, k=fetch,
                 metric=metric, id_col=store.id_col, vec_col=store.vec_col,
+                dim=store.lsh.dim,
             )
         else:
             hits = store.knn(

@@ -34,11 +34,14 @@ from distributedvectordatabase_spark.sources.tombstones import (
 )
 
 from distributedvectordatabase_spark.operators.knn import (
+    QueryBatch,
     _arrow_partial_topk,
     _dist_expr,
     _final_topk,
     _rescored_topk,
+    _resolve_rescore,
     collect_query_batch,
+    query_matrix,
 )
 
 
@@ -1208,9 +1211,12 @@ class IVFStore:
         # escalation forever on cur = min(0*2, n_cells) == 0
         n_probe = max(int(n_probe), 1)
         C = self.centroids()
-        qrows = collect_query_batch(queries, qid_col, qvec_col)
+        batch = query_matrix(
+            collect_query_batch(queries, qid_col, qvec_col), qid_col, qvec_col,
+            C.shape[1],
+        )
         result = self._knn_probe(
-            spark, queries, qrows, C, k, n_probe, metric, qid_col, qvec_col,
+            spark, queries, batch, C, k, n_probe, metric, qid_col, qvec_col,
             impl, rescore, where, as_of_gen,
         )
         if where is None or not escalate or n_probe >= self.n_cells:
@@ -1221,10 +1227,9 @@ class IVFStore:
         kk = max(int(k), 1)
         radii = self.cell_radii() if metric == "l2sq" else None
         qinfo = {}
-        for r in qrows:
-            qv = np.asarray(list(r[qvec_col]), dtype=np.float64)
+        for qid, qv in zip(*batch):
             d2 = ((C - qv) ** 2).sum(axis=1)
-            qinfo[int(r[qid_col])] = (np.argsort(d2), d2)
+            qinfo[int(qid)] = (np.argsort(d2), d2)
 
         def still_starved(qid: int, cur: int, counts: dict, kth: dict) -> bool:
             if cur >= self.n_cells:
@@ -1243,7 +1248,7 @@ class IVFStore:
 
         out = result.toPandas()  # bounded: <= batch x k rows
         cur = int(n_probe)
-        active = {int(r[qid_col]): r for r in qrows}
+        active = set(batch.qids.tolist())
         while cur < self.n_cells and active:
             counts = out.groupby("qid").size().to_dict() if len(out) else {}
             kth = (
@@ -1252,17 +1257,18 @@ class IVFStore:
                 else {}
             )
             active = {
-                qid: r for qid, r in active.items()
-                if still_starved(qid, cur, counts, kth)
+                qid for qid in active if still_starved(qid, cur, counts, kth)
             }
             if not active:
                 break
             cur = min(cur * 2, self.n_cells)
             starved_ids = list(active)
+            starved = np.isin(batch.qids, starved_ids)
             sub = self._knn_probe(
                 spark,
                 queries.filter(F.col(qid_col).isin(starved_ids)),
-                list(active.values()), C, k, cur, metric, qid_col, qvec_col,
+                QueryBatch(batch.qids[starved], batch.Q[starved]),
+                C, k, cur, metric, qid_col, qvec_col,
                 impl, rescore, where, as_of_gen,
             ).toPandas()
             out = pd_.concat(
@@ -1274,7 +1280,7 @@ class IVFStore:
         self,
         spark: SparkSession,
         queries: DataFrame,
-        qrows: list,
+        batch: QueryBatch,
         C: np.ndarray,
         k: int,
         n_probe: int,
@@ -1288,11 +1294,10 @@ class IVFStore:
     ) -> DataFrame:
         probe_pairs = []
         cand_map: dict[int, frozenset] = {}
-        for r in qrows:
-            qv = np.asarray(list(r[qvec_col]), dtype=np.float64)
+        for qid, qv in zip(*batch):
             order = np.argsort(((C - qv) ** 2).sum(axis=1))[:n_probe]
-            probe_pairs.extend((int(r[qid_col]), int(c)) for c in order)
-            cand_map[int(r[qid_col])] = frozenset(int(c) for c in order)
+            probe_pairs.extend((int(qid), int(c)) for c in order)
+            cand_map[int(qid)] = frozenset(int(c) for c in order)
         probed_cells = sorted({c for _, c in probe_pairs})
         k = max(int(k), 1)
 
@@ -1302,24 +1307,15 @@ class IVFStore:
         if where is not None:
             corpus = corpus.filter(where)
         if impl == "arrow":
-            if rescore == "auto":
-                from distributedvectordatabase_spark.operators.knn import (
-                    AUTO_JOINBACK_DIM,
-                )
-
-                dim = len(list(qrows[0][qvec_col])) if qrows else 0
-                rescore = "joinback" if dim >= AUTO_JOINBACK_DIM else "carry"
-            carry = rescore == "carry"
+            carry = _resolve_rescore(rescore, batch) == "carry"
             partial = _arrow_partial_topk(
-                corpus, queries, k, metric, self.id_col, self.vec_col,
-                qid_col, qvec_col, shard_col="cell_id", cand_map=cand_map,
-                qrows=qrows, carry_vectors=carry,
+                corpus, batch, k, metric, self.id_col, self.vec_col,
+                shard_col="cell_id", cand_map=cand_map, carry_vectors=carry,
             )
             return _rescored_topk(
-                partial, queries, k, metric, qid_col, qvec_col,
+                partial, batch, k, metric,
                 join_corpus=None if carry else corpus,
                 id_col=self.id_col, vec_col=self.vec_col,
-                qrows=qrows,
             )
 
         probe_df = spark.createDataFrame(probe_pairs, schema=f"{qid_col} long, cell_id int")

@@ -15,9 +15,14 @@ what a real deployment gets from a metastore/manifest catalog
 directory listing altogether; this is the poor man's manifest).
 
 Invalidation: the fingerprint folds every file's (name, mtime_ns,
-size) under the directory, so any append/delete/compact/overwrite —
-including the driver's in-place testdata regeneration and the stores'
-sidecar-committed mutations — produces a new key and a fresh read.
+size, inode, ctime_ns) under the directory, so any append/delete/
+compact/overwrite — including in-place regeneration of a
+dataset, a same-size rewrite within one mtime tick (a new inode
+or ctime), and the stores' sidecar-committed mutations — produces a
+new key and a fresh read. A file that disappears between the listing
+and its ``stat`` (a concurrent compaction or delete) is left out of
+the fingerprint instead of failing the request: the directory has
+changed, so the key differs from the pre-delete one either way.
 Stale entries are dropped eagerly (same path, different fingerprint)
 so a long session over a mutating store does not accumulate dead
 plans.
@@ -38,8 +43,13 @@ def _dir_fingerprint(path: str) -> tuple:
     for root, _dirs, files in os.walk(path):
         rel = os.path.relpath(root, path)
         for f in sorted(files):
-            st = os.stat(os.path.join(root, f))
-            out.append((rel, f, st.st_mtime_ns, st.st_size))
+            try:
+                st = os.stat(os.path.join(root, f))
+            except FileNotFoundError:
+                continue
+            out.append(
+                (rel, f, st.st_mtime_ns, st.st_size, st.st_ino, st.st_ctime_ns)
+            )
     return tuple(out)
 
 

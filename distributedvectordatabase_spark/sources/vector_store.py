@@ -910,7 +910,8 @@ class VectorStore:
             as_of_gen: int | None = None, **kw) -> DataFrame:
         """``as_of_gen`` searches the snapshot corpus at that pinned
         generation (read(as_of_gen=...) semantics) — shard layout and
-        LSH config are immutable across gens, so pruning stays exact."""
+        LSH config are immutable across gens, so pruning stays exact.
+        A query whose length is not ``lsh.dim`` raises ``ValueError``."""
         from distributedvectordatabase_spark.operators.knn import knn, knn_pruned
 
         corpus = self.read(spark, as_of_gen=as_of_gen)
@@ -920,7 +921,7 @@ class VectorStore:
                 metric=metric, id_col=self.id_col, vec_col=self.vec_col, **kw,
             )
         return knn(corpus, queries, k=k, metric=metric,
-                   id_col=self.id_col, vec_col=self.vec_col, **kw)
+                   id_col=self.id_col, vec_col=self.vec_col, dim=self.lsh.dim, **kw)
 
     # -- stats (reference get_stats / get_system_stats) ---------------------
 

@@ -396,52 +396,156 @@ def test_filtered_knn_string_constraint_values(spark):
 
 
 def test_local_query_relation_round_trips_exactly(spark):
-    """The VALUES LocalRelation the rescore builds from collected query
-    rows (r12) must reproduce every double bit-for-bit — repr literals
-    parse back correctly-rounded on the JVM side."""
+    """The Arrow-built LocalRelation the rescore uses as its q side must
+    reproduce every double bit-for-bit: the float64 matrix crosses to
+    the JVM as one Arrow buffer, with no decimal text in between."""
     import math
+    import struct
 
-    from distributedvectordatabase_spark.operators.knn import local_query_relation
+    import numpy as np
+
+    from distributedvectordatabase_spark.operators.knn import (
+        local_query_relation,
+        query_matrix,
+    )
+
+    def bits(xs):
+        return [struct.pack(">d", x) for x in xs]
 
     vals = [
         0.1, -0.1, 1e-308, 1.7976931348623157e308, 123456.789e-30,
         -0.0, 2.0 ** -1074, 1 / 3, math.pi, 6.02214076e23,
     ]
     rows = [{"qid": 7, "qvec": vals}]
-    out = local_query_relation(spark, rows, "qid", "qvec").collect()
+    out = local_query_relation(
+        spark, query_matrix(rows, "qid", "qvec"), "qid", "qvec"
+    ).collect()
     assert len(out) == 1 and out[0]["qid"] == 7
-    got = list(out[0]["qvec"])
-    import struct
+    assert bits(out[0]["qvec"]) == bits(vals)
 
-    assert [struct.pack(">d", x) for x in got] == [
-        struct.pack(">d", x) for x in vals
-    ]
+    # a full 32 x 512 batch: random magnitudes across the double range,
+    # salted with -0.0, subnormals and 1/3
+    rng = np.random.default_rng(2)
+    Q = rng.standard_normal((32, 512)) * 10.0 ** rng.integers(-300, 300, (32, 512))
+    Q[0, :4] = [-0.0, 2.0 ** -1074, 2.0 ** -1030, 1 / 3]
+    Q[31, -3:] = [1 / 3, -(2.0 ** -1060), -0.0]
+    rows = [{"qid": 100 + i, "qvec": Q[i].tolist()} for i in range(32)]
+    got = {
+        r["qid"]: r["qvec"]
+        for r in local_query_relation(
+            spark, query_matrix(rows, "qid", "qvec"), "qid", "qvec"
+        ).collect()
+    }
+    assert sorted(got) == [100 + i for i in range(32)]
+    for i in range(32):
+        assert bits(got[100 + i]) == bits(Q[i].tolist()), f"row {i}"
 
 
 def test_local_query_relation_empty(spark):
-    from distributedvectordatabase_spark.operators.knn import local_query_relation
+    from distributedvectordatabase_spark.operators.knn import (
+        local_query_relation,
+        query_matrix,
+    )
 
-    df = local_query_relation(spark, [], "qid", "qvec")
+    df = local_query_relation(spark, query_matrix([], "qid", "qvec"), "qid", "qvec")
     assert df.count() == 0
     assert [f.name for f in df.schema.fields] == ["qid", "qvec"]
 
 
-def test_knn_rescore_side_is_local_relation(spark):
+def test_empty_query_batch_returns_no_rows(spark):
+    corpus = load_table(spark, "embeddings", SF_DIR)
+    queries = spark.createDataFrame([], "qid long, qvec array<float>")
+    assert knn(corpus, queries, k=3).collect() == []
+
+
+@pytest.fixture(scope="module")
+def rescore_paths(spark, tmp_path_factory):
+    """Every Arrow search entry point over one 64-D corpus, as
+    ``name -> search(queries) -> DataFrame``."""
+    from distributedvectordatabase_spark.functions.lsh import SignLSH
+    from distributedvectordatabase_spark.operators.knn import filtered_knn, knn_pruned
+    from distributedvectordatabase_spark.sources.ivf_store import IVFStore
+    from distributedvectordatabase_spark.sources.vector_store import VectorStore
+    from tests.conftest import SF_SMALL
+
+    corpus = load_table(spark, "embeddings", SF_SMALL)
+    root = tmp_path_factory.mktemp("rescore_paths")
+    vs = VectorStore(str(root / "vs"), SignLSH(dim=64))
+    vs.write(corpus)
+    ivf = IVFStore(str(root / "ivf"), n_cells=8)
+    ivf.build(corpus)
+    lsh = SignLSH(dim=64)
+    return {
+        "knn": lambda q: knn(corpus, q, k=3, dim=64),
+        "knn_pruned": lambda q: knn_pruned(lsh.assign(corpus), q, lsh, k=3),
+        "filtered_knn": lambda q: filtered_knn(
+            corpus, q, k=3, filter_col="label", dim=64
+        ),
+        "vector_store_pruned": lambda q: vs.knn(spark, q, k=3, pruned=True),
+        "vector_store_exact": lambda q: vs.knn(spark, q, k=3, pruned=False),
+        "ivf_store": lambda q: ivf.knn(spark, q, k=3, n_probe=2),
+    }
+
+
+def test_knn_rescore_side_is_local_relation(spark, rescore_paths):
     """The deterministic rescore must NOT re-execute the query subplan
     as a broadcast-build job: the final plan carries exactly one scan
-    of the corpus source and a LocalTableScan for the q side (r12)."""
-    from distributedvectordatabase_spark.operators.knn import knn
-    from distributedvectordatabase_spark.sources.tables import (
-        load_table,
-        queries_fixture,
+    of the corpus source and a LocalTableScan for the q side — the
+    Arrow-built relation, never an RDD-backed one."""
+    from tests.conftest import SF_SMALL
+
+    queries = queries_fixture(spark, SF_SMALL, n=3)
+    for path in ("knn", "vector_store_pruned", "vector_store_exact", "ivf_store"):
+        plan = (
+            rescore_paths[path](queries)
+            ._jdf.queryExecution().executedPlan().toString()
+        )
+        assert "LocalTableScan" in plan, path
+        assert "LogicalRDD" not in plan and "Scan ExistingRDD" not in plan, path
+        assert plan.count("Scan parquet") == 1, path
+
+
+def _bad_queries(spark, case):
+    good = [0.5] * 64
+    if case == "nan":
+        vecs = [good, good[:10] + [float("nan")] + good[11:]]
+    elif case == "inf":
+        vecs = [good, good[:-1] + [float("inf")]]
+    elif case == "-inf":
+        vecs = [good, [float("-inf")] + good[1:]]
+    elif case == "ragged":
+        vecs = [good, good[:63]]
+    else:  # wrong dimension: a consistent batch of another width
+        vecs = [[0.5] * 32, [0.5] * 32]
+    return spark.createDataFrame(
+        [(40, vecs[0], 1), (41, vecs[1], 1)],
+        "qid long, qvec array<double>, label int",
     )
 
-    sf = "/root/testdata/sf0.001"
-    corpus = load_table(spark, "embeddings", sf)
-    queries = queries_fixture(spark, sf, n=3)
-    plan = (
-        knn(corpus, queries, k=3)
-        ._jdf.queryExecution().executedPlan().toString()
+
+@pytest.mark.parametrize("case,match", [
+    ("nan", "qid=41 has a non-finite"),
+    ("inf", "qid=41 has a non-finite"),
+    ("-inf", "qid=41 has a non-finite"),
+    ("ragged", "qid=41 has dimension 63"),
+    ("wrong_dim", "qid=40 has dimension 32"),
+])
+@pytest.mark.parametrize("path", [
+    "knn", "knn_pruned", "filtered_knn", "vector_store_exact", "ivf_store",
+])
+def test_bad_query_vectors_raise_value_error(spark, rescore_paths, path, case, match):
+    """Non-finite, ragged and wrong-dimension queries fail fast with a
+    typed error naming the first bad qid — before any corpus scan is
+    planned, not as a parse or executor failure."""
+    with pytest.raises(ValueError, match=match):
+        rescore_paths[path](_bad_queries(spark, case))
+
+
+def test_ragged_batch_without_dim_names_both_qids(spark):
+    corpus = load_table(spark, "embeddings", SF_DIR)
+    queries = spark.createDataFrame(
+        [(1, [0.0] * 64), (2, [0.0] * 64), (3, [0.0] * 8)],
+        "qid long, qvec array<float>",
     )
-    assert "LocalTableScan" in plan
-    assert plan.count("Scan parquet") == 1
+    with pytest.raises(ValueError, match="qid=3 has dimension 8, but qid=1 has 64"):
+        knn(corpus, queries, k=3)

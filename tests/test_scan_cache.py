@@ -54,3 +54,48 @@ def test_touch_only_invalidates(spark, tmp_path):
     st = os.stat(f)
     os.utime(f, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000))
     assert cached_parquet(spark, p) is not a
+
+
+def test_same_size_rewrite_with_restored_mtime_invalidates(spark, tmp_path):
+    # a rewrite that keeps name, size and mtime still gets a new inode
+    # and ctime, so it must not hit the stale plan
+    import shutil
+
+    p = str(tmp_path / "t")
+    spark.range(10).write.parquet(p)
+    a = cached_parquet(spark, p)
+    f = next(
+        os.path.join(p, x) for x in os.listdir(p) if x.endswith(".parquet")
+    )
+    st = os.stat(f)
+    tmp = str(tmp_path / "copy")
+    shutil.copyfile(f, tmp)
+    os.replace(tmp, f)
+    os.utime(f, ns=(st.st_atime_ns, st.st_mtime_ns))
+    assert os.stat(f).st_size == st.st_size
+    assert os.stat(f).st_mtime_ns == st.st_mtime_ns
+    assert cached_parquet(spark, p) is not a
+
+
+def test_file_vanishing_mid_walk_is_skipped(spark, tmp_path, monkeypatch):
+    # a concurrent compaction can delete a file after os.walk listed it
+    # and before it is stat'ed: the fingerprint skips it, no
+    # FileNotFoundError reaches the search request
+    from distributedvectordatabase_spark.sources.scan_cache import _dir_fingerprint
+
+    p = str(tmp_path / "t")
+    spark.range(10).write.parquet(p)
+    before = _dir_fingerprint(p)
+    gone = next(x for x in sorted(os.listdir(p)) if x.endswith(".parquet"))
+    real_stat = os.stat
+
+    def stat(path, *args, **kwargs):
+        if os.path.basename(path) == gone:
+            raise FileNotFoundError(path)
+        return real_stat(path, *args, **kwargs)
+
+    monkeypatch.setattr(os, "stat", stat)
+    after = _dir_fingerprint(p)
+    assert after != before
+    assert [e[1] for e in after] == [e[1] for e in before if e[1] != gone]
+    cached_parquet(spark, p)  # must not raise

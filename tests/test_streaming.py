@@ -232,14 +232,19 @@ def closed_sessions(spark, tmp_path_factory):
     # state" trigger, so a bare awaitTermination(180) burned the full
     # 180 s AND leaked the still-active query into the rest of the
     # suite (r12). Wait for the sink to have received everything —
-    # no data available and the no-new-data trigger reached — then
-    # stop it explicitly.
+    # a batch has completed, no data is available and no trigger is
+    # running (the structured status fields), or the no-new-data
+    # cleanup trigger was reached (the message text, whose wording can
+    # change between Spark versions) — then stop it explicitly.
     import time as _time
 
     deadline = _time.time() + 180
     while _time.time() < deadline and q.isActive:
         st = q.status
-        if not st["isDataAvailable"] and st["message"].startswith("No new data"):
+        idle = not st["isTriggerActive"] and q.lastProgress is not None
+        if not st["isDataAvailable"] and (
+            idle or st["message"].startswith("No new data")
+        ):
             break
         _time.sleep(0.5)
     assert q.exception() is None
