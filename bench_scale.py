@@ -185,9 +185,6 @@ def main() -> None:
     approx = store.knn(spark, queries, k=10, pruned=True, num_candidates=2)
     timings["knn_pruned_2of3_20q"] = timed_min(lambda: approx.count())
 
-    approx_expr = store.knn(spark, queries, k=10, pruned=True, num_candidates=2, impl="expr")
-    timings["knn_pruned_expr_20q"] = timed_min(lambda: approx_expr.count())
-
     recall = round(recall_at_k(exact, approx, 10), 4)
 
     # IVFPQ: cell-partitioned compressed index — the path whose scan

@@ -32,8 +32,9 @@ the hot path, no join node in the scoring stage:
   (query, partition), so the merge exchange carries
   O(queries · k · partitions) rows — never the corpus.
 - **rerank** — the R·k Hamming shortlist (tiny by construction) is
-  broadcast back onto the corpus by id for exact squared-L2 rescoring;
-  the shortlist scan itself reads only packed codes.
+  broadcast back onto the corpus by id and rescored by the shared
+  ``knn.exact_rerank``; the shortlist scan itself reads only packed
+  codes.
 
 Hamming distances are INTEGERS, so unlike every float-distance gate
 there is no quantization step and no cross-engine ulp risk: the
@@ -50,7 +51,13 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from distributedvectordatabase_spark.operators.knn import _dist_expr, collect_query_batch
+from distributedvectordatabase_spark.operators.knn import (
+    QueryBatch,
+    collect_query_batch,
+    exact_rerank,
+    local_query_relation,
+    query_batch,
+)
 
 BITS_PER_WORD = 32
 
@@ -213,6 +220,48 @@ def bq_topk(
     )
 
 
+def bq_search(
+    codes: DataFrame,
+    queries: DataFrame | QueryBatch,
+    corpus: DataFrame,
+    dim: int,
+    k: int = 10,
+    rerank: int = 4,
+    metric: str = "l2sq",
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    qid_col: str = "qid",
+    qvec_col: str = "qvec",
+    n_bits: int | None = None,
+    seed: int = 42,
+    shard_map: dict | None = None,
+    shard_col: str = "shard_id",
+) -> DataFrame:
+    """Top-k over a 1-bit codes table (id, ``bq_code``): Hamming
+    shortlist of ``rerank·k`` candidates (:func:`bq_topk`), then
+    ``knn.exact_rerank`` against the raw ``corpus``. Returns
+    (qid, neighbor_id, dist, rnk) like knn().
+
+    ``queries`` is collected once and validated against ``dim``
+    (``knn.query_batch``; a store that already collected the batch
+    passes the ``QueryBatch``). The query codes are encoded with the
+    codes' own ``n_bits``/``seed`` from that batch as a LocalRelation,
+    so the ``queries`` subplan is never re-run. ``shard_map`` is
+    :func:`bq_topk`'s per-query shard (or cell) mask."""
+    k = max(int(k), 1)
+    batch = query_batch(queries, qid_col, qvec_col, dim)
+    q = local_query_relation(codes.sparkSession, batch, "qid", "qvec")
+    qcodes = bq_encode(q, dim, "qvec", out_col="qcode", n_bits=n_bits, seed=seed)
+    shortlist = bq_topk(
+        codes, qcodes.select("qid", "qcode"), k=max(int(rerank), 1) * k,
+        id_col=id_col, shard_map=shard_map, shard_col=shard_col,
+    )
+    return exact_rerank(
+        F.broadcast(shortlist.select("qid", "neighbor_id")), batch, k, metric,
+        corpus=corpus, id_col=id_col, vec_col=vec_col,
+    )
+
+
 def bq_knn(
     corpus: DataFrame,
     queries: DataFrame,
@@ -235,7 +284,7 @@ def bq_knn(
     — the final top-k is by exact float distance, so at full rerank
     budget (rerank·k ≥ corpus) it EQUALS exact kNN in the same metric.
     The shortlist scan reads only the packed codes; raw vectors are
-    touched only for the broadcast R·k joinback.
+    touched only for the broadcast R·k joinback (:func:`bq_search`).
 
     ``metric`` picks the rerank distance (``"l2sq"`` | ``"cosine"``,
     the knn() metrics). Sign codes are SCALE-INVARIANT — ``sign(x@R)
@@ -248,40 +297,11 @@ def bq_knn(
     non-normalized data keeps working but pays the known recall floor
     — norms dominate L2 yet are invisible to signs (BASELINE.md
     records the measured decomposition)."""
-    k = max(int(k), 1)
-    fetch = max(int(rerank), 1) * k
     ccodes = bq_encode(
         corpus.select(id_col, vec_col), dim, vec_col, n_bits=n_bits, seed=seed
     )
-    qcodes = bq_encode(
-        queries.select(qid_col, qvec_col), dim, qvec_col, out_col="qcode",
-        n_bits=n_bits, seed=seed,
-    )
-    shortlist = bq_topk(
-        ccodes.select(id_col, "bq_code"),
-        qcodes.select(qid_col, "qcode"),
-        k=fetch,
-        id_col=id_col,
-        qid_col=qid_col,
-    )
-    rescored = (
-        corpus.select(F.col(id_col).alias("neighbor_id"), vec_col)
-        .join(F.broadcast(shortlist.select("qid", "neighbor_id")), "neighbor_id")
-        .join(
-            F.broadcast(
-                queries.select(
-                    F.col(qid_col).alias("qid"), F.col(qvec_col).alias("_qvec")
-                )
-            ),
-            "qid",
-        )
-        .select(
-            "qid", "neighbor_id", _dist_expr(metric, "_qvec", vec_col).alias("dist")
-        )
-    )
-    w = Window.partitionBy("qid").orderBy("dist", "neighbor_id")
-    return (
-        rescored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("qid", "neighbor_id", "dist", "rnk")
+    return bq_search(
+        ccodes.select(id_col, "bq_code"), queries, corpus, dim, k=k, rerank=rerank,
+        metric=metric, id_col=id_col, vec_col=vec_col, qid_col=qid_col,
+        qvec_col=qvec_col, n_bits=n_bits, seed=seed,
     )

@@ -1,35 +1,42 @@
-"""Exact and pruned k-nearest-neighbor search, Spark-first.
+"""Exact and pruned k-nearest-neighbor search, Spark-first — and the one
+search core that every index in the engine plugs into.
 
 Re-expresses the reference's entire search path — coordinator fan-out,
 per-shard FAISS top-k, global merge (reference
 coordinator/coordinator.py:132-254 + shard/shard_node.py:101-133) — as
-a declarative plan:
+a declarative plan. Every search (exact, LSH-pruned, filtered, IVF and
+the SQ8/PQ/BQ compressed legs) runs the same three steps, written once
+here; an index only supplies the parts that differ:
 
-    broadcast(queries) ⨯ corpus  →  distance  →  per-query top-k
+1. **collect** — :func:`query_batch` collects the bounded query batch
+   once per call (:func:`collect_query_batch`, capped at
+   ``MAX_QUERY_BATCH``) and validates it into one float64 matrix
+   (:func:`query_matrix`): null, ragged, wrong-dimension and non-finite
+   queries raise ``ValueError`` before any corpus scan is planned.
+2. **scan** — :func:`scan_topk`, one ``mapInPandas`` partial top-k. The
+   index is a *candidate source*: a per-query candidate set
+   (``cand_map`` — LSH shards, IVF cells, dictionary-encoded filter
+   values, or none for a flat scan) that masks each Arrow batch through
+   a dense lookup table, plus a per-batch *distance kernel* (exact BLAS
+   here, SQ8 decode in sq.py, PQ ADC lookup in pq.py). Each batch keeps
+   its per-query top-k **before** any exchange, so the merge shuffles
+   only O(n_queries · k · n_partitions) rows — the reference's
+   per-shard top-k + coordinator argsort merge (shard/shard_node.py:127,
+   coordinator/coordinator.py:211-249), vectorized and spill-safe. The
+   corpus is scanned once, never shuffled.
+3. **rerank** — :func:`exact_rerank` re-scores a candidate slate with
+   the sequential ``aggregate(zip_with(...))`` expression the SQL
+   oracle uses, against the same validated matrix handed to the JVM as
+   an Arrow-built LocalRelation (:func:`local_query_relation`: a
+   LocalTableScan, no Spark job, no SQL text), joining the slate back
+   to the raw vectors by id when the scan did not carry them. The
+   float-distance paths rerank a 2k slate (:func:`_rescored_topk`);
+   the compressed legs rerank their R·k shortlist.
 
-Two implementations, same semantics:
-
-- ``impl="expr"`` — pure Catalyst: higher-order-function distance
-  expression + window top-k. Whole-stage-codegen'd, zero Python. The
-  shuffle moves the scored (qid, id, dist) triples — fine for modest
-  query batches, and it is the form the DuckDB oracle mirrors 1:1.
-- ``impl="arrow"`` — the scale path: queries are broadcast as a numpy
-  matrix, ``mapInPandas`` computes a BLAS distance-matrix per Arrow
-  batch of the corpus and keeps only the per-(query, partition) top-k
-  **before** any exchange. The follow-up merge window then shuffles
-  only O(n_queries · k · n_partitions) rows — this is exactly the
-  reference's per-shard-FAISS-topk + coordinator argsort merge
-  (shard/shard_node.py:127, coordinator/coordinator.py:211-249), but
-  vectorized and spill-safe. At 100 TB this is the only viable shape:
-  the corpus is scanned once, never shuffled.
-
-Every arrow search path collects the (bounded) query batch once and
-stacks it into one validated float64 matrix (:func:`query_matrix`:
-ragged, wrong-dimension and non-finite queries raise ``ValueError``
-before the scan is planned). That matrix is the partial top-k's
-broadcast payload, and the same matrix becomes the rescore's q side as
-an Arrow-built LocalRelation (:func:`local_query_relation`) — a
-LocalTableScan that broadcasts without a Spark job or any SQL text.
+``knn(impl="expr")`` and ``filtered_knn(impl="expr")`` keep a pure
+Catalyst form — broadcast join, higher-order-function distance, window
+top-k — that collects nothing: it is the form the DuckDB oracle mirrors
+1:1 and the reference the tests hold the core to.
 
 Semantics pinned for reproducibility / oracle checks:
 - ties broken by (dist, neighbor_id) ascending — the reference's
@@ -59,7 +66,7 @@ _METRICS = {"l2sq", "cosine"}
 # does the same with its request batch, coordinator/coordinator.py:132),
 # which is only sane for bounded batches — a 10M-row "query set" is a
 # similarity JOIN, not a search, and must go through the join-based
-# impl="expr" path (or setsim/near-dup operators) instead.
+# knn(impl="expr") path (or setsim/near-dup operators) instead.
 MAX_QUERY_BATCH = 100_000
 
 # rescore="auto" switches carry -> joinback at this query dimension:
@@ -84,7 +91,7 @@ def collect_query_batch(
     if len(rows) > MAX_QUERY_BATCH:
         raise ValueError(
             f"query batch exceeds MAX_QUERY_BATCH={MAX_QUERY_BATCH}; "
-            "for corpus-scale query sets use the join-based impl='expr' "
+            "for corpus-scale query sets use the join-based knn(impl='expr') "
             "path or the near-dup/setsim operators instead of broadcast kNN"
         )
     return rows
@@ -145,14 +152,29 @@ def query_matrix(
     return QueryBatch(qids, Q)
 
 
+def query_batch(
+    queries, qid_col: str = "qid", qvec_col: str = "qvec", dim: int | None = None
+) -> QueryBatch:
+    """Step 1 of every search: collect the query side once
+    (:func:`collect_query_batch`) and validate it (:func:`query_matrix`).
+    An already-collected :class:`QueryBatch` passes through unchanged,
+    so a store that collected the batch to route it (LSH shards, IVF
+    cells) hands the same matrix to the scan and the rerank."""
+    if isinstance(queries, QueryBatch):
+        return queries
+    return query_matrix(
+        collect_query_batch(queries, qid_col, qvec_col), qid_col, qvec_col, dim
+    )
+
+
 def local_query_relation(
     spark, batch: QueryBatch, qid_col: str, qvec_col: str
 ) -> DataFrame:
     """The query batch as an Arrow-built LocalRelation
     ``(qid_col bigint, qvec_col array<double>)``.
 
-    The deterministic re-score (``_rescored_topk``) broadcast-joins the
-    query vectors back to the candidate slate. Referencing the original
+    The exact rerank (:func:`exact_rerank`) broadcast-joins the query
+    vectors back to the candidate slate. Referencing the original
     ``queries`` plan there makes the broadcast build re-run the whole
     query-side subplan (e.g. a TakeOrdered scan of the corpus) as its
     own Spark job — once per search call — even though the exact same
@@ -235,6 +257,162 @@ def _final_topk(scored: DataFrame, k: int) -> DataFrame:
     )
 
 
+def _candidate_lut(qids: np.ndarray, cand_map: dict | None) -> np.ndarray | None:
+    """Per-query candidate sets as a dense (nq × n_candidates) boolean
+    lookup table, so each batch's mask is one fancy-index, not an
+    np.isin per query row. A qid absent from ``cand_map`` has no
+    candidates (its row stays all-False)."""
+    if cand_map is None:
+        return None
+    n = max((s for ss in cand_map.values() for s in ss), default=-1) + 1
+    lut = np.zeros((len(qids), max(n, 1)), dtype=bool)
+    for i, qid in enumerate(qids):
+        for s in cand_map.get(int(qid), ()):
+            lut[i, s] = True
+    return lut
+
+
+def scan_topk(
+    df: DataFrame,
+    batch: QueryBatch,
+    k: int,
+    kernel,
+    payload,
+    cols: list,
+    id_col: str,
+    shard_col: str | None = None,
+    cand_map: dict[int, frozenset] | None = None,
+    carry_vectors: bool = False,
+) -> DataFrame:
+    """Step 2 of every search: the ``mapInPandas`` partial top-k.
+
+    Per Arrow batch of ``df.select(id_col, *cols[, shard_col])``, the
+    index's distance ``kernel`` gives an (nq × batch) float64 distance
+    matrix; rows outside a query's candidate set (``cand_map``: qid →
+    the ``shard_col`` values it may match) are masked to +inf; and the
+    k best per query (with 2k tie slack in :func:`batch_topk`) are
+    emitted as (qid, neighbor_id, dist[, nvec]).
+
+    ``kernel(payload)`` runs once per task on the broadcast ``payload``
+    and returns ``dist(pdf) -> (D, X)``; ``X`` is the batch's float64
+    vectors, which ``carry_vectors`` ships as ``nvec`` so the rerank
+    needs no second scan (``None`` from the compressed kernels, which
+    never carry)."""
+    qids = batch.qids
+    bc = df.sparkSession.sparkContext.broadcast(
+        (qids, payload, _candidate_lut(qids, cand_map))
+    )
+    take = 2 * k  # slack so dist-ties at the k boundary survive to the merge
+
+    def scan(batches):
+        qids, payload, lut = bc.value
+        dist = kernel(payload)
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            ids = pdf[id_col].values.astype(np.int64)
+            D, X = dist(pdf)
+            if lut is not None:
+                shards = pdf[shard_col].values.astype(np.int64)
+                in_range = (shards >= 0) & (shards < lut.shape[1])
+                ok = np.zeros((len(qids), len(shards)), dtype=bool)
+                ok[:, in_range] = lut[:, shards[in_range]]
+                D[~ok] = np.inf
+            sel_id, sel_d = batch_topk(D, ids, k, take)
+            keep = np.isfinite(sel_d).ravel()  # drop masked rows
+            if not keep.any():
+                # fully-masked batch: yielding an all-empty frame with an
+                # object nvec column trips Arrow's type inference
+                continue
+            out = {
+                "qid": np.repeat(qids, sel_d.shape[1])[keep],
+                "neighbor_id": sel_id.ravel()[keep],
+                "dist": sel_d.ravel()[keep],
+            }
+            if carry_vectors:
+                # carry the winners' vectors so the merge can re-score
+                # with the deterministic sequential expression (no second
+                # scan): map selected ids back to batch row positions
+                sorter = np.argsort(ids, kind="stable")
+                pos = sorter[np.searchsorted(ids, sel_id.ravel()[keep], sorter=sorter)]
+                out["nvec"] = list(X[pos])
+            yield pd.DataFrame(out)
+
+    masked = [shard_col] if cand_map is not None else []
+    schema = "qid long, neighbor_id long, dist double"
+    if carry_vectors:
+        schema += ", nvec array<double>"
+    return df.select(*dict.fromkeys([id_col, *cols, *masked])).mapInPandas(
+        scan, schema=schema
+    )
+
+
+def _exact_kernel(metric: str, vec_col: str):
+    """The raw-vector distance kernel for :func:`scan_topk` (payload: the
+    query matrix): one BLAS product per batch — squared L2 through the
+    norm identity, clamped at 0, or cosine distance with a zero-norm
+    guard. It runs the pruned search on the same BLAS path as the exact
+    one instead of interpreted per-pair expressions (10× at 500k rows;
+    see bench_scale.py)."""
+
+    def bind(Q):
+        qn = np.einsum("ij,ij->i", Q, Q)
+        qnorm = np.sqrt(qn)
+
+        def dist(pdf):
+            X = np.array(list(pdf[vec_col].values), dtype=np.float64)
+            if metric == "l2sq":
+                D = qn[:, None] + np.einsum("ij,ij->i", X, X)[None, :] - 2.0 * (Q @ X.T)
+                np.maximum(D, 0.0, out=D)
+            else:  # cosine distance with zero-norm guard
+                xnorm = np.sqrt(np.einsum("ij,ij->i", X, X))
+                denom = qnorm[:, None] * xnorm[None, :]
+                sim = np.divide(Q @ X.T, denom, out=np.zeros((len(Q), len(X))), where=denom != 0)
+                D = 1.0 - sim
+            return D, X
+
+        return dist
+
+    return bind
+
+
+def exact_rerank(
+    slate: DataFrame,
+    batch: QueryBatch,
+    k: int,
+    metric: str,
+    corpus: DataFrame | None = None,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Step 3 of every search: the final top-k of a candidate ``slate``
+    by exact distance, returned as (qid, neighbor_id, dist, rnk).
+
+    The slate is (qid, neighbor_id, nvec) when the scan carried the
+    vectors, or (qid, neighbor_id) with ``corpus`` given: its ≤ nq·slate
+    ids then join back to the raw vectors by id (a hash probe,
+    partition-prunable on a bucketed or cell-partitioned corpus). The q
+    side is the already-collected ``batch`` as an Arrow-built
+    LocalRelation (:func:`local_query_relation`) — the validated
+    matrix the scan was built from, handed to the JVM as one Arrow
+    buffer — so the rerank neither re-executes the ``queries`` subplan
+    as a broadcast-build job nor parses SQL text. ``dist`` is the sequential
+    ``aggregate(zip_with(...))`` expression the SQL oracle uses, so the
+    output does not depend on partition count or batch split."""
+    if corpus is not None:
+        slate = slate.join(
+            corpus.select(
+                F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("nvec")
+            ),
+            "neighbor_id",
+        )
+    q = F.broadcast(local_query_relation(slate.sparkSession, batch, "qid", "_qvec"))
+    rescored = slate.join(q, "qid").select(
+        "qid", "neighbor_id", _dist_expr(metric, "_qvec", "nvec").alias("dist")
+    )
+    return _final_topk(rescored, k)
+
+
 def _rescored_topk(
     partial: DataFrame,
     batch: QueryBatch,
@@ -244,23 +422,15 @@ def _rescored_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Deterministic final top-k over an Arrow partial that carries the
-    neighbor vectors (``nvec``).
-
-    The broadcast q side is the already-collected query ``batch`` as an
-    Arrow-built LocalRelation (:func:`local_query_relation`): the same
-    float64 matrix the partial's broadcast payload carries, handed to
-    the JVM as one Arrow buffer, so the rescore neither re-executes the
-    ``queries`` subplan as a broadcast-build job nor parses SQL text.
+    """Deterministic final top-k over a raw-vector partial: cut a 2k
+    slate per query, then :func:`exact_rerank` it.
 
     The BLAS distance matrix sums in batch order, so its float64 values
     can land on either side of a rounding boundary depending on
     parallelism — the oracle's sequential sum is one fixed order. BLAS
     distances are therefore used only to *select* a 2k candidate slate
     per query; the reported ``dist`` (and the final (dist, id) ordering)
-    is recomputed with the same sequential ``aggregate(zip_with(...))``
-    expression the SQL oracle uses, making the output independent of
-    partition count and batch split.
+    is recomputed by the rerank.
 
     Slate sufficiency: this assumes the true sequential-sum top-k lies
     inside the BLAS-selected slate, which holds while BLAS-vs-sequential
@@ -270,14 +440,12 @@ def _rescored_topk(
     candidate within ``eps`` of the 2k-th distance (mirroring the
     boundary-tie guard in batch_topk).
 
-    Scale note: the default slate carries each candidate's full vector
-    (``nvec``) through the merge shuffle — free at 64-D, ~4 KB/row at
-    512-D. When ``join_corpus`` is given (knn(..., rescore="joinback")),
-    the partial omits ``nvec`` and the ≤ nq·(2k+ties) winner ids join
-    back to the corpus by id before re-scoring — the merge shuffle then
-    moves only (qid, id, dist) triples, the right trade at high
-    dimension (the join is a hash probe on the id, partition-prunable
-    on a bucketed/sorted corpus)."""
+    Scale note: by default the partial carries each candidate's full
+    vector (``nvec``) through the merge shuffle — free at 64-D, ~4 KB/row
+    at 512-D. With ``join_corpus`` (knn(..., rescore="joinback")), the
+    partial omits ``nvec`` and the ≤ nq·(2k+ties) winner ids join back
+    to the corpus instead — the merge shuffle then moves only
+    (qid, id, dist) triples, the right trade at high dimension."""
     # Relative epsilon: BLAS-vs-sequential float64 divergence scales
     # with the distance magnitude (~1e-16 relative), so an absolute
     # guard under-widens for large-magnitude l2sq (unnormalized
@@ -304,18 +472,63 @@ def _rescored_topk(
         )
         .select(*slate_cols)
     )
-    if join_corpus is not None:
-        slate = slate.join(
-            join_corpus.select(
-                F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("nvec")
-            ),
-            "neighbor_id",
-        )
-    q = F.broadcast(local_query_relation(partial.sparkSession, batch, "qid", "_qvec"))
-    rescored = slate.join(q, "qid").select(
-        "qid", "neighbor_id", _dist_expr(metric, "_qvec", "nvec").alias("dist")
+    return exact_rerank(
+        slate, batch, k, metric, corpus=join_corpus, id_col=id_col, vec_col=vec_col
     )
-    return _final_topk(rescored, k)
+
+
+def _resolve_rescore(rescore: str, batch: QueryBatch) -> str:
+    """``rescore="auto"`` → joinback at query dim >= AUTO_JOINBACK_DIM."""
+    if rescore != "auto":
+        return rescore
+    return "joinback" if batch.Q.shape[1] >= AUTO_JOINBACK_DIM else "carry"
+
+
+def _exact_topk(
+    corpus: DataFrame,
+    batch: QueryBatch,
+    k: int,
+    metric: str,
+    id_col: str,
+    vec_col: str,
+    rescore: str,
+    shard_col: str | None = None,
+    cand_map: dict[int, frozenset] | None = None,
+    join_corpus: DataFrame | None = None,
+) -> DataFrame:
+    """Scan + rerank over raw vectors — the exact, LSH-pruned, filtered
+    and IVF searches. ``rescore`` resolves to carry (vectors ride the
+    partial) or joinback (the slate joins ``join_corpus``, by default
+    the scanned ``corpus``, by id)."""
+    carry = _resolve_rescore(rescore, batch) == "carry"
+    partial = scan_topk(
+        corpus, batch, k, _exact_kernel(metric, vec_col), batch.Q, [vec_col], id_col,
+        shard_col=shard_col, cand_map=cand_map, carry_vectors=carry,
+    )
+    if carry:
+        join_corpus = None
+    elif join_corpus is None:
+        join_corpus = corpus
+    return _rescored_topk(
+        partial, batch, k, metric, join_corpus=join_corpus, id_col=id_col, vec_col=vec_col,
+    )
+
+
+def lsh_candidates(
+    lsh, batch: QueryBatch, num_candidates: int
+) -> tuple[dict[int, frozenset], list]:
+    """The LSH candidate source: each query's multi-probe candidate
+    shards (``SignLSH.candidate_shards``, computed driver-side — the
+    queries are the small user-supplied side, as in the reference's
+    coordinator), as ``(cand_map, shards)``: qid → its shard set, and
+    the sorted union for the partition-pruning IN-list."""
+    sets: dict[int, set] = {}
+    for qid, qv in zip(*batch):
+        sets.setdefault(int(qid), set()).update(
+            int(s) for s in lsh.candidate_shards(qv, num_candidates=num_candidates)
+        )
+    cand_map = {q: frozenset(s) for q, s in sets.items()}
+    return cand_map, sorted(set().union(*cand_map.values()))
 
 
 def knn(
@@ -335,6 +548,11 @@ def knn(
 
     Returns (qid, neighbor_id, dist, rnk), rnk in 1..k ordered by
     (dist, neighbor_id) ascending.
+
+    ``impl="arrow"`` (default) is the search core over a flat scan (no
+    candidate source); ``impl="expr"`` is the pure-Catalyst reference
+    form: broadcast join + sequential distance expression + window
+    top-k, whole-stage-codegen'd with zero Python and no driver collect.
 
     ``rescore`` (arrow impl only) picks how the deterministic re-score
     gets the candidate vectors: ``"carry"`` ships them inside the
@@ -367,17 +585,8 @@ def knn(
             "so there is nothing to re-score; drop rescore or use impl='arrow'"
         )
     if impl == "arrow":
-        batch = query_matrix(
-            collect_query_batch(queries, qid_col, qvec_col), qid_col, qvec_col, dim
-        )
-        carry = _resolve_rescore(rescore, batch) == "carry"
-        partial = _arrow_partial_topk(
-            corpus, batch, k, metric, id_col, vec_col, carry_vectors=carry,
-        )
-        return _rescored_topk(
-            partial, batch, k, metric,
-            join_corpus=None if carry else corpus, id_col=id_col, vec_col=vec_col,
-        )
+        batch = query_batch(queries, qid_col, qvec_col, dim)
+        return _exact_topk(corpus, batch, k, metric, id_col, vec_col, rescore)
     if impl == "expr":
         pairs = corpus.join(F.broadcast(queries.select(qid_col, qvec_col)))
         scored = pairs.select(
@@ -387,99 +596,6 @@ def knn(
         )
         return _final_topk(scored, k)
     raise ValueError(f"unknown impl {impl!r}; use 'arrow' or 'expr'")
-
-
-def _resolve_rescore(rescore: str, batch: QueryBatch) -> str:
-    """``rescore="auto"`` → joinback at query dim >= AUTO_JOINBACK_DIM."""
-    if rescore != "auto":
-        return rescore
-    return "joinback" if batch.Q.shape[1] >= AUTO_JOINBACK_DIM else "carry"
-
-
-def _arrow_partial_topk(
-    corpus: DataFrame,
-    batch: QueryBatch,
-    k: int,
-    metric: str,
-    id_col: str,
-    vec_col: str,
-    shard_col: str | None = None,
-    cand_map: dict[int, frozenset] | None = None,
-    carry_vectors: bool = True,
-) -> DataFrame:
-    """mapInPandas partial top-k: per Arrow batch, a (nq × batch) BLAS
-    distance matrix; emit the k best (with 2k tie slack) per query.
-
-    With ``shard_col``/``cand_map``, rows outside a query's candidate
-    shards are masked to +inf before the top-k — the pruned search then
-    runs on the same BLAS path as the exact one instead of interpreted
-    per-pair expressions (10× at 500k rows; see bench_scale.py)."""
-    qids, Q = batch
-    spark = corpus.sparkSession
-    take = 2 * k  # slack so dist-ties at the k boundary survive to the merge
-
-    # Candidate shards as a dense (nq × n_shards) boolean lookup so the
-    # per-batch mask is one fancy-index, not an np.isin per query row.
-    if cand_map is not None:
-        n_shards = max((s for ss in cand_map.values() for s in ss), default=-1) + 1
-        allowed_lut = np.zeros((len(qids), max(n_shards, 1)), dtype=bool)
-        for i, qid in enumerate(qids):
-            for s in cand_map.get(int(qid), ()):
-                allowed_lut[i, s] = True
-        bc_payload = (qids, Q, allowed_lut)
-    else:
-        bc_payload = (qids, Q, None)
-    bc = spark.sparkContext.broadcast(bc_payload)
-
-    def scan(batches):
-        qids, Q, allowed_lut = bc.value
-        nq = len(Q)
-        qn = np.einsum("ij,ij->i", Q, Q)
-        qnorm = np.sqrt(qn)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.array(list(pdf[vec_col].values), dtype=np.float64)
-            ids = pdf[id_col].values.astype(np.int64)
-            if metric == "l2sq":
-                D = qn[:, None] + np.einsum("ij,ij->i", X, X)[None, :] - 2.0 * (Q @ X.T)
-                np.maximum(D, 0.0, out=D)
-            else:  # cosine distance with zero-norm guard
-                xnorm = np.sqrt(np.einsum("ij,ij->i", X, X))
-                denom = qnorm[:, None] * xnorm[None, :]
-                sim = np.divide(Q @ X.T, denom, out=np.zeros((len(Q), len(X))), where=denom != 0)
-                D = 1.0 - sim
-            if allowed_lut is not None:
-                shards = pdf[shard_col].values.astype(np.int64)
-                in_range = (shards >= 0) & (shards < allowed_lut.shape[1])
-                ok = np.zeros((nq, len(shards)), dtype=bool)
-                ok[:, in_range] = allowed_lut[:, shards[in_range]]
-                D[~ok] = np.inf
-            sel_id, sel_d = batch_topk(D, ids, k, take)
-            keep = np.isfinite(sel_d).ravel()  # drop shard-masked rows
-            if not keep.any():
-                # fully-masked batch: yielding an all-empty frame with an
-                # object nvec column trips Arrow's type inference
-                continue
-            out = {
-                "qid": np.repeat(qids, sel_d.shape[1])[keep],
-                "neighbor_id": sel_id.ravel()[keep],
-                "dist": sel_d.ravel()[keep],
-            }
-            if carry_vectors:
-                # carry the winners' vectors so the merge can re-score
-                # with the deterministic sequential expression (no second
-                # scan): map selected ids back to batch row positions
-                sorter = np.argsort(ids, kind="stable")
-                pos = sorter[np.searchsorted(ids, sel_id.ravel()[keep], sorter=sorter)]
-                out["nvec"] = list(X[pos])
-            yield pd.DataFrame(out)
-
-    cols = [id_col, vec_col] + ([shard_col] if cand_map is not None else [])
-    schema = "qid long, neighbor_id long, dist double"
-    if carry_vectors:
-        schema += ", nvec array<double>"
-    return corpus.select(*cols).mapInPandas(scan, schema=schema)
 
 
 def knn_single(
@@ -516,7 +632,6 @@ def knn_pruned(
     qid_col: str = "qid",
     qvec_col: str = "qvec",
     shard_col: str = "shard_id",
-    impl: str = "arrow",
     rescore: str = "auto",
 ) -> DataFrame:
     """LSH-pruned approximate kNN (the reference's 2-of-3 shard probe:
@@ -524,64 +639,26 @@ def knn_pruned(
     multi-probe bit-flip policy corrected per SURVEY §4).
 
     ``corpus_bucketed`` must carry ``shard_col`` (SignLSH.assign /
-    VectorStore.read). Candidate shards are computed driver-side from
-    the seeded LSH — the queries are the small user-supplied side, as
-    in the reference's coordinator — then applied as:
+    VectorStore.read). The LSH is the candidate source
+    (:func:`lsh_candidates`), applied twice:
 
     1. ``shard_id IN (union of candidates)``: a literal predicate
        Catalyst turns into Parquet **partition pruning** — pruned
        shards are never read from disk;
-    2. an equi-join on (qid ↔ candidate shard) so each query pairs
-       only with rows of its own candidate shards — or, with
-       ``impl="arrow"`` (default), per-batch shard masking inside the
-       same Arrow/BLAS partial top-k scan the exact path uses; the
-       expression-join form (``impl="expr"``) scores pairs with
-       interpreted lambdas and is ~10× slower at 500k rows.
+    2. per-batch shard masking inside the same Arrow/BLAS partial top-k
+       scan the exact path uses, so each query only ranks rows of its
+       own candidate shards.
+
+    ``rescore`` is :func:`knn`'s.
     """
     k = max(int(k), 1)
-    if impl == "expr" and rescore not in ("auto", "carry"):
-        raise ValueError(
-            "rescore applies to impl='arrow' only: the expr impl already "
-            "scores with the sequential aggregate(zip_with(...)) expression"
-        )
-    batch = query_matrix(
-        collect_query_batch(queries, qid_col, qvec_col), qid_col, qvec_col, lsh.dim
+    batch = query_batch(queries, qid_col, qvec_col, lsh.dim)
+    cand_map, shards = lsh_candidates(lsh, batch, num_candidates)
+    pruned = corpus_bucketed.filter(F.col(shard_col).isin(shards))
+    return _exact_topk(
+        pruned, batch, k, metric, id_col, vec_col, rescore,
+        shard_col=shard_col, cand_map=cand_map,
     )
-    cand_pairs = [
-        (int(qid), int(s))
-        for qid, qv in zip(*batch)
-        for s in lsh.candidate_shards(qv, num_candidates=num_candidates)
-    ]
-    spark = corpus_bucketed.sparkSession
-    all_shards = sorted({s for _, s in cand_pairs})
-    pruned = corpus_bucketed.filter(F.col(shard_col).isin(all_shards))
-
-    if impl == "arrow":
-        cand_map = {}
-        for qid, s in cand_pairs:
-            cand_map.setdefault(qid, set()).add(s)
-        cand_map = {q: frozenset(s) for q, s in cand_map.items()}
-        carry = _resolve_rescore(rescore, batch) == "carry"
-        partial = _arrow_partial_topk(
-            pruned, batch, k, metric, id_col, vec_col,
-            shard_col=shard_col, cand_map=cand_map, carry_vectors=carry,
-        )
-        return _rescored_topk(
-            partial, batch, k, metric,
-            join_corpus=None if carry else pruned, id_col=id_col, vec_col=vec_col,
-        )
-
-    cand_df = spark.createDataFrame(cand_pairs, schema=f"{qid_col} long, {shard_col} int")
-    pairs = pruned.join(
-        F.broadcast(queries.select(qid_col, qvec_col).join(cand_df, qid_col)),
-        on=shard_col,
-    )
-    scored = pairs.select(
-        F.col(qid_col).alias("qid"),
-        F.col(id_col).alias("neighbor_id"),
-        _dist_expr(metric, qvec_col, vec_col).alias("dist"),
-    )
-    return _final_topk(scored, k)
 
 
 def recall_at_k(exact: DataFrame, approx: DataFrame, k: int) -> float:
@@ -704,12 +781,7 @@ def filtered_knn(
     else:
         masked = pruned.withColumn("_fidx", F.lit(0))  # pruned is already empty
 
-    carry = _resolve_rescore(rescore, batch) == "carry"
-    partial = _arrow_partial_topk(
-        masked, batch, k, metric, id_col, vec_col,
-        shard_col="_fidx", cand_map=cand_map, carry_vectors=carry,
-    )
-    return _rescored_topk(
-        partial, batch, k, metric,
-        join_corpus=None if carry else pruned, id_col=id_col, vec_col=vec_col,
+    return _exact_topk(
+        masked, batch, k, metric, id_col, vec_col, rescore,
+        shard_col="_fidx", cand_map=cand_map, join_corpus=pruned,
     )

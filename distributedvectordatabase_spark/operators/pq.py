@@ -26,8 +26,9 @@ Phase split, Spark-first:
   every centroid is built driver-side and broadcast, and each code
   row's distance is ``sum_j LUT[j, code_j]`` — a pure table-gather
   over the compressed corpus, no float vectors read at all. Partial
-  top-k per Arrow batch before the merge exchange, exactly like the
-  exact kNN path; the shuffle carries O(queries·k·partitions) rows.
+  top-k per Arrow batch before the merge exchange, on the exact kNN
+  path's shared ``knn.scan_topk`` (this module supplies only the ADC
+  kernel); the shuffle carries O(queries·k·partitions) rows.
   Per-row distances are fixed-order float64 sums of per-subspace
   terms, so results are independent of partitioning and batch split.
 """
@@ -42,10 +43,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from distributedvectordatabase_spark.operators.knn import (
-    MAX_QUERY_BATCH,
+    QueryBatch,
     _final_topk,
-    batch_topk,
-    collect_query_batch,
+    exact_rerank,
+    query_batch,
+    scan_topk,
 )
 
 # Bounded driver-side training sample (vectors, not bytes): 64k × 512-D
@@ -336,7 +338,7 @@ def pq_reconstruction_mse(
 def pq_search(
     codes: DataFrame,
     cb: PQCodebook,
-    queries: DataFrame,
+    queries: DataFrame | QueryBatch,
     k: int = 10,
     id_col: str = "vec_id",
     qid_col: str = "qid",
@@ -367,6 +369,10 @@ def pq_search(
     rerank=10 — rerank only surfaces what the ADC shortlist already
     contains, so budget and shortlist size trade against each other.
 
+    ``queries`` is collected once and validated against the codebook
+    dimension (``knn.query_batch``); a store that already collected
+    the batch passes the ``QueryBatch`` itself.
+
     ``shard_col``/``cand_map`` apply a per-query shard mask inside the
     same ADC scan (exactly like the exact path's pruned search) —
     this is what IVFStore.knn_pq uses to compose IVF partition pruning
@@ -382,33 +388,10 @@ def pq_search(
     k = max(int(k), 1)
     if cell_centroids is not None and shard_col is None:
         raise ValueError("residual pq_search needs shard_col (the cell column)")
-    if rerank:
-        if corpus is None:
-            raise ValueError("rerank requires the raw-vector corpus DataFrame")
-        short = pq_search(codes, cb, queries, k=int(rerank) * k, id_col=id_col,
-                          qid_col=qid_col, qvec_col=qvec_col,
-                          shard_col=shard_col, cand_map=cand_map,
-                          cell_centroids=cell_centroids, rotation=rotation)
-        from distributedvectordatabase_spark.operators.knn import _dist_expr
-
-        cand = short.select("qid", "neighbor_id").join(
-            corpus.select(
-                F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_nvec")
-            ),
-            "neighbor_id",
-        )
-        q = F.broadcast(
-            queries.select(F.col(qid_col).alias("qid"), F.col(qvec_col).alias("_qvec"))
-        )
-        rescored = cand.join(q, "qid").select(
-            "qid", "neighbor_id", _dist_expr("l2sq", "_qvec", "_nvec").alias("dist")
-        )
-        return _final_topk(rescored, k)
-    qrows = collect_query_batch(queries, qid_col, qvec_col)
-    qids = np.array([r[qid_col] for r in qrows], dtype=np.int64)
-    Q = np.array([list(r[qvec_col]) for r in qrows], dtype=np.float64)
-    if Q.ndim != 2 or Q.shape[1] != cb.dim:
-        raise ValueError(f"query dim {Q.shape} != codebook dim {cb.dim}")
+    if rerank and corpus is None:
+        raise ValueError("rerank requires the raw-vector corpus DataFrame")
+    batch = query_batch(queries, qid_col, qvec_col, cb.dim)
+    Q = batch.Q
     m, dsub, ksub = cb.m, cb.dsub, cb.ksub
     C = cb.centroids
     R = np.asarray(rotation, dtype=np.float64) if rotation is not None else None
@@ -440,7 +423,7 @@ def pq_search(
                 + np.einsum("kd,kd->k", C[j], C[j])[None, :]
             )
         lut = flat.reshape(len(Q), len(cells_used), m, ksub)
-        cellpos = np.full(max(cells_used) + 1, -1, dtype=np.int64)
+        cellpos = np.full(max(cells_used, default=-1) + 1, -1, dtype=np.int64)
         for i, c in enumerate(cells_used):
             cellpos[c] = i
     else:
@@ -455,70 +438,59 @@ def pq_search(
                 - 2.0 * (QS[:, j, :] @ C[j].T)
                 + np.einsum("kd,kd->k", C[j], C[j])[None, :]
             )
-    spark = codes.sparkSession
-    if cand_map is not None:
-        n_shards = max((s for ss in cand_map.values() for s in ss), default=-1) + 1
-        allowed_lut = np.zeros((len(qids), max(n_shards, 1)), dtype=bool)
-        for i, qid in enumerate(qids):
-            for s in cand_map.get(int(qid), ()):
-                allowed_lut[i, s] = True
-    else:
-        allowed_lut = None
-    bc = spark.sparkContext.broadcast((qids, lut, allowed_lut, cellpos))
-    take = 2 * k
+    fetch = max(int(rerank) * k, 1) if rerank else k
+    cols = ["codes"] + ([shard_col] if cellpos is not None else [])
+    partial = scan_topk(
+        codes, batch, fetch, _adc_kernel(shard_col), (lut, cellpos), cols, id_col,
+        shard_col=shard_col, cand_map=cand_map,
+    )
+    short = _final_topk(partial, fetch)
+    if not rerank:
+        return short
+    return exact_rerank(
+        short.select("qid", "neighbor_id"), batch, k, "l2sq",
+        corpus=corpus, id_col=id_col, vec_col=vec_col,
+    )
 
-    def scan(batches):
-        qids, lut, allowed_lut, cellpos = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids = pdf[id_col].values.astype(np.int64)
+
+def _adc_kernel(shard_col: str | None):
+    """ADC distance kernel for ``knn.scan_topk`` (payload: the per-query
+    LUTs and, for residual codes, each probed cell's LUT slot): a pure
+    table-gather ``D[q, i] = sum_j lut[q, j, code[i, j]]``, clamped at
+    0; in residual mode each row gathers from its own cell's table."""
+
+    def bind(payload):
+        lut, cellpos = payload
+        nq, m = lut.shape[0], lut.shape[-2]
+
+        def dist(pdf):
             cd = np.array(list(pdf["codes"].values), dtype=np.int64)  # (n, m)
-            if cellpos is not None:
-                # residual mode: each row gathers from ITS cell's LUT.
-                # The codes table is partitionBy(cell) so a batch is
-                # almost always one cell — the per-cell loop runs once.
-                shards = pdf[shard_col].values.astype(np.int64)
-                pos = np.full(len(shards), -1, dtype=np.int64)
-                in_r = (shards >= 0) & (shards < len(cellpos))
-                pos[in_r] = cellpos[shards[in_r]]
-                D = np.full((len(qids), len(ids)), np.inf)
-                for pv in np.unique(pos):
-                    if pv < 0:
-                        continue  # cell outside the probed set
-                    idx = np.nonzero(pos == pv)[0]
-                    sub = cd[idx]
-                    Dsub = np.zeros((len(qids), len(idx)))
-                    for j in range(m):
-                        Dsub += lut[:, pv, j, sub[:, j]]
-                    np.maximum(Dsub, 0.0, out=Dsub)
-                    D[:, idx] = Dsub
-            else:
-                # gather: D[q, i] = sum_j lut[q, j, cd[i, j]]
-                D = np.zeros((len(qids), len(ids)))
+            if cellpos is None:
+                D = np.zeros((nq, len(cd)))
                 for j in range(m):
                     D += lut[:, j, cd[:, j]]
                 np.maximum(D, 0.0, out=D)
-            if allowed_lut is not None:
-                shards = pdf[shard_col].values.astype(np.int64)
-                in_range = (shards >= 0) & (shards < allowed_lut.shape[1])
-                ok = np.zeros((len(qids), len(shards)), dtype=bool)
-                ok[:, in_range] = allowed_lut[:, shards[in_range]]
-                D[~ok] = np.inf
-            sel_id, sel_d = batch_topk(D, ids, k, take)
-            keep = np.isfinite(sel_d).ravel()
-            yield pd.DataFrame(
-                {
-                    "qid": np.repeat(qids, sel_d.shape[1])[keep],
-                    "neighbor_id": sel_id.ravel()[keep],
-                    "dist": sel_d.ravel()[keep],
-                }
-            )
+                return D, None
+            # residual mode: each row gathers from ITS cell's LUT. The
+            # codes table is partitionBy(cell) so a batch is almost
+            # always one cell — the per-cell loop runs once.
+            shards = pdf[shard_col].values.astype(np.int64)
+            pos = np.full(len(shards), -1, dtype=np.int64)
+            in_r = (shards >= 0) & (shards < len(cellpos))
+            pos[in_r] = cellpos[shards[in_r]]
+            D = np.full((nq, len(cd)), np.inf)
+            for pv in np.unique(pos):
+                if pv < 0:
+                    continue  # cell outside the probed set
+                idx = np.nonzero(pos == pv)[0]
+                sub = cd[idx]
+                Dsub = np.zeros((nq, len(idx)))
+                for j in range(m):
+                    Dsub += lut[:, pv, j, sub[:, j]]
+                np.maximum(Dsub, 0.0, out=Dsub)
+                D[:, idx] = Dsub
+            return D, None
 
-    cols = [id_col, "codes"] + (
-        [shard_col] if (cand_map is not None or cellpos is not None) else []
-    )
-    partial = codes.select(*cols).mapInPandas(
-        scan, schema="qid long, neighbor_id long, dist double"
-    )
-    return _final_topk(partial, k)
+        return dist
+
+    return bind

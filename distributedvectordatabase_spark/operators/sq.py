@@ -42,13 +42,13 @@ from dataclasses import dataclass
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from distributedvectordatabase_spark.operators.knn import (
-    _dist_expr,
+    QueryBatch,
     _final_topk,
-    batch_topk,
-    collect_query_batch,
+    exact_rerank,
+    query_batch,
+    scan_topk,
 )
 
 
@@ -159,10 +159,28 @@ def sq_encode(
     )
 
 
+def _sq_kernel(payload):
+    """SQ8 distance kernel for ``knn.scan_topk``: squared L2 of each exact
+    query against the batch's midpoint reconstructions, one BLAS gemm
+    per batch through the norm identity."""
+    Q, vmin, vmax = payload
+    p = SQParams(vmin=vmin, vmax=vmax)
+    qn = np.einsum("ij,ij->i", Q, Q)
+
+    def dist(pdf):
+        raw = np.frombuffer(b"".join(pdf["codes"].values), dtype=np.uint8)
+        Xh = p.decode_np(raw.reshape(len(pdf), p.dim))
+        D = qn[:, None] - 2.0 * (Q @ Xh.T) + np.einsum("ij,ij->i", Xh, Xh)[None, :]
+        np.maximum(D, 0.0, out=D)
+        return D, None
+
+    return dist
+
+
 def sq_search(
     codes: DataFrame,
     params: SQParams,
-    queries: DataFrame,
+    queries: DataFrame | QueryBatch,
     k: int = 10,
     id_col: str = "vec_id",
     qid_col: str = "qid",
@@ -181,82 +199,29 @@ def sq_search(
     vectors — compressed scan does the elimination, floats are read
     only for the ≤ nq·R·k shortlist.
 
+    ``queries`` is collected once and validated against the trained
+    dimension (``knn.query_batch``); a store that already collected
+    the batch passes the :class:`QueryBatch` itself.
+
     ``shard_col``/``cand_map`` apply a per-query shard mask inside the
     same compressed scan (exactly like pq_search / the exact pruned
     path) — this is what VectorStore.knn_sq uses to compose LSH
     multi-probe pruning with SQ8 compression."""
     k = max(int(k), 1)
-    if rerank:
-        if corpus is None:
-            raise ValueError("rerank requires the raw-vector corpus DataFrame")
-        short = sq_search(
-            codes, params, queries, k=int(rerank) * k,
-            id_col=id_col, qid_col=qid_col, qvec_col=qvec_col,
-            shard_col=shard_col, cand_map=cand_map,
-        )
-        cand = short.select("qid", "neighbor_id").join(
-            corpus.select(
-                F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_nvec")
-            ),
-            "neighbor_id",
-        )
-        q = F.broadcast(
-            queries.select(F.col(qid_col).alias("qid"), F.col(qvec_col).alias("_qvec"))
-        )
-        rescored = cand.join(q, "qid").select(
-            "qid", "neighbor_id", _dist_expr("l2sq", "_qvec", "_nvec").alias("dist")
-        )
-        return _final_topk(rescored, k)
-    qrows = collect_query_batch(queries, qid_col, qvec_col)
-    qids = np.array([r[qid_col] for r in qrows], dtype=np.int64)
-    Q = np.array([list(r[qvec_col]) for r in qrows], dtype=np.float64)
-    if Q.ndim != 2 or Q.shape[1] != params.dim:
-        raise ValueError(f"query dim {Q.shape} != trained dim {params.dim}")
-    spark = codes.sparkSession
-    if cand_map is not None:
-        if shard_col is None:
-            raise ValueError("cand_map requires shard_col")
-        n_shards = max((s for ss in cand_map.values() for s in ss), default=-1) + 1
-        allowed_lut = np.zeros((len(qids), max(n_shards, 1)), dtype=bool)
-        for i, qid in enumerate(qids):
-            for s in cand_map.get(int(qid), ()):
-                allowed_lut[i, s] = True
-    else:
-        allowed_lut = None
-    bc = spark.sparkContext.broadcast((qids, Q, params.vmin, params.vmax, allowed_lut))
-    take = 2 * k
-
-    def scan(batches):
-        qids, Q, vmin, vmax, allowed_lut = bc.value
-        p = SQParams(vmin=vmin, vmax=vmax)
-        qn = np.einsum("ij,ij->i", Q, Q)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids = pdf[id_col].values.astype(np.int64)
-            raw = np.frombuffer(b"".join(pdf["codes"].values), dtype=np.uint8)
-            Xh = p.decode_np(raw.reshape(len(ids), p.dim))
-            # ||q - x̂||² via the norm identity; one BLAS gemm per batch
-            D = qn[:, None] - 2.0 * (Q @ Xh.T) + np.einsum("ij,ij->i", Xh, Xh)[None, :]
-            np.maximum(D, 0.0, out=D)
-            if allowed_lut is not None:
-                shards = pdf[shard_col].values.astype(np.int64)
-                in_range = (shards >= 0) & (shards < allowed_lut.shape[1])
-                ok = np.zeros((len(qids), len(shards)), dtype=bool)
-                ok[:, in_range] = allowed_lut[:, shards[in_range]]
-                D[~ok] = np.inf
-            sel_id, sel_d = batch_topk(D, ids, k, take)
-            keep = np.isfinite(sel_d).ravel()
-            yield pd.DataFrame(
-                {
-                    "qid": np.repeat(qids, sel_d.shape[1])[keep],
-                    "neighbor_id": sel_id.ravel()[keep],
-                    "dist": sel_d.ravel()[keep],
-                }
-            )
-
-    cols = [id_col, "codes"] + ([shard_col] if cand_map is not None else [])
-    partial = codes.select(*cols).mapInPandas(
-        scan, schema="qid long, neighbor_id long, dist double"
+    if rerank and corpus is None:
+        raise ValueError("rerank requires the raw-vector corpus DataFrame")
+    if cand_map is not None and shard_col is None:
+        raise ValueError("cand_map requires shard_col")
+    batch = query_batch(queries, qid_col, qvec_col, params.dim)
+    fetch = max(int(rerank) * k, 1) if rerank else k
+    partial = scan_topk(
+        codes, batch, fetch, _sq_kernel, (batch.Q, params.vmin, params.vmax),
+        ["codes"], id_col, shard_col=shard_col, cand_map=cand_map,
     )
-    return _final_topk(partial, k)
+    short = _final_topk(partial, fetch)
+    if not rerank:
+        return short
+    return exact_rerank(
+        short.select("qid", "neighbor_id"), batch, k, "l2sq",
+        corpus=corpus, id_col=id_col, vec_col=vec_col,
+    )

@@ -27,7 +27,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 from distributedvectordatabase_spark.sources.tombstones import (
     atomic_dump_json,
     locked_writer,
@@ -35,13 +34,8 @@ from distributedvectordatabase_spark.sources.tombstones import (
 
 from distributedvectordatabase_spark.operators.knn import (
     QueryBatch,
-    _arrow_partial_topk,
-    _dist_expr,
-    _final_topk,
-    _rescored_topk,
-    _resolve_rescore,
-    collect_query_batch,
-    query_matrix,
+    _exact_topk,
+    query_batch,
 )
 
 
@@ -763,32 +757,14 @@ class IVFStore:
         ``knn(where=)``, the compressed leg does not escalate — a
         selective filter inside few probed cells may return under k
         rows; widen ``n_probe`` or use the raw leg for exactness."""
-        n_probe = max(int(n_probe), 1)  # 0 probes nothing and would silently return empty
         from distributedvectordatabase_spark.operators.sq import sq_search
 
         self._check_codes_snapshot(self._sq_params_path, as_of_gen, "sq")
-        C = self.centroids()
-        qrows = collect_query_batch(queries, qid_col, qvec_col)
-        cand_map: dict[int, frozenset] = {}
-        for r in qrows:
-            qv = np.asarray(list(r[qvec_col]), dtype=np.float64)
-            order = np.argsort(((C - qv) ** 2).sum(axis=1))[:n_probe]
-            cand_map[int(r[qid_col])] = frozenset(int(c) for c in order)
-        probed = sorted({c for s in cand_map.values() for c in s})
-        codes = self._any_codes(spark, self._sq_path, as_of_gen).drop(
-            "_gen"
-        ).filter(F.col("cell_id").isin(probed))
-        if where is not None:
-            codes = codes.join(
-                self._allowed_ids(spark, where, as_of_gen),
-                self.id_col, "left_semi",
-            )
-        corpus = self.read(spark, as_of_gen=as_of_gen).filter(
-            F.col("cell_id").isin(probed)
+        codes, corpus, batch, cand_map, _ = self._probed_codes(
+            spark, self._sq_path, queries, qid_col, qvec_col, n_probe, where, as_of_gen,
         )
         return sq_search(
-            codes, self.sq_params(), queries, k=k,
-            id_col=self.id_col, qid_col=qid_col, qvec_col=qvec_col,
+            codes, self.sq_params(), batch, k=k, id_col=self.id_col,
             rerank=rerank, corpus=corpus if rerank else None,
             vec_col=self.vec_col, shard_col="cell_id", cand_map=cand_map,
         )
@@ -814,32 +790,14 @@ class IVFStore:
         distances. ``where``/``as_of_gen``: filtered + snapshot
         serving, same contracts and non-escalation caveat as
         :meth:`knn_sq`."""
-        n_probe = max(int(n_probe), 1)  # 0 probes nothing and would silently return empty
         from distributedvectordatabase_spark.operators.pq import pq_search
 
         self._check_codes_snapshot(self._pq_codebook_path, as_of_gen, "pq")
-        C = self.centroids()
-        qrows = collect_query_batch(queries, qid_col, qvec_col)
-        cand_map: dict[int, frozenset] = {}
-        for r in qrows:
-            qv = np.asarray(list(r[qvec_col]), dtype=np.float64)
-            order = np.argsort(((C - qv) ** 2).sum(axis=1))[:n_probe]
-            cand_map[int(r[qid_col])] = frozenset(int(c) for c in order)
-        probed = sorted({c for s in cand_map.values() for c in s})
-        codes = self._any_codes(spark, self._pq_path, as_of_gen).drop(
-            "_gen"
-        ).filter(F.col("cell_id").isin(probed))
-        if where is not None:
-            codes = codes.join(
-                self._allowed_ids(spark, where, as_of_gen),
-                self.id_col, "left_semi",
-            )
-        corpus = self.read(spark, as_of_gen=as_of_gen).filter(
-            F.col("cell_id").isin(probed)
+        codes, corpus, batch, cand_map, C = self._probed_codes(
+            spark, self._pq_path, queries, qid_col, qvec_col, n_probe, where, as_of_gen,
         )
         return pq_search(
-            codes, self.pq_codebook(), queries, k=k,
-            id_col=self.id_col, qid_col=qid_col, qvec_col=qvec_col,
+            codes, self.pq_codebook(), batch, k=k, id_col=self.id_col,
             rerank=rerank, corpus=corpus, vec_col=self.vec_col,
             shard_col="cell_id", cand_map=cand_map,
             cell_centroids=C if self.pq_is_residual() else None,
@@ -933,8 +891,7 @@ class IVFStore:
         (qid, neighbor_id, dist, rnk), the knn() shape.
         ``where``/``as_of_gen``: filtered + snapshot serving, same
         contracts and non-escalation caveat as :meth:`knn_sq`."""
-        n_probe = max(int(n_probe), 1)  # 0 probes nothing and would silently return empty
-        from distributedvectordatabase_spark.operators.bq import bq_encode, bq_topk
+        from distributedvectordatabase_spark.operators.bq import bq_search
 
         if not os.path.exists(self._bq_params_path):
             raise ValueError("no binary sidecar: run build_bq(spark) first")
@@ -943,62 +900,15 @@ class IVFStore:
             side = json.load(f)
         if metric is None:
             metric = "cosine" if side.get("normalize") else "l2sq"
-        k = max(int(k), 1)
-        fetch = max(int(rerank), 1) * k
-        C = self.centroids()
-        qrows = collect_query_batch(queries, qid_col, qvec_col)
-        cand_map: dict[int, frozenset] = {}
-        for r in qrows:
-            qv = np.asarray(list(r[qvec_col]), dtype=np.float64)
-            order = np.argsort(((C - qv) ** 2).sum(axis=1))[:n_probe]
-            cand_map[int(r[qid_col])] = frozenset(int(c) for c in order)
-        probed = sorted({c for s in cand_map.values() for c in s})
-        codes = self._any_codes(spark, self._bq_path, as_of_gen).drop(
-            "_gen"
-        ).filter(F.col("cell_id").isin(probed))
-        if where is not None:
-            codes = codes.join(
-                self._allowed_ids(spark, where, as_of_gen),
-                self.id_col, "left_semi",
-            )
+        codes, corpus, batch, cand_map, _ = self._probed_codes(
+            spark, self._bq_path, queries, qid_col, qvec_col, n_probe, where, as_of_gen,
+        )
         # persisted (n_bits, seed) are authoritative for query encoding
-        qcodes = bq_encode(
-            queries, int(side["dim"]), qvec_col, out_col="qcode",
+        return bq_search(
+            codes, batch, corpus, int(side["dim"]), k=k, rerank=rerank,
+            metric=metric, id_col=self.id_col, vec_col=self.vec_col,
             n_bits=side.get("n_bits"), seed=int(side.get("seed", 42)),
-        )
-        shortlist = bq_topk(
-            codes, qcodes.select(qid_col, "qcode"), k=fetch,
-            id_col=self.id_col, qid_col=qid_col,
             shard_map=cand_map, shard_col="cell_id",
-        )
-        raw = (
-            self.read(spark, as_of_gen=as_of_gen)
-            .filter(F.col("cell_id").isin(probed))
-            .select(F.col(self.id_col).alias("neighbor_id"), self.vec_col)
-        )
-        rescored = (
-            raw.join(
-                F.broadcast(shortlist.select("qid", "neighbor_id")), "neighbor_id"
-            )
-            .join(
-                F.broadcast(
-                    queries.select(
-                        F.col(qid_col).alias("qid"), F.col(qvec_col).alias("_qvec")
-                    )
-                ),
-                "qid",
-            )
-            .select(
-                "qid",
-                "neighbor_id",
-                _dist_expr(metric, "_qvec", self.vec_col).alias("dist"),
-            )
-        )
-        w = Window.partitionBy("qid").orderBy("dist", "neighbor_id")
-        return (
-            rescored.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= k)
-            .select("qid", "neighbor_id", "dist", "rnk")
         )
 
     # -- delete / upsert -----------------------------------------------------
@@ -1135,6 +1045,47 @@ class IVFStore:
         with open(side_path) as f:
             check_codes_snapshot_floor(json.load(f), as_of_gen, what)
 
+    def _probe(self, batch: QueryBatch, n_probe: int, C: np.ndarray):
+        """The IVF candidate source: every cell ranked by the squared
+        distance of its centroid (``C``) to each query, the ``n_probe``
+        nearest being that query's candidate cells. Returns
+        ``(cand_map, probed, order, d2)``: qid → its cells, their sorted
+        union (the partition-pruning IN-list), and the per-query cell
+        ranking and distances (nq × n_cells) that knn's escalation
+        bounds reuse."""
+        n_probe = max(int(n_probe), 1)  # 0 probes nothing and would silently return empty
+        d2 = np.array([((C - qv) ** 2).sum(axis=1) for qv in batch.Q]).reshape(
+            len(batch.Q), len(C)
+        )
+        order = np.argsort(d2, axis=1)
+        cand_map = {
+            int(qid): frozenset(int(c) for c in row[:n_probe])
+            for qid, row in zip(batch.qids, order)
+        }
+        return cand_map, sorted(set().union(*cand_map.values())), order, d2
+
+    def _probed_codes(self, spark, path, queries, qid_col, qvec_col, n_probe,
+                      where, as_of_gen):
+        """The compressed legs' candidate source: collect and validate
+        the query batch once (``knn.query_batch``, against the centroid
+        width), probe its cells (:meth:`_probe`), and restrict both the
+        codes table at ``path`` and the raw rerank corpus to the probed
+        cells (literal IN-lists → partition pruning); ``where``
+        semi-joins the matching ids into the codes scan BEFORE the
+        shortlist. Returns (codes, corpus, batch, cand_map, C)."""
+        C = self.centroids()
+        batch = query_batch(queries, qid_col, qvec_col, C.shape[1])
+        cand_map, probed, _, _ = self._probe(batch, n_probe, C)
+        in_probed = F.col("cell_id").isin(probed)
+        codes = self._any_codes(spark, path, as_of_gen).drop("_gen").filter(in_probed)
+        if where is not None:
+            codes = codes.join(
+                self._allowed_ids(spark, where, as_of_gen),
+                self.id_col, "left_semi",
+            )
+        corpus = self.read(spark, as_of_gen=as_of_gen).filter(in_probed)
+        return codes, corpus, batch, cand_map, C
+
     def current_gen(self) -> int:
         """The store's persisted write/delete generation — pin it when
         a training run starts and ``read(as_of_gen=...)`` reconstructs
@@ -1167,7 +1118,6 @@ class IVFStore:
         metric: str = "l2sq",
         qid_col: str = "qid",
         qvec_col: str = "qvec",
-        impl: str = "arrow",
         rescore: str = "auto",
         where: str | None = None,
         escalate: bool = True,
@@ -1179,12 +1129,10 @@ class IVFStore:
         generation (read(as_of_gen=...) semantics) — centroids and cell
         layout are fixed between compactions, so pruning stays exact.
 
-        ``impl="arrow"`` (default) scores the probed rows on the same
-        BLAS partial-top-k scan as exact/pruned kNN with a per-query
-        cell mask — the interpreted ``aggregate/zip_with`` expression
-        path (``impl="expr"``) is ~25× slower per pair at 500k rows
-        (BASELINE.md scale probe) and kept only as the plan-shape
-        reference.
+        The probed cells are the candidate source (:meth:`_probe`): the
+        probed rows are scored on the same BLAS partial-top-k scan as
+        exact/pruned kNN with a per-query cell mask, then reranked
+        exactly (``knn.exact_rerank``; ``rescore`` is ``knn``'s).
 
         ``where`` is a SQL predicate over the store's metadata columns
         (``build(..., meta_cols=...)`` co-locates them with the
@@ -1211,13 +1159,10 @@ class IVFStore:
         # escalation forever on cur = min(0*2, n_cells) == 0
         n_probe = max(int(n_probe), 1)
         C = self.centroids()
-        batch = query_matrix(
-            collect_query_batch(queries, qid_col, qvec_col), qid_col, qvec_col,
-            C.shape[1],
-        )
+        batch = query_batch(queries, qid_col, qvec_col, C.shape[1])
+        cand_map, probed, order, d2 = self._probe(batch, n_probe, C)
         result = self._knn_probe(
-            spark, queries, batch, C, k, n_probe, metric, qid_col, qvec_col,
-            impl, rescore, where, as_of_gen,
+            spark, batch, cand_map, probed, k, metric, rescore, where, as_of_gen,
         )
         if where is None or not escalate or n_probe >= self.n_cells:
             return result
@@ -1226,10 +1171,7 @@ class IVFStore:
 
         kk = max(int(k), 1)
         radii = self.cell_radii() if metric == "l2sq" else None
-        qinfo = {}
-        for qid, qv in zip(*batch):
-            d2 = ((C - qv) ** 2).sum(axis=1)
-            qinfo[int(qid)] = (np.argsort(d2), d2)
+        row_of = {int(qid): i for i, qid in enumerate(batch.qids)}
 
         def still_starved(qid: int, cur: int, counts: dict, kth: dict) -> bool:
             if cur >= self.n_cells:
@@ -1238,9 +1180,9 @@ class IVFStore:
                 return True
             if radii is None:
                 return False
-            order, d2 = qinfo[qid]
-            unprobed = order[cur:]
-            lb = np.maximum(np.sqrt(d2[unprobed]) - radii[unprobed], 0.0) ** 2
+            i = row_of[qid]
+            unprobed = order[i, cur:]
+            lb = np.maximum(np.sqrt(d2[i, unprobed]) - radii[unprobed], 0.0) ** 2
             # slack keeps the prune conservative against float-sum
             # divergence between the BLAS kth distance and this bound
             kd = kth[qid]
@@ -1264,68 +1206,35 @@ class IVFStore:
             cur = min(cur * 2, self.n_cells)
             starved_ids = list(active)
             starved = np.isin(batch.qids, starved_ids)
-            sub = self._knn_probe(
-                spark,
-                queries.filter(F.col(qid_col).isin(starved_ids)),
-                QueryBatch(batch.qids[starved], batch.Q[starved]),
-                C, k, cur, metric, qid_col, qvec_col,
-                impl, rescore, where, as_of_gen,
+            sub = QueryBatch(batch.qids[starved], batch.Q[starved])
+            sub_map, sub_probed, _, _ = self._probe(sub, cur, C)
+            sub_out = self._knn_probe(
+                spark, sub, sub_map, sub_probed, k, metric, rescore, where, as_of_gen,
             ).toPandas()
             out = pd_.concat(
-                [out[~out["qid"].isin(starved_ids)], sub], ignore_index=True
+                [out[~out["qid"].isin(starved_ids)], sub_out], ignore_index=True
             )
         return spark.createDataFrame(out, schema=result.schema) if len(out) else result
 
     def _knn_probe(
         self,
         spark: SparkSession,
-        queries: DataFrame,
         batch: QueryBatch,
-        C: np.ndarray,
+        cand_map: dict[int, frozenset],
+        probed: list,
         k: int,
-        n_probe: int,
         metric: str,
-        qid_col: str,
-        qvec_col: str,
-        impl: str,
         rescore: str,
         where: str | None,
         as_of_gen: int | None = None,
     ) -> DataFrame:
-        probe_pairs = []
-        cand_map: dict[int, frozenset] = {}
-        for qid, qv in zip(*batch):
-            order = np.argsort(((C - qv) ** 2).sum(axis=1))[:n_probe]
-            probe_pairs.extend((int(qid), int(c)) for c in order)
-            cand_map[int(qid)] = frozenset(int(c) for c in order)
-        probed_cells = sorted({c for _, c in probe_pairs})
-        k = max(int(k), 1)
-
+        """Exact search over the probed cells (``_probe``'s candidates)."""
         corpus = self.read(spark, as_of_gen=as_of_gen).filter(
-            F.col("cell_id").isin(probed_cells)
+            F.col("cell_id").isin(probed)
         )
         if where is not None:
             corpus = corpus.filter(where)
-        if impl == "arrow":
-            carry = _resolve_rescore(rescore, batch) == "carry"
-            partial = _arrow_partial_topk(
-                corpus, batch, k, metric, self.id_col, self.vec_col,
-                shard_col="cell_id", cand_map=cand_map, carry_vectors=carry,
-            )
-            return _rescored_topk(
-                partial, batch, k, metric,
-                join_corpus=None if carry else corpus,
-                id_col=self.id_col, vec_col=self.vec_col,
-            )
-
-        probe_df = spark.createDataFrame(probe_pairs, schema=f"{qid_col} long, cell_id int")
-        pairs = corpus.join(
-            F.broadcast(queries.select(qid_col, qvec_col).join(probe_df, qid_col)),
-            on="cell_id",
+        return _exact_topk(
+            corpus, batch, max(int(k), 1), metric, self.id_col, self.vec_col,
+            rescore, shard_col="cell_id", cand_map=cand_map,
         )
-        scored = pairs.select(
-            F.col(qid_col).alias("qid"),
-            F.col(self.id_col).alias("neighbor_id"),
-            _dist_expr(metric, qvec_col, self.vec_col).alias("dist"),
-        )
-        return _final_topk(scored, k)

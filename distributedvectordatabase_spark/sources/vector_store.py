@@ -50,7 +50,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from distributedvectordatabase_spark.functions.lsh import SignLSH
 from distributedvectordatabase_spark.sources.tombstones import (
@@ -520,6 +519,13 @@ class VectorStore:
     def _sq_codes(
         self, spark: SparkSession, as_of_gen: int | None = None
     ) -> DataFrame:
+        return self._codes(spark, self._sq_path, as_of_gen)
+
+    def _codes(
+        self, spark: SparkSession, path: str, as_of_gen: int | None = None
+    ) -> DataFrame:
+        """A codes sidecar's committed rows, tombstone-filtered live or
+        reconstructed as-of (codes rows carry the raw rows' ``_gen``)."""
         from distributedvectordatabase_spark.sources.tombstones import (
             filter_as_of,
             filter_live,
@@ -527,7 +533,7 @@ class VectorStore:
 
         from distributedvectordatabase_spark.sources.scan_cache import cached_parquet
 
-        df = self._committed(cached_parquet(spark, self._sq_path))
+        df = self._committed(cached_parquet(spark, path))
         if as_of_gen is None:
             return filter_live(spark, df, self._tombstone_path, self.id_col)
         return filter_as_of(
@@ -614,38 +620,46 @@ class VectorStore:
         with open(self._sq_params_path) as f:
             side = json.load(f)
         self._check_codes_gens(int(side.get("gen", 0)), as_of_gen, side, "sq")
-        from distributedvectordatabase_spark.operators.knn import collect_query_batch
         from distributedvectordatabase_spark.operators.sq import sq_search
 
-        params = self.sq_params()
-        codes = self._sq_codes(spark, as_of_gen)
-        cand_map = None
-        if pruned:
-            qrows = collect_query_batch(queries, qid_col, qvec_col)
-            cand_map = {
-                int(r[qid_col]): frozenset(
-                    int(s) for s in self.lsh.candidate_shards(
-                        list(r[qvec_col]), num_candidates=num_candidates
-                    )
-                )
-                for r in qrows
-            }
-            all_shards = sorted({s for ss in cand_map.values() for s in ss})
-            # literal IN-list → Catalyst partition pruning on _sq/
-            codes = codes.filter(F.col("shard_id").isin(all_shards))
-        if where is not None:
-            codes = codes.join(
-                self._allowed_ids(spark, where, as_of_gen),
-                self.id_col, "left_semi",
-            )
+        codes, batch, cand_map = self._probed_codes(
+            spark, self._sq_path, queries, qid_col, qvec_col,
+            pruned, num_candidates, where, as_of_gen,
+        )
         return sq_search(
-            codes, params, queries, k=k, id_col=self.id_col,
-            qid_col=qid_col, qvec_col=qvec_col,
+            codes, self.sq_params(), batch, k=k, id_col=self.id_col,
             rerank=rerank,
             corpus=self.read(spark, as_of_gen=as_of_gen) if rerank else None,
             vec_col=self.vec_col,
             shard_col="shard_id" if pruned else None, cand_map=cand_map,
         )
+
+    def _probed_codes(self, spark, path, queries, qid_col, qvec_col,
+                      pruned, num_candidates, where, as_of_gen):
+        """The compressed legs' candidate source: collect and validate the
+        query batch once (``knn.query_batch``, against ``lsh.dim``); with
+        ``pruned``, its LSH candidate shards become a literal IN-list on
+        the codes table at ``path`` (Catalyst partition pruning) plus the
+        per-query ``cand_map`` mask; ``where`` semi-joins the matching ids
+        into the codes scan BEFORE the shortlist. Returns
+        (codes, batch, cand_map)."""
+        from distributedvectordatabase_spark.operators.knn import (
+            lsh_candidates,
+            query_batch,
+        )
+
+        codes = self._codes(spark, path, as_of_gen)
+        batch = query_batch(queries, qid_col, qvec_col, self.lsh.dim)
+        cand_map = None
+        if pruned:
+            cand_map, shards = lsh_candidates(self.lsh, batch, num_candidates)
+            codes = codes.filter(F.col("shard_id").isin(shards))
+        if where is not None:
+            codes = codes.join(
+                self._allowed_ids(spark, where, as_of_gen),
+                self.id_col, "left_semi",
+            )
+        return codes, batch, cand_map
 
     # -- binary (1-bit) compressed sidecar ----------------------------------
 
@@ -770,88 +784,24 @@ class VectorStore:
         rebuild-don't-sync sidecar the two coincide)."""
         if not os.path.exists(self._bq_params_path):
             raise ValueError("no binary sidecar: run build_bq(spark) first")
-        from distributedvectordatabase_spark.operators.bq import bq_encode, bq_topk
-        from distributedvectordatabase_spark.operators.knn import (
-            _dist_expr,
-            collect_query_batch,
-        )
-        from distributedvectordatabase_spark.sources.tombstones import (
-            filter_as_of,
-            filter_live,
-        )
+        from distributedvectordatabase_spark.operators.bq import bq_search
 
-        k = max(int(k), 1)
-        fetch = max(int(rerank), 1) * k
         with open(self._bq_params_path) as f:
             side = json.load(f)
         self._check_codes_gens(int(side.get("gen", 0)), as_of_gen, side, "bq")
         if metric is None:
             metric = "cosine" if side.get("normalize") else "l2sq"
-        from distributedvectordatabase_spark.sources.scan_cache import cached_parquet
-
-        raw_codes = self._committed(cached_parquet(spark, self._bq_path))
-        if as_of_gen is None:
-            codes = filter_live(
-                spark, raw_codes, self._tombstone_path, self.id_col
-            )
-        else:
-            codes = filter_as_of(
-                spark, raw_codes, self._tombstone_path, self.id_col, as_of_gen
-            )
-        shard_map = None
-        if pruned:
-            qrows = collect_query_batch(queries, qid_col, qvec_col)
-            shard_map = {
-                int(r[qid_col]): frozenset(
-                    int(s) for s in self.lsh.candidate_shards(
-                        list(r[qvec_col]), num_candidates=num_candidates
-                    )
-                )
-                for r in qrows
-            }
-            all_shards = sorted({s for ss in shard_map.values() for s in ss})
-            # literal IN-list → Catalyst partition pruning on _bq/
-            codes = codes.filter(F.col("shard_id").isin(all_shards))
-        if where is not None:
-            codes = codes.join(
-                self._allowed_ids(spark, where, as_of_gen),
-                self.id_col, "left_semi",
-            )
+        codes, batch, shard_map = self._probed_codes(
+            spark, self._bq_path, queries, qid_col, qvec_col,
+            pruned, num_candidates, where, as_of_gen,
+        )
         # the persisted (n_bits, seed) are authoritative: queries MUST
         # be encoded exactly like the stored codes were
-        qcodes = bq_encode(
-            queries, self.lsh.dim, qvec_col, out_col="qcode",
-            n_bits=side.get("n_bits"), seed=int(side.get("seed", 42)),
-        )
-        shortlist = bq_topk(
-            codes, qcodes.select(qid_col, "qcode"), k=fetch,
-            id_col=self.id_col, qid_col=qid_col,
-            shard_map=shard_map,
-        )
-        raw = self.read(spark, as_of_gen=as_of_gen).select(
-            F.col(self.id_col).alias("neighbor_id"), self.vec_col
-        )
-        rescored = (
-            raw.join(F.broadcast(shortlist.select("qid", "neighbor_id")), "neighbor_id")
-            .join(
-                F.broadcast(
-                    queries.select(
-                        F.col(qid_col).alias("qid"), F.col(qvec_col).alias("_qvec")
-                    )
-                ),
-                "qid",
-            )
-            .select(
-                "qid",
-                "neighbor_id",
-                _dist_expr(metric, "_qvec", self.vec_col).alias("dist"),
-            )
-        )
-        w = Window.partitionBy("qid").orderBy("dist", "neighbor_id")
-        return (
-            rescored.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= k)
-            .select("qid", "neighbor_id", "dist", "rnk")
+        return bq_search(
+            codes, batch, self.read(spark, as_of_gen=as_of_gen), self.lsh.dim,
+            k=k, rerank=rerank, metric=metric, id_col=self.id_col,
+            vec_col=self.vec_col, n_bits=side.get("n_bits"),
+            seed=int(side.get("seed", 42)), shard_map=shard_map,
         )
 
     # -- read / query -------------------------------------------------------

@@ -460,8 +460,9 @@ def test_empty_query_batch_returns_no_rows(spark):
 
 @pytest.fixture(scope="module")
 def rescore_paths(spark, tmp_path_factory):
-    """Every Arrow search entry point over one 64-D corpus, as
-    ``name -> search(queries) -> DataFrame``."""
+    """Every search entry point built on the shared core — the raw
+    Arrow paths and the compressed SQ/PQ/BQ store legs — over one 64-D
+    corpus, as ``name -> search(queries) -> DataFrame``."""
     from distributedvectordatabase_spark.functions.lsh import SignLSH
     from distributedvectordatabase_spark.operators.knn import filtered_knn, knn_pruned
     from distributedvectordatabase_spark.sources.ivf_store import IVFStore
@@ -472,9 +473,14 @@ def rescore_paths(spark, tmp_path_factory):
     root = tmp_path_factory.mktemp("rescore_paths")
     vs = VectorStore(str(root / "vs"), SignLSH(dim=64))
     vs.write(corpus)
+    vs.build_sq(spark)
+    vs.build_bq(spark)
     ivf = IVFStore(str(root / "ivf"), n_cells=8)
     ivf.build(corpus)
-    lsh = SignLSH(dim=64)
+    ivf.build_sq(spark)
+    ivf.build_pq(spark, m=8, nbits=4)
+    ivf.build_bq(spark)
+    lsh = SignLSH(dim=vs.lsh.dim)
     return {
         "knn": lambda q: knn(corpus, q, k=3, dim=64),
         "knn_pruned": lambda q: knn_pruned(lsh.assign(corpus), q, lsh, k=3),
@@ -484,25 +490,66 @@ def rescore_paths(spark, tmp_path_factory):
         "vector_store_pruned": lambda q: vs.knn(spark, q, k=3, pruned=True),
         "vector_store_exact": lambda q: vs.knn(spark, q, k=3, pruned=False),
         "ivf_store": lambda q: ivf.knn(spark, q, k=3, n_probe=2),
+        "vector_store_sq": lambda q: vs.knn_sq(spark, q, k=3, rerank=2),
+        "vector_store_bq": lambda q: vs.knn_bq(spark, q, k=3),
+        "ivf_sq": lambda q: ivf.knn_sq(spark, q, k=3, n_probe=2),
+        "ivf_pq": lambda q: ivf.knn_pq(spark, q, k=3, n_probe=2),
+        "ivf_bq": lambda q: ivf.knn_bq(spark, q, k=3, n_probe=2),
     }
 
 
 def test_knn_rescore_side_is_local_relation(spark, rescore_paths):
     """The deterministic rescore must NOT re-execute the query subplan
-    as a broadcast-build job: the final plan carries exactly one scan
-    of the corpus source and a LocalTableScan for the q side — the
-    Arrow-built relation, never an RDD-backed one."""
+    as a broadcast-build job: the final plan carries a LocalTableScan
+    for the q side — the Arrow-built relation, never an RDD-backed one
+    — and exactly one scan per store table the search reads: the
+    corpus for the raw paths, the codes table plus the raw table for
+    the compressed legs' rerank."""
     from tests.conftest import SF_SMALL
 
     queries = queries_fixture(spark, SF_SMALL, n=3)
-    for path in ("knn", "vector_store_pruned", "vector_store_exact", "ivf_store"):
+    tables = {
+        "knn": 1, "vector_store_pruned": 1, "vector_store_exact": 1,
+        "ivf_store": 1, "vector_store_sq": 2, "vector_store_bq": 2,
+        "ivf_sq": 2, "ivf_pq": 2, "ivf_bq": 2,
+    }
+    for path, n_tables in tables.items():
         plan = (
             rescore_paths[path](queries)
             ._jdf.queryExecution().executedPlan().toString()
         )
         assert "LocalTableScan" in plan, path
         assert "LogicalRDD" not in plan and "Scan ExistingRDD" not in plan, path
-        assert plan.count("Scan parquet") == 1, path
+        assert plan.count("Scan parquet") == n_tables, path
+
+
+def test_compressed_legs_collect_queries_once(spark, rescore_paths, monkeypatch):
+    """A compressed leg collects the query vectors once per call: the
+    batch its candidate source routed (LSH shards, IVF cells) is the
+    batch its scan and rerank use, not a second collect for the
+    shortlist."""
+    import importlib
+    import sys
+
+    from tests.conftest import SF_SMALL
+
+    knnmod = importlib.import_module("distributedvectordatabase_spark.operators.knn")
+    orig = knnmod.collect_query_batch
+    calls = []
+
+    def counting(*args, **kwargs):
+        calls.append(args[1:3])
+        return orig(*args, **kwargs)
+
+    for name, mod in list(sys.modules.items()):
+        if name.startswith("distributedvectordatabase_spark") and mod is not None:
+            if getattr(mod, "collect_query_batch", None) is orig:
+                monkeypatch.setattr(mod, "collect_query_batch", counting)
+    queries = queries_fixture(spark, SF_SMALL, n=3)
+    for path in ("vector_store_sq", "ivf_sq", "ivf_pq"):
+        calls.clear()
+        assert rescore_paths[path](queries).count() == 9, path
+        assert calls == [("qid", "qvec")], (path, calls)
 
 
 def _bad_queries(spark, case):
@@ -517,10 +564,15 @@ def _bad_queries(spark, case):
         vecs = [good, good[:63]]
     else:  # wrong dimension: a consistent batch of another width
         vecs = [[0.5] * 32, [0.5] * 32]
-    return spark.createDataFrame(
-        [(40, vecs[0], 1), (41, vecs[1], 1)],
-        "qid long, qvec array<double>, label int",
-    )
+    # built from Arrow, a LocalRelation: collecting it runs no Spark job,
+    # which keeps these 50 cases cheap
+    import pyarrow as pa
+
+    return spark.createDataFrame(pa.table({
+        "qid": pa.array([40, 41], pa.int64()),
+        "qvec": pa.array(vecs, pa.list_(pa.float64())),
+        "label": pa.array([1, 1], pa.int32()),
+    }))
 
 
 @pytest.mark.parametrize("case,match", [
@@ -532,6 +584,7 @@ def _bad_queries(spark, case):
 ])
 @pytest.mark.parametrize("path", [
     "knn", "knn_pruned", "filtered_knn", "vector_store_exact", "ivf_store",
+    "vector_store_sq", "vector_store_bq", "ivf_sq", "ivf_pq", "ivf_bq",
 ])
 def test_bad_query_vectors_raise_value_error(spark, rescore_paths, path, case, match):
     """Non-finite, ragged and wrong-dimension queries fail fast with a

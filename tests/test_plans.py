@@ -55,16 +55,11 @@ def test_knn_expr_broadcasts_query_side(spark, corpus, qs):
 def test_pruned_knn_has_partition_filters(spark, corpus, qs, tmp_path):
     store = VectorStore(str(tmp_path / "store"))
     store.write(corpus)
-    # arrow impl: pruning via the isin predicate; queries ride an
-    # SparkContext broadcast variable (not a join), so no BroadcastExchange
+    # pruning via the isin predicate; queries ride an SparkContext
+    # broadcast variable (not a join), so no BroadcastExchange
     df = store.knn(spark, qs, k=5)
     pf = scan_partition_filters(df)
     assert pf and any("shard_id" in f for f in pf), pf
-    # expr impl keeps the broadcast-join form
-    df_expr = store.knn(spark, qs, k=5, impl="expr")
-    pf_expr = scan_partition_filters(df_expr)
-    assert pf_expr and any("shard_id" in f for f in pf_expr), pf_expr
-    assert has_broadcast(df_expr)
 
 
 def test_ivf_exact_probe_still_prunes_by_cell(spark, corpus, qs, tmp_path):
