@@ -5,7 +5,7 @@
 # bench: the BENCH contract at $SPARK_GRAFT_SF_DIR (default sf0.1) — run on
 #        an idle machine; concurrent Spark work inflates timings ~2.7x
 
-.PHONY: smoke check bench test exact scale bpe-vocab
+.PHONY: smoke check bench test exact scale bpe-vocab stores
 
 # opt-in scale probe (not a driver contract): 500k synthetic vectors +
 # 200k synthetic docs; run on an idle machine
@@ -19,6 +19,14 @@ bpe-vocab:
 
 smoke:
 	python -m pytest tests/test_smoke.py -q
+
+# the store commit-protocol modules (sources/tombstones.GenerationalStore
+# and the five stores on it): a fast gate for protocol changes
+stores:
+	python -m pytest -q tests/test_crash_replay.py tests/test_store_contracts.py \
+		tests/test_store.py tests/test_ivf_store.py tests/test_sig_store.py \
+		tests/test_text_index.py tests/test_tokenizer_store.py \
+		tests/test_snapshot.py tests/test_streaming.py
 
 # bit-level oracle comparison of every gated query (the strictest form
 # of the driver's sha256-of-CSV hash check); also runs inside `check`

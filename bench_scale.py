@@ -404,12 +404,12 @@ def main() -> None:
         .select((F.col("vec_id") + F.lit(n_rows)).alias("vec_id"), "embedding")
     )
     n_batch = crash_batch.count()
-    with open(crash_store._lsh_config_path) as f:
+    with open(crash_store._sidecar_path) as f:
         cfg_before = _json.load(f)
     crash_store.append(crash_batch, validate_dim=False)
     committed_gen = crash_store.current_gen()
     cfg_before["pending_gen"] = committed_gen
-    with open(crash_store._lsh_config_path, "w") as f:
+    with open(crash_store._sidecar_path, "w") as f:
         _json.dump(cfg_before, f)
 
     timings["crash_raw_scan"] = timed_min(
@@ -446,11 +446,11 @@ def main() -> None:
     crash_batch2 = crash_batch.select(
         (F.col("vec_id") + F.lit(n_rows)).alias("vec_id"), "embedding"
     )
-    with open(crash_store._lsh_config_path) as f:
+    with open(crash_store._sidecar_path) as f:
         cfg_before = _json.load(f)
     crash_store.append(crash_batch2, validate_dim=False)
     cfg_before["pending_gen"] = crash_store.current_gen()
-    with open(crash_store._lsh_config_path, "w") as f:
+    with open(crash_store._sidecar_path, "w") as f:
         _json.dump(cfg_before, f)
     lock = crash_store.path.rstrip("/") + "__writer.lock"
     with open(lock, "w") as f:

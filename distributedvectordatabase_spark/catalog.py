@@ -1967,13 +1967,13 @@ def _hybrid_serve_stores(spark: SparkSession, sf_dir: str):
     from distributedvectordatabase_spark.sources.vector_store import VectorStore
 
     vs = VectorStore(_gate_tmp_path("dvdb_hybrid_gate_vs", sf_dir))
-    if not os.path.exists(vs._lsh_config_path):
+    if not os.path.exists(vs._sidecar_path):
         vs.write(load_table(spark, "embeddings", sf_dir))
     ix = TextIndex(
         _gate_tmp_path("dvdb_hybrid_gate_ix", sf_dir, table="documents"),
         n_buckets=8,
     )
-    if not os.path.exists(ix._stats_path):
+    if not os.path.exists(ix._sidecar_path):
         ix.build(load_table(spark, "documents", sf_dir))
     return vs, ix
 
@@ -3824,7 +3824,7 @@ def _run_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from distributedvectordatabase_spark.sources.tables import load_table, queries_fixture
 
     store = _ivf_gate_store(sf_dir)
-    if not os.path.exists(store._centroid_path):
+    if not os.path.exists(store._sidecar_path):
         store.build(load_table(spark, "embeddings", sf_dir))
     queries = queries_fixture(spark, sf_dir, n=N_QUERIES)
     return store.knn(spark, queries, k=KNN_K, n_probe=4)
@@ -3846,7 +3846,7 @@ def _run_ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     store = _ivf_gate_store(sf_dir)
     corpus = load_table(spark, "embeddings", sf_dir)
-    if not os.path.exists(store._centroid_path):
+    if not os.path.exists(store._sidecar_path):
         store.build(corpus)
     queries = queries_fixture(spark, sf_dir, n=N_QUERIES)
     exact = knn(corpus, queries, k=KNN_K).select("qid", "neighbor_id").cache()
@@ -3897,7 +3897,7 @@ def _run_ann_ivf_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     from distributedvectordatabase_spark.sources.tables import load_table, queries_fixture
 
     store = _ivf_gate_store(sf_dir)
-    if not os.path.exists(store._centroid_path):
+    if not os.path.exists(store._sidecar_path):
         store.build(load_table(spark, "embeddings", sf_dir))
     queries = queries_fixture(spark, sf_dir, n=N_QUERIES)
     return store.knn(

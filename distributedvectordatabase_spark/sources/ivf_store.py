@@ -16,6 +16,8 @@ phases the way the reference separates index build from search
 
 Append ingest assigns new rows to the *existing* centroids (no refit),
 matching standard IVF semantics; periodic rebuild is a caller policy.
+Append, delete and compact follow ``tombstones.GenerationalStore``'s
+commit protocol over the ``_centroids.json`` sidecar.
 """
 
 from __future__ import annotations
@@ -28,9 +30,11 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from distributedvectordatabase_spark.sources.tombstones import (
+    StreamedStore,
     atomic_dump_json,
     locked_writer,
 )
+from distributedvectordatabase_spark.sources.vector_store import VectorTable
 
 from distributedvectordatabase_spark.operators.knn import (
     QueryBatch,
@@ -39,7 +43,9 @@ from distributedvectordatabase_spark.operators.knn import (
 )
 
 
-class IVFStore:
+class IVFStore(VectorTable, StreamedStore):
+    _SIDECAR = "_centroids.json"
+
     def __init__(
         self,
         path: str,
@@ -54,11 +60,7 @@ class IVFStore:
         # n_cells / meta_cols are authoritative (same reopen contract
         # as VectorStore/_lsh.json); an explicit argument wins for
         # builds
-        side: dict = {}
-        cpath = os.path.join(path, "_centroids.json")
-        if os.path.exists(cpath):
-            with open(cpath) as f:
-                side = json.load(f)
+        side = self._config()
         self.n_cells = int(side["n_cells"]) if n_cells is None and side else (n_cells or 16)
         self.meta_cols = (
             tuple(side.get("meta_cols", ())) if meta_cols is None else tuple(meta_cols)
@@ -66,40 +68,6 @@ class IVFStore:
         self.seed = seed
         self.id_col = id_col
         self.vec_col = vec_col
-
-    @property
-    def _centroid_path(self) -> str:
-        return os.path.join(self.path, "_centroids.json")
-
-    @property
-    def _tombstone_path(self) -> str:
-        return os.path.join(self.path, "_tombstones")
-
-    def _gen(self) -> int:
-        """Last persisted (committed) write/delete generation (see
-        sources/tombstones.py for the ordering contract)."""
-        if os.path.exists(self._centroid_path):
-            with open(self._centroid_path) as f:
-                return int(json.load(f).get("gen", 0))
-        return 0
-
-    def _aborted_gens(self) -> tuple:
-        """Gens burned by crashed appends (tombstones.heal_pending) —
-        their orphan rows are filtered from every read and reclaimed
-        physically by compact()."""
-        if os.path.exists(self._centroid_path):
-            with open(self._centroid_path) as f:
-                return tuple(json.load(f).get("aborted_gens", ()))
-        return ()
-
-    def ingest_batch(self) -> int:
-        """Last streaming batch id whose append COMMITTED (recorded by
-        the same sidecar dump that bumps gen — stream_ivf_ingest's
-        exactly-once marker). -1 if the store never streamed."""
-        if os.path.exists(self._centroid_path):
-            with open(self._centroid_path) as f:
-                return int(json.load(f).get("ingest_batch", -1))
-        return -1
 
     # underscore-prefixed entries are invisible to spark.read.parquet
     # on self.path, so the compressed table and its codebook can live
@@ -182,8 +150,7 @@ class IVFStore:
         radii = self._cell_radii_of(
             df.sparkSession.read.parquet(self.path), np.array(centers, dtype=np.float64)
         )
-        atomic_dump_json(
-            self._centroid_path,
+        self._dump(
             {"n_cells": self.n_cells, "seed": self.seed, "centers": centers,
              "gen": 1, "meta_cols": list(self.meta_cols), "radii": radii},
         )
@@ -217,8 +184,7 @@ class IVFStore:
         existed — filtered search then falls back to fill-to-k).
         Deletes only shrink cells, so a stale radius stays a valid
         upper bound; appends extend it exactly (see append)."""
-        with open(self._centroid_path) as f:
-            side = json.load(f)
+        side = self._config()
         return np.array(side["radii"], dtype=np.float64) if "radii" in side else None
 
     def _split_oversized(
@@ -286,8 +252,7 @@ class IVFStore:
         return assigned, centers
 
     def centroids(self) -> np.ndarray:
-        with open(self._centroid_path) as f:
-            return np.array(json.load(f)["centers"], dtype=np.float64)
+        return np.array(self._config()["centers"], dtype=np.float64)
 
     # -- balance audit -------------------------------------------------------
 
@@ -314,23 +279,15 @@ class IVFStore:
         append — the nearest-centroid math runs as a pandas_udf batch
         matmul, no shuffle beyond the partitioned write.
 
-        Crash-atomic (tombstones.heal_pending two-phase protocol): the
-        sidecar persists a ``pending_gen`` intent before any data job
-        runs, and the final sidecar dump — one file write — commits the
-        gen, clears the intent, and (for ``stream_ivf_ingest``) records
-        ``ingest_batch`` in the same dump, so "batch committed" and
-        "rows visible" are literally the same event. A crash anywhere
-        in between leaves the orphan rows above the committed horizon
-        (invisible to every read via filter_committed); the next writer
-        heals the intent into ``aborted_gens`` and the replay lands
-        under a fresh gen. ``compact()`` reclaims aborted rows
-        physically."""
+        Crash-atomic (the GenerationalStore two-phase protocol): a
+        write intent persists before any data job runs, and one final
+        sidecar dump commits the gen together with (for
+        ``stream_ivf_ingest``) the ``ingest_batch`` marker. A crash
+        anywhere in between leaves the orphan rows — raw and codes —
+        invisible to every read until the next writer heals them; the
+        replay lands under a fresh gen. ``compact()`` reclaims aborted
+        rows physically."""
         from pyspark.sql.functions import pandas_udf
-
-        from distributedvectordatabase_spark.sources.tombstones import (
-            heal_pending,
-            next_gen,
-        )
 
         C = self.centroids()
 
@@ -340,21 +297,13 @@ class IVFStore:
             d2 = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
             return pd.Series(d2.argmin(axis=1), dtype="int32")
 
-        if os.path.exists(self._centroid_path):
-            raw_cols = df.sparkSession.read.parquet(self.path).columns
-            if "_gen" not in raw_cols:
-                raise ValueError(
-                    "store predates delete support (no _gen column); run "
-                    "compact(spark) once to upgrade before appending"
-                )
-        with open(self._centroid_path) as f:
-            side = json.load(f)
-        side = heal_pending(side)
-        gen = next_gen(side)
-        # phase 1: persist the write intent BEFORE any data job — a
-        # crash from here on leaves rows that no read will ever see
-        side["pending_gen"] = gen
-        atomic_dump_json(self._centroid_path, side)
+        raw_cols = df.sparkSession.read.parquet(self.path).columns
+        if "_gen" not in raw_cols:
+            raise ValueError(
+                "store predates delete support (no _gen column); run "
+                "compact(spark) once to upgrade before appending"
+            )
+        gen = self._begin_append()
         out = df.select(self.id_col, self.vec_col, *self.meta_cols).withColumn(
             "cell_id", nearest_cell(F.col(self.vec_col))
         ).withColumn("_gen", F.lit(gen))
@@ -375,11 +324,9 @@ class IVFStore:
             # would leave radii too SMALL — and wrongly prune cells
             # holding the new rows
             batch = self._cell_radii_of(out, self.centroids())
-            merged = [max(a, b) for a, b in zip(old_radii.tolist(), batch)]
-            with open(self._centroid_path) as f:
-                side = json.load(f)
-            side["radii"] = merged
-            atomic_dump_json(self._centroid_path, side)
+            side = self._config()
+            side["radii"] = [max(a, b) for a, b in zip(old_radii.tolist(), batch)]
+            self._dump(side)
         out.write.mode("append").partitionBy("cell_id").parquet(self.path)
         # keep the IVFPQ codes table in sync: new rows are encoded with
         # the EXISTING codebook (standard IVFPQ ingest — codes are only
@@ -430,16 +377,7 @@ class IVFStore:
                 )
         finally:
             out.unpersist()
-        # phase 2 — THE commit: one sidecar dump bumps gen, clears the
-        # intent, and stamps the ingest batch id; rows become visible
-        # and the streaming marker advances in the same file write
-        with open(self._centroid_path) as f:
-            side = json.load(f)
-        side["gen"] = int(gen)
-        side["pending_gen"] = None
-        if ingest_batch is not None:
-            side["ingest_batch"] = int(ingest_batch)
-        atomic_dump_json(self._centroid_path, side)
+        self._commit(gen, ingest_batch)
 
     @locked_writer
     def compact(
@@ -451,8 +389,8 @@ class IVFStore:
     ) -> None:
         """Rewrite each cell into ``files_per_cell`` files. Appends leave
         one file per (batch, writer task); compaction restores the
-        build-time layout. Same crash-safety as VectorStore.compact:
-        the new copy is complete before the old one is removed.
+        build-time layout. The new copy is complete before the old
+        one is removed (``GenerationalStore._compaction``).
 
         ``split_threshold=t`` rebalances while it rewrites (r7, VERDICT
         r6 #5): ``build(split_threshold=)`` bounds hot cells at build
@@ -471,9 +409,7 @@ class IVFStore:
         stay pinned equal to exact — asserted in tests."""
         import shutil
 
-        tmp = self.path.rstrip("/") + "__compacting"
-        with open(self._centroid_path) as f:
-            side = json.load(f)
+        side = self._config()
         live = self._read_live(spark)
         if split_threshold is not None:
             live, centers = self._split_oversized(
@@ -484,97 +420,89 @@ class IVFStore:
             side["centers"] = centers
             side["n_cells"] = self.n_cells
         spread = (F.abs(F.hash(self.id_col)) % files_per_cell).alias("_spread")
-        (
-            live
-            .repartition(self.n_cells * files_per_cell, F.col("cell_id"), spread)
-            .write.mode("overwrite")
-            .partitionBy("cell_id")
-            .parquet(tmp)
-        )
-        if split_threshold is not None and "radii" in side:
-            # cells changed: exact radii over the final layout (the
-            # no-split path keeps the old radii — deletes only shrink
-            # cells, so they remain valid upper bounds for free)
-            side["radii"] = self._cell_radii_of(
-                spark.read.parquet(tmp),
-                np.array(side["centers"], dtype=np.float64),
+        with self._compaction(side) as tmp:
+            (
+                live
+                .repartition(self.n_cells * files_per_cell, F.col("cell_id"), spread)
+                .write.mode("overwrite")
+                .partitionBy("cell_id")
+                .parquet(tmp)
             )
-        # the centroid sidecar lives inside the store dir — carry it
-        # over, along with the IVFPQ sidecars if built. Tombstones are
-        # NOT carried: this rewrite folds them into both tables (live
-        # codes rewritten below), so the swap is the physical delete.
-        # Aborted/pending gens clear too — the live rewrite just
-        # dropped their orphan rows physically.
-        side["aborted_gens"] = []
-        side["pending_gen"] = None
-        atomic_dump_json(os.path.join(tmp, os.path.basename(self._centroid_path)), side)
-        rebal = live if split_threshold is not None else None
-        if os.path.exists(self._pq_path):
-            if rebal is not None:
-                from distributedvectordatabase_spark.operators.pq import pq_encode
-
-                C = np.array(side["centers"], dtype=np.float64)
-                codes = pq_encode(
-                    rebal, self.pq_codebook(), id_col=self.id_col,
-                    vec_col=self.vec_col, keep_cols=("cell_id", "_gen"),
-                    cell_centroids=C if self.pq_is_residual() else None,
-                    rotation=self.pq_rotation(),
+            if split_threshold is not None and "radii" in side:
+                # cells changed: exact radii over the final layout (the
+                # no-split path keeps the old radii — deletes only shrink
+                # cells, so they remain valid upper bounds for free)
+                side["radii"] = self._cell_radii_of(
+                    spark.read.parquet(tmp),
+                    np.array(side["centers"], dtype=np.float64),
                 )
-            else:
-                codes = self._codes_live(spark)
-            (
-                codes.write.mode("overwrite")
-                .partitionBy("cell_id")
-                .parquet(os.path.join(tmp, os.path.basename(self._pq_path)))
-            )
-        if os.path.exists(self._pq_codebook_path):
-            shutil.copy(
-                self._pq_codebook_path,
-                os.path.join(tmp, os.path.basename(self._pq_codebook_path)),
-            )
-        if os.path.exists(self._sq_params_path):
-            if rebal is not None:
-                from distributedvectordatabase_spark.operators.sq import sq_encode
+            # the codes tables are rewritten live below, folding the
+            # tombstones into every table the swap replaces
+            rebal = live if split_threshold is not None else None
+            if os.path.exists(self._pq_path):
+                if rebal is not None:
+                    from distributedvectordatabase_spark.operators.pq import pq_encode
 
-                codes = sq_encode(
-                    rebal, self.sq_params(), id_col=self.id_col,
-                    vec_col=self.vec_col, keep_cols=("cell_id", "_gen"),
+                    C = np.array(side["centers"], dtype=np.float64)
+                    codes = pq_encode(
+                        rebal, self.pq_codebook(), id_col=self.id_col,
+                        vec_col=self.vec_col, keep_cols=("cell_id", "_gen"),
+                        cell_centroids=C if self.pq_is_residual() else None,
+                        rotation=self.pq_rotation(),
+                    )
+                else:
+                    codes = self._codes(spark, self._pq_path)
+                (
+                    codes.write.mode("overwrite")
+                    .partitionBy("cell_id")
+                    .parquet(os.path.join(tmp, os.path.basename(self._pq_path)))
                 )
-            else:
-                codes = self._sq_codes_live(spark)
-            (
-                codes.write.mode("overwrite")
-                .partitionBy("cell_id")
-                .parquet(os.path.join(tmp, os.path.basename(self._sq_path)))
-            )
-            shutil.copy(
-                self._sq_params_path,
-                os.path.join(tmp, os.path.basename(self._sq_params_path)),
-            )
-        if os.path.exists(self._bq_params_path):
-            if rebal is not None:
-                from distributedvectordatabase_spark.operators.bq import bq_encode
+            if os.path.exists(self._pq_codebook_path):
+                shutil.copy(
+                    self._pq_codebook_path,
+                    os.path.join(tmp, os.path.basename(self._pq_codebook_path)),
+                )
+            if os.path.exists(self._sq_params_path):
+                if rebal is not None:
+                    from distributedvectordatabase_spark.operators.sq import sq_encode
 
-                with open(self._bq_params_path) as f:
-                    bside = json.load(f)
-                codes = bq_encode(
-                    rebal, int(bside["dim"]), vec_col=self.vec_col,
-                    n_bits=bside.get("n_bits"),
-                    seed=int(bside.get("seed", 42)),
-                ).select(self.id_col, "bq_code", "cell_id", "_gen")
-            else:
-                codes = self._bq_codes_live(spark)
-            (
-                codes.write.mode("overwrite")
-                .partitionBy("cell_id")
-                .parquet(os.path.join(tmp, os.path.basename(self._bq_path)))
-            )
-            shutil.copy(
-                self._bq_params_path,
-                os.path.join(tmp, os.path.basename(self._bq_params_path)),
-            )
-        shutil.rmtree(self.path)
-        shutil.move(tmp, self.path)
+                    codes = sq_encode(
+                        rebal, self.sq_params(), id_col=self.id_col,
+                        vec_col=self.vec_col, keep_cols=("cell_id", "_gen"),
+                    )
+                else:
+                    codes = self._codes(spark, self._sq_path)
+                (
+                    codes.write.mode("overwrite")
+                    .partitionBy("cell_id")
+                    .parquet(os.path.join(tmp, os.path.basename(self._sq_path)))
+                )
+                shutil.copy(
+                    self._sq_params_path,
+                    os.path.join(tmp, os.path.basename(self._sq_params_path)),
+                )
+            if os.path.exists(self._bq_params_path):
+                if rebal is not None:
+                    from distributedvectordatabase_spark.operators.bq import bq_encode
+
+                    with open(self._bq_params_path) as f:
+                        bside = json.load(f)
+                    codes = bq_encode(
+                        rebal, int(bside["dim"]), vec_col=self.vec_col,
+                        n_bits=bside.get("n_bits"),
+                        seed=int(bside.get("seed", 42)),
+                    ).select(self.id_col, "bq_code", "cell_id", "_gen")
+                else:
+                    codes = self._codes(spark, self._bq_path)
+                (
+                    codes.write.mode("overwrite")
+                    .partitionBy("cell_id")
+                    .parquet(os.path.join(tmp, os.path.basename(self._bq_path)))
+                )
+                shutil.copy(
+                    self._bq_params_path,
+                    os.path.join(tmp, os.path.basename(self._bq_params_path)),
+                )
 
     # -- IVFPQ ---------------------------------------------------------------
 
@@ -725,7 +653,7 @@ class IVFStore:
             return SQParams.from_dict(json.load(f))
 
     def _sq_codes_live(self, spark: SparkSession) -> DataFrame:
-        return self._any_codes(spark, self._sq_path)
+        return self._codes(spark, self._sq_path)
 
     def knn_sq(
         self,
@@ -860,9 +788,6 @@ class IVFStore:
              "built_gen": self._gen()},
         )
 
-    def _bq_codes_live(self, spark: SparkSession) -> DataFrame:
-        return self._any_codes(spark, self._bq_path)
-
     def knn_bq(
         self,
         spark: SparkSession,
@@ -911,55 +836,7 @@ class IVFStore:
             shard_map=cand_map, shard_col="cell_id",
         )
 
-    # -- delete / upsert -----------------------------------------------------
-
-    @locked_writer
-    def delete(self, spark: SparkSession, ids) -> None:
-        """Merge-on-read delete (same mechanics as VectorStore.delete —
-        see sources/tombstones.py): tombstones filter BOTH the raw
-        table and the PQ codes table, so ADC shortlists never spend
-        slots on dead ids and ``rerank=0`` results stay correct.
-        ``compact()`` folds both tables physically."""
-        from distributedvectordatabase_spark.sources.tombstones import (
-            append_tombstones,
-            heal_pending,
-            next_gen,
-        )
-
-        with open(self._centroid_path) as f:
-            side = json.load(f)
-        # heal any crashed append first: its orphan rows must move to
-        # aborted_gens BEFORE this delete bumps the committed horizon
-        # past them, or they would surface as committed rows
-        side = heal_pending(side)
-        gen = next_gen(side)
-        side["gen"] = int(gen)  # gen durable BEFORE its tombstones exist
-        atomic_dump_json(self._centroid_path, side)
-        append_tombstones(spark, self._tombstone_path, self.id_col, ids, gen)
-
-    @locked_writer
-    def delete_where(self, spark: SparkSession, predicate) -> int:
-        """Predicate delete (VectorStore.delete_where parity — r7):
-        tombstone every LIVE row matching ``predicate`` (a Column or a
-        SQL string), typically over the co-located metadata columns
-        (``build(meta_cols=...)``) — retention sweeps and policy
-        take-downs by attribute, not id list. Returns the number of
-        ids tombstoned. One scan to find the ids; the delete itself
-        stays O(deleted)."""
-        cond = F.expr(predicate) if isinstance(predicate, str) else predicate
-        # pin the matching ids BEFORE tombstoning: the tombstone write
-        # must not re-execute a plan that reads the tombstone dir it
-        # is appending to (self-referential read-under-write)
-        ids = (
-            self.read(spark)
-            .filter(cond)
-            .select(self.id_col)
-            .localCheckpoint(eager=True)
-        )
-        n = ids.count()
-        if n:
-            self.delete(spark, ids)
-        return n
+    # -- upsert --------------------------------------------------------------
 
     @locked_writer
     def upsert(self, df: DataFrame) -> None:
@@ -971,64 +848,8 @@ class IVFStore:
 
     # -- query ---------------------------------------------------------------
 
-    def _committed(self, df: DataFrame) -> DataFrame:
-        """Scan-level commit filter: rows above the persisted gen
-        (in-flight or crashed append) and aborted-gen orphans are
-        invisible — both literal pushdown predicates, applied under
-        every read BEFORE the tombstone anti-join."""
-        from distributedvectordatabase_spark.sources.tombstones import (
-            filter_committed,
-        )
-
-        return filter_committed(df, self._gen(), self._aborted_gens())
-
-    def _read_live(self, spark: SparkSession) -> DataFrame:
-        from distributedvectordatabase_spark.sources.tombstones import filter_live
-
-        from distributedvectordatabase_spark.sources.scan_cache import cached_parquet
-
-        return filter_live(
-            spark, self._committed(cached_parquet(spark, self.path)),
-            self._tombstone_path, self.id_col,
-        )
-
     def _codes_live(self, spark: SparkSession) -> DataFrame:
-        return self._any_codes(spark, self._pq_path)
-
-    def _any_codes(
-        self, spark: SparkSession, path: str, as_of_gen: int | None = None
-    ) -> DataFrame:
-        """Shared codes-table read for the PQ/SQ/BQ sidecars: committed
-        rows, tombstone-filtered live or reconstructed as-of (codes
-        rows carry the raw rows' ``_gen`` — build keeps it, append
-        syncs it inline)."""
-        from distributedvectordatabase_spark.sources.tombstones import (
-            filter_as_of,
-            filter_live,
-        )
-
-        from distributedvectordatabase_spark.sources.scan_cache import cached_parquet
-
-        df = self._committed(cached_parquet(spark, path))
-        if as_of_gen is None:
-            return filter_live(spark, df, self._tombstone_path, self.id_col)
-        return filter_as_of(
-            spark, df, self._tombstone_path, self.id_col, as_of_gen
-        )
-
-    def _allowed_ids(
-        self, spark: SparkSession, where: str, as_of_gen: int | None
-    ) -> DataFrame:
-        """(id) rows matching a metadata predicate — one pass over the
-        raw table (predicate + id column pushed; ``build(meta_cols=)``
-        co-locates the metadata), semi-joined into a compressed codes
-        scan BEFORE its shortlist (the bm25_batch(allowed_ids=)
-        hard-constraint contract)."""
-        return (
-            self.read(spark, as_of_gen=as_of_gen)
-            .filter(where)
-            .select(self.id_col)
-        )
+        return self._codes(spark, self._pq_path)
 
     def _check_codes_snapshot(self, side_path: str, as_of_gen: int | None,
                               what: str) -> None:
@@ -1077,7 +898,7 @@ class IVFStore:
         batch = query_batch(queries, qid_col, qvec_col, C.shape[1])
         cand_map, probed, _, _ = self._probe(batch, n_probe, C)
         in_probed = F.col("cell_id").isin(probed)
-        codes = self._any_codes(spark, path, as_of_gen).drop("_gen").filter(in_probed)
+        codes = self._codes(spark, path, as_of_gen).drop("_gen").filter(in_probed)
         if where is not None:
             codes = codes.join(
                 self._allowed_ids(spark, where, as_of_gen),
@@ -1085,29 +906,6 @@ class IVFStore:
             )
         corpus = self.read(spark, as_of_gen=as_of_gen).filter(in_probed)
         return codes, corpus, batch, cand_map, C
-
-    def current_gen(self) -> int:
-        """The store's persisted write/delete generation — pin it when
-        a training run starts and ``read(as_of_gen=...)`` reconstructs
-        exactly the corpus that run saw (see tombstones.filter_as_of
-        for the semantics and the compaction-bounded history caveat)."""
-        return self._gen()
-
-    def read(self, spark: SparkSession, as_of_gen: int | None = None) -> DataFrame:
-        if as_of_gen is None:
-            return self._read_live(spark).drop("_gen")
-        from distributedvectordatabase_spark.sources.tombstones import filter_as_of
-
-        # aborted gens were never committed at ANY point in history, so
-        # the snapshot excludes them regardless of as_of_gen
-        from distributedvectordatabase_spark.sources.scan_cache import cached_parquet
-
-        return filter_as_of(
-            spark,
-            self._committed(cached_parquet(spark, self.path)),
-            self._tombstone_path,
-            self.id_col, as_of_gen,
-        ).drop("_gen")
 
     def knn(
         self,

@@ -30,9 +30,9 @@ buckets; here band rows → band-key buckets):
 - **append**: new corpus rows band + tokenize into the same bucketed
   layout; after append, join_batch is indistinguishable from a fresh
   build over the union (same contract as TextIndex.append).
-- **delete / compact**: merge-on-read take-downs with the shared
-  (id, gen) tombstone mechanics of sources/tombstones.py — the same
-  scheme VectorStore/IVFStore use. A deleted document stops
+- **delete / compact**: merge-on-read take-downs through
+  ``tombstones.GenerationalStore`` over the ``_config.json`` sidecar.
+  A deleted document stops
   generating near-dup candidate pairs immediately (both the band
   rows and the verification token sets filter live), O(deleted)
   bytes written; ``compact()`` folds the tombstones in physically.
@@ -48,7 +48,6 @@ candidate pairs, never the corpus.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -61,16 +60,17 @@ from distributedvectordatabase_spark.operators.dedup import (
 )
 from distributedvectordatabase_spark.sources.tombstones import (
     GEN_COL,
-    append_tombstones,
-    atomic_dump_json,
-    filter_live,
+    StreamedStore,
     locked_writer,
 )
 
 __all__ = ["SigStore"]
 
 
-class SigStore:
+class SigStore(StreamedStore):
+    _SIDECAR = "_config.json"
+    _LISTS_INTENT_FIELDS = True
+
     def __init__(
         self,
         path: str,
@@ -84,7 +84,7 @@ class SigStore:
         self.rows = int(rows)
         self.shingle_n = shingle_n
         self.n_buckets = int(n_buckets)
-        if os.path.exists(self._config_path):
+        if os.path.exists(self._sidecar_path):
             self._adopt(self._config())
 
     @property
@@ -95,70 +95,13 @@ class SigStore:
     def _toks_path(self) -> str:
         return os.path.join(self.path, "toks")
 
-    @property
-    def _config_path(self) -> str:
-        return os.path.join(self.path, "_config.json")
-
-    @property
-    def _tombstone_path(self) -> str:
-        return os.path.join(self.path, "_tombstones")
-
-    def _config(self) -> dict:
-        with open(self._config_path) as f:
-            return json.load(f)
-
-    def _gen(self) -> int:
-        """Last persisted write/delete generation (0 for a new or
-        pre-generation store)."""
-        if os.path.exists(self._config_path):
-            return int(self._config().get("gen", 0))
-        return 0
-
-    def _write_config(self, gen: int, **extras) -> None:
-        """Persist the sidecar, PRESERVING commit-protocol fields
-        (pending_gen/aborted_gens/ingest_batch) unless overridden via
-        ``extras``."""
-        os.makedirs(self.path, exist_ok=True)
-        cfg = {}
-        if os.path.exists(self._config_path):
-            cfg = self._config()
-        cfg.update(
-            {
-                "bands": self.bands,
-                "rows": self.rows,
-                "shingle_n": self.shingle_n,
-                "n_buckets": self.n_buckets,
-                "gen": int(gen),
-            }
-        )
-        cfg.update(extras)
-        atomic_dump_json(self._config_path, cfg)
-
-    def _aborted_gens(self) -> tuple:
-        if os.path.exists(self._config_path):
-            return tuple(self._config().get("aborted_gens", ()))
-        return ()
-
-    def ingest_batch(self) -> int:
-        """Last streaming batch id whose build/append COMMITTED
-        (recorded by the same config dump that bumps gen —
-        stream_neardup_ingest's exactly-once marker). -1 if the store
-        never streamed."""
-        if os.path.exists(self._config_path):
-            return int(self._config().get("ingest_batch", -1))
-        return -1
-
-    def _committed(self, df: DataFrame) -> DataFrame:
-        """Scan-level commit filter (tombstones.filter_committed): rows
-        above the persisted gen (crashed/in-flight append) or in the
-        aborted list are invisible to every read."""
-        from distributedvectordatabase_spark.sources.tombstones import (
-            filter_committed,
-        )
-
-        if not os.path.exists(self._config_path):
-            return df
-        return filter_committed(df, self._gen(), self._aborted_gens())
+    def _config_fields(self) -> dict:
+        return {
+            "bands": self.bands,
+            "rows": self.rows,
+            "shingle_n": self.shingle_n,
+            "n_buckets": self.n_buckets,
+        }
 
     def _adopt(self, cfg: dict) -> None:
         """The persisted band/row/shingle/bucket parameters are the only
@@ -204,13 +147,15 @@ class SigStore:
         toks.withColumn("sz", F.size("toks")).withColumn(
             GEN_COL, F.lit(1)
         ).write.mode("overwrite").parquet(self._toks_path)
-        # write gen only AFTER the data lands (tombstones.py crash
-        # rule: a crashed build burns nothing — there is no config yet;
-        # the streaming batch id rides the same dump)
+        # write gen only AFTER the data lands (a crashed build burns
+        # nothing — there is no config yet; the streaming batch id
+        # rides the same dump)
+        cfg = self._config()
+        cfg.update(self._config_fields())
+        cfg["gen"] = 1
         if ingest_batch is not None:
-            self._write_config(gen=1, ingest_batch=int(ingest_batch))
-        else:
-            self._write_config(gen=1)
+            cfg["ingest_batch"] = int(ingest_batch)
+        self._dump(cfg)
 
     @locked_writer
     def append(
@@ -223,27 +168,14 @@ class SigStore:
         """Index additional corpus documents incrementally. Caller owns
         doc-id uniqueness (same contract as TextIndex.append).
 
-        Crash-atomic (tombstones.heal_pending two-phase protocol,
-        shared with TextIndex/IVFStore/VectorStore): a ``pending_gen``
-        intent persists before the data jobs; the final config dump —
-        one file write — commits the gen and (for
-        ``stream_neardup_ingest``) the ``ingest_batch`` marker
-        together. A crash mid-append leaves band/token orphans above
-        the committed horizon, invisible to every join; the next
-        writer heals them into ``aborted_gens``."""
-        from distributedvectordatabase_spark.sources.tombstones import (
-            heal_pending,
-            next_gen,
-        )
-
-        cfg = heal_pending(self._config())
-        self._adopt(cfg)
-        gen = next_gen(cfg)
-        # phase 1: the write intent, BEFORE any data job
-        self._write_config(
-            gen=self._gen(), pending_gen=gen,
-            aborted_gens=cfg.get("aborted_gens", []),
-        )
+        Crash-atomic (the GenerationalStore two-phase protocol): a
+        write intent persists before the data jobs; one final config
+        dump commits the gen and (for ``stream_neardup_ingest``) the
+        ``ingest_batch`` marker together. A crash mid-append leaves
+        band/token orphans invisible to every join until the next
+        writer heals them."""
+        self._adopt(self._config())
+        gen = self._begin_append()
         toks, banded = self._prepared(docs, id_col, text_col)
         (
             banded.withColumn(GEN_COL, F.lit(gen))
@@ -255,51 +187,16 @@ class SigStore:
         toks.withColumn("sz", F.size("toks")).withColumn(
             GEN_COL, F.lit(gen)
         ).write.mode("append").parquet(self._toks_path)
-        # phase 2 — THE commit: gen and the ingest marker in one dump
-        if ingest_batch is not None:
-            self._write_config(
-                gen=gen, pending_gen=None, ingest_batch=int(ingest_batch)
-            )
-        else:
-            self._write_config(gen=gen, pending_gen=None)
+        self._commit(gen, ingest_batch)
 
     # -- delete / compact ---------------------------------------------------
-
-    @locked_writer
-    def delete(self, spark: SparkSession, ids) -> None:
-        """Merge-on-read take-down: hide every current corpus document
-        whose id is in ``ids`` (list/iterable or one-column DataFrame)
-        from BOTH persisted tables — it stops generating near-dup
-        candidate pairs immediately. O(deleted) bytes written;
-        ``compact()`` reclaims the space. Documents appended AFTER the
-        delete are untouched (strict ``row._gen > tombstone gen``
-        survival, shared with VectorStore.delete)."""
-        from distributedvectordatabase_spark.sources.tombstones import (
-            heal_pending,
-            next_gen,
-        )
-
-        cfg = heal_pending(self._config())
-        self._adopt(cfg)
-        gen = next_gen(cfg)
-        # gen persists BEFORE the tombstones exist (tombstones.py crash
-        # rule: a burned gen is harmless; the reverse order could hand
-        # a later append the tombstone's gen and wrongly kill its rows).
-        # A crashed append's orphans are healed into aborted_gens FIRST,
-        # or bumping the horizon past them would surface them.
-        self._write_config(
-            gen=gen, pending_gen=cfg.get("pending_gen"),
-            aborted_gens=cfg.get("aborted_gens", []),
-        )
-        append_tombstones(spark, self._tombstone_path, "doc_id", ids, gen)
 
     @locked_writer
     def compact(self, spark: SparkSession) -> None:
         """Fold tombstones in physically: rewrite only live band/token
         rows (keeping their ``_gen``), then swap — the new copy is
         fully materialized in a sibling directory before the old one
-        is removed, so a failed compaction never loses the store (same
-        pattern as VectorStore.compact).
+        is removed, so a failed compaction never loses the store.
 
         Since r7 the ``stream_neardup_ingest`` committed-batch marker
         rides the config sidecar (``ingest_batch``), which the rewrite
@@ -308,50 +205,18 @@ class SigStore:
         batch. (Pre-r7 stores kept the marker in a separate
         ``_ingest_marker.json``, which compaction dropped — the
         streaming reader still honors that legacy file as a floor.)"""
-        import shutil
-
         self._adopt(self._config())
-        tmp = self.path.rstrip("/") + "__compacting"
-        (
-            self._bands_live(spark)
-            .repartition("bucket")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(os.path.join(tmp, "bands"))
-        )
-        self._toks_live(spark).write.mode("overwrite").parquet(
-            os.path.join(tmp, "toks")
-        )
-        # config rides the swap (the tmp copy is complete before the
-        # old directory goes away; tombstones are NOT carried — the
-        # swap is the physical delete). Aborted/pending clear — the
-        # live rewrite above dropped their orphan rows physically.
-        cfg = self._config()
-        cfg["aborted_gens"] = []
-        cfg["pending_gen"] = None
-        atomic_dump_json(os.path.join(tmp, "_config.json"), cfg)
-        shutil.rmtree(self.path)
-        shutil.move(tmp, self.path)
-
-    def _bands_live(self, spark: SparkSession) -> DataFrame:
-        return filter_live(
-            spark, self._committed(self.corpus_bands(spark)),
-            self._tombstone_path, "doc_id",
-        )
-
-    def _toks_live(self, spark: SparkSession) -> DataFrame:
-        return filter_live(
-            spark, self._committed(self.corpus_toks(spark)),
-            self._tombstone_path, "doc_id",
-        )
-
-    def current_gen(self) -> int:
-        """The store's persisted write/delete generation — pin it when
-        a curation run starts and ``join_batch(..., as_of_gen=...)``
-        collides against exactly the corpus that run saw
-        (tombstones.filter_as_of semantics; compact() truncates
-        history, VACUUM-style)."""
-        return self._gen()
+        with self._compaction() as tmp:
+            (
+                self._visible(spark, self.corpus_bands(spark))
+                .repartition("bucket")
+                .write.mode("overwrite")
+                .partitionBy("bucket")
+                .parquet(os.path.join(tmp, "bands"))
+            )
+            self._visible(spark, self.corpus_toks(spark)).write.mode(
+                "overwrite"
+            ).parquet(os.path.join(tmp, "toks"))
 
     def corpus_bands(self, spark: SparkSession) -> DataFrame:
         return spark.read.parquet(self._bands_path)
@@ -382,21 +247,8 @@ class SigStore:
         curation audits — "what would this batch have deduped against
         last week's corpus" stays answerable through later
         appends/deletes."""
-        from distributedvectordatabase_spark.sources.tombstones import (
-            filter_as_of,
-        )
-
         spark = new_docs.sparkSession
         self._adopt(self._config())
-
-        def _visible(df: DataFrame) -> DataFrame:
-            df = self._committed(df)
-            if as_of_gen is None:
-                return filter_live(spark, df, self._tombstone_path, "doc_id")
-            return filter_as_of(
-                spark, df, self._tombstone_path, "doc_id", int(as_of_gen)
-            )
-
         new_toks, new_banded = self._prepared(new_docs, id_col, text_col)
         new_banded = new_banded.cache()
 
@@ -407,8 +259,10 @@ class SigStore:
         )
         # bucket pruning applies UNDER the tombstone anti-filter, so
         # the partition-pruned scan shape is unchanged by deletes
-        corpus_banded = _visible(
-            self.corpus_bands(spark).filter(F.col("bucket").isin(buckets))
+        corpus_banded = self._visible(
+            spark,
+            self.corpus_bands(spark).filter(F.col("bucket").isin(buckets)),
+            as_of_gen,
         ).drop(GEN_COL)
         cand = (
             new_banded.alias("n")
@@ -430,7 +284,7 @@ class SigStore:
             F.col("toks").alias("toks_a"),
             F.size("toks").alias("sz_a"),
         )
-        tb = _visible(self.corpus_toks(spark)).select(
+        tb = self._visible(spark, self.corpus_toks(spark), as_of_gen).select(
             F.col("doc_id").alias("corpus_id"),
             F.col("toks").alias("toks_b"),
             F.col("sz").alias("sz_b"),

@@ -28,8 +28,9 @@ dictionary-encoded terms); the build's only shuffle is the tf groupBy;
 queries shuffle O(matched docs) pre-aggregated rows.
 
 Take-downs (r6, parity with the vector stores): postings carry the
-shared (id, gen) merge-on-read generation of sources/tombstones.py;
-``delete()`` appends tombstones and scoring filters live, so a policy
+(id, gen) merge-on-read generation of ``tombstones.GenerationalStore``,
+whose sidecar here is ``_stats.json``; ``delete()`` appends tombstones
+and scoring filters live, so a policy
 take-down stops being served immediately — O(deleted) bytes written,
 ``compact()`` folds physically. BM25 needs EXACT live corpus stats
 (n_docs, avgdl feed every score), so the index persists a small
@@ -53,16 +54,16 @@ from pyspark.sql import functions as F
 from distributedvectordatabase_spark.functions import text as T
 from distributedvectordatabase_spark.sources.tombstones import (
     GEN_COL,
-    append_tombstones,
-    atomic_dump_json,
-    filter_live,
+    StreamedStore,
     locked_writer,
 )
 
 __all__ = ["TextIndex"]
 
 
-class TextIndex:
+class TextIndex(StreamedStore):
+    _SIDECAR = "_stats.json"
+
     def __init__(self, path: str, n_buckets: int = 32):
         self.path = path
         self.n_buckets = int(n_buckets)
@@ -74,14 +75,6 @@ class TextIndex:
     @property
     def _doclens_path(self) -> str:
         return os.path.join(self.path, "doclens")
-
-    @property
-    def _stats_path(self) -> str:
-        return os.path.join(self.path, "_stats.json")
-
-    @property
-    def _tombstone_path(self) -> str:
-        return os.path.join(self.path, "_tombstones")
 
     # ------------------------------------------------------------------
     @locked_writer
@@ -125,7 +118,6 @@ class TextIndex:
         base.select("doc_id", F.size("toks").alias("dl")).withColumn(
             GEN_COL, F.lit(1)
         ).write.mode("overwrite").parquet(self._doclens_path)
-        os.makedirs(self.path, exist_ok=True)
         st = {
             "n_docs": int(n_docs),
             "total_len": int(total_len or 0),
@@ -135,7 +127,7 @@ class TextIndex:
         }
         if ingest_batch is not None:
             st["ingest_batch"] = int(ingest_batch)
-        atomic_dump_json(self._stats_path, st)
+        self._dump(st)
 
     @locked_writer
     def append(
@@ -153,33 +145,25 @@ class TextIndex:
         build over the union (pinned by tests). Caller owns doc-id
         uniqueness (same contract as VectorStore.append).
 
-        Crash-atomic (tombstones.heal_pending two-phase protocol,
-        shared with IVFStore.append): a ``pending_gen`` intent persists
-        before the data jobs, and the final stats dump — one file
-        write — commits the gen, the n_docs/total_len increments, and
-        (for ``stream_text_index_ingest``) the ``ingest_batch`` marker
+        Crash-atomic (the GenerationalStore two-phase protocol): a
+        write intent persists before the data jobs, and one final stats
+        dump commits the gen, the n_docs/total_len increments, and (for
+        ``stream_text_index_ingest``) the ``ingest_batch`` marker
         together. A crash mid-append leaves postings/doclens orphans
-        above the committed horizon, invisible to every read; the next
-        writer heals them into ``aborted_gens`` and the replay commits
-        under a fresh gen, so served scores never see a double-counted
-        batch."""
-        from distributedvectordatabase_spark.sources.tombstones import (
-            heal_pending,
-            next_gen,
-        )
-
-        st = self._live_stats(docs.sparkSession)
+        invisible to every read until the next writer heals them; the
+        replay commits under a fresh gen, so served scores never see a
+        double-counted batch."""
+        spark = docs.sparkSession
+        st = self._live_stats(spark)
         n_buckets = self._persisted_buckets(st)
-        st = heal_pending(st)
-        gen = next_gen(st)
         if not os.path.exists(self._doclens_path):
             # upgrade a pre-r6 index before mixing in new rows: the
             # derived doclens of the EXISTING docs must land first, or
             # a later delete would see only post-upgrade docs
-            self._doclens(docs.sparkSession).write.parquet(self._doclens_path)
-        # phase 1: persist the write intent BEFORE any data job
-        st["pending_gen"] = gen
-        self._write_stats(st)
+            self._committed(self._doclens(spark)).write.parquet(
+                self._doclens_path
+            )
+        gen = self._begin_append()
         toks = F.expr(T.tokens(text_col, T.SPARK))
         base = docs.select(F.col(id_col).alias("doc_id"), toks.alias("toks"))
         n_new, len_new = base.agg(F.count("*"), F.sum(F.size("toks"))).first()
@@ -204,51 +188,20 @@ class TextIndex:
         base.select("doc_id", F.size("toks").alias("dl")).withColumn(
             GEN_COL, F.lit(gen)
         ).write.mode("append").parquet(self._doclens_path)
-        # phase 2 — THE commit: gen, stats increments, and the ingest
-        # marker land in one dump, only AFTER the data
-        st["n_docs"] = int(st["n_docs"]) + int(n_new)
-        st["total_len"] = int(st["total_len"]) + int(len_new or 0)
-        st["gen"] = gen
-        st["stats_gen"] = gen
-        st["pending_gen"] = None
-        if ingest_batch is not None:
-            st["ingest_batch"] = int(ingest_batch)
-        atomic_dump_json(self._stats_path, st)
+        self._commit(
+            gen, ingest_batch,
+            n_docs=int(st["n_docs"]) + int(n_new),
+            total_len=int(st["total_len"]) + int(len_new or 0),
+            stats_gen=gen,
+        )
 
     def stats(self) -> dict:
-        with open(self._stats_path) as f:
+        with open(self._sidecar_path) as f:
             return json.load(f)
 
-    def ingest_batch(self) -> int:
-        """Last streaming batch id whose build/append COMMITTED
-        (recorded by the same stats dump that bumps gen —
-        stream_text_index_ingest's exactly-once marker). -1 if the
-        index never streamed."""
-        if os.path.exists(self._stats_path):
-            return int(self.stats().get("ingest_batch", -1))
-        return -1
-
-    def _committed(self, df: DataFrame) -> DataFrame:
-        """Scan-level commit filter (tombstones.filter_committed): rows
-        above the persisted gen (crashed/in-flight append) or in the
-        aborted list are invisible to every read."""
-        from distributedvectordatabase_spark.sources.tombstones import (
-            filter_committed,
-        )
-
-        if not os.path.exists(self._stats_path):
-            return df
-        st = self.stats()
-        return filter_committed(
-            df, int(st.get("gen", 0)), st.get("aborted_gens", ())
-        )
-
-    def _write_stats(self, st: dict) -> None:
-        os.makedirs(self.path, exist_ok=True)
-        atomic_dump_json(self._stats_path, st)
-
     def _doclens(self, spark: SparkSession) -> DataFrame:
-        """(doc_id, dl, _gen) — one row per indexed document version.
+        """(doc_id, dl, _gen) — one row per indexed document version,
+        committed or not.
         Pre-r6 stores have no doclens table; derive it from the
         postings (dl rides every posting row) — one full scan, paid
         only on the delete/repair paths, never at query time.
@@ -266,16 +219,14 @@ class TextIndex:
                 cached_parquet,
             )
 
-            return self._committed(cached_parquet(spark, self._doclens_path))
+            return cached_parquet(spark, self._doclens_path)
         post = self.postings(spark)
         if GEN_COL not in post.columns:
             post = post.withColumn(GEN_COL, F.lit(0))
-        return self._committed(post.select("doc_id", "dl", GEN_COL).distinct())
+        return post.select("doc_id", "dl", GEN_COL).distinct()
 
     def _doclens_live(self, spark: SparkSession) -> DataFrame:
-        return filter_live(
-            spark, self._doclens(spark), self._tombstone_path, "doc_id"
-        )
+        return self._visible(spark, self._doclens(spark))
 
     def _live_stats(self, spark: SparkSession) -> dict:
         """Corpus stats over LIVE documents — exact, because BM25's
@@ -292,7 +243,7 @@ class TextIndex:
         st["n_docs"] = int(n_docs)
         st["total_len"] = int(total_len or 0)
         st["stats_gen"] = int(st.get("gen", 0))
-        self._write_stats(st)
+        self._dump(st)
         return st
 
     # -- delete / compact ---------------------------------------------------
@@ -306,17 +257,8 @@ class TextIndex:
         byte-identical to a fresh build without them. O(deleted) bytes
         written; ``compact()`` reclaims the space. Docs appended AFTER
         the delete are untouched (strict ``row._gen > tombstone gen``
-        survival, shared with VectorStore.delete)."""
-        from distributedvectordatabase_spark.sources.tombstones import (
-            heal_pending,
-            next_gen,
-        )
-
-        st = self._live_stats(spark)
-        # heal any crashed append first: its orphans must be aborted
-        # BEFORE this delete bumps the committed horizon past them
-        st = heal_pending(st)
-        gen = next_gen(st)
+        survival)."""
+        self._live_stats(spark)  # recount first if a delete was split
         if not isinstance(ids, DataFrame):
             ids = spark.createDataFrame([(int(i),) for i in ids], "doc_id long")
         ids = ids.select(F.col(ids.columns[0]).cast("long").alias("doc_id"))
@@ -327,59 +269,40 @@ class TextIndex:
             F.broadcast(ids.distinct()), "doc_id", "semi"
         )
         n_dead, len_dead = dead.agg(F.count("*"), F.sum("dl")).first()
-        # 1) burn the gen (crash here: harmless unused gen)
-        st["gen"] = gen
-        self._write_stats(st)
-        # 2) tombstones (crash here: stats_gen < gen -> exact recount
-        #    on next use)
-        append_tombstones(spark, self._tombstone_path, "doc_id", ids, gen)
-        # 3) exact decrement marks the stats current again
+        # a crash after the tombstones and before the decrement leaves
+        # stats_gen < gen -> exact recount on next use
+        gen = self._tombstone(spark, ids)
+        # the exact decrement marks the stats current again
+        st = self._config()
         st["n_docs"] = int(st["n_docs"]) - int(n_dead)
         st["total_len"] = int(st["total_len"]) - int(len_dead or 0)
         st["stats_gen"] = gen
-        self._write_stats(st)
+        self._dump(st)
 
     @locked_writer
     def compact(self, spark: SparkSession) -> None:
         """Fold tombstones in physically: rewrite only live postings /
         doclens rows (keeping their ``_gen``), then swap — the new copy
         is fully materialized in a sibling directory before the old one
-        is removed, so a failed compaction never loses the index (same
-        pattern as VectorStore.compact). Also upgrades a pre-r6 index:
+        is removed, so a failed compaction never loses the index. Also
+        upgrades a pre-r6 index:
         the rewrite materializes the doclens table and the ``_gen``
         column."""
-        import shutil
-
         st = self._live_stats(spark)
-        tmp = self.path.rstrip("/") + "__compacting"
         post = self.postings(spark)
         if GEN_COL not in post.columns:
             post = post.withColumn(GEN_COL, F.lit(0))
-        (
-            filter_live(
-                spark, self._committed(post), self._tombstone_path, "doc_id"
+        with self._compaction(st) as tmp:
+            (
+                self._visible(spark, post)
+                .repartition("term_bucket")
+                .write.mode("overwrite")
+                .partitionBy("term_bucket")
+                .parquet(os.path.join(tmp, "postings"))
             )
-            .repartition("term_bucket")
-            .write.mode("overwrite")
-            .partitionBy("term_bucket")
-            .parquet(os.path.join(tmp, "postings"))
-        )
-        self._doclens_live(spark).write.mode("overwrite").parquet(
-            os.path.join(tmp, "doclens")
-        )
-        # aborted/pending orphans were dropped physically just above
-        st["aborted_gens"] = []
-        st["pending_gen"] = None
-        atomic_dump_json(os.path.join(tmp, "_stats.json"), st)
-        shutil.rmtree(self.path)
-        shutil.move(tmp, self.path)
-
-    def current_gen(self) -> int:
-        """The index's persisted write/delete generation — pin it when
-        a training run starts and ``bm25(..., as_of_gen=...)`` serves
-        exactly the corpus that run saw (tombstones.filter_as_of
-        semantics; compact() truncates history, VACUUM-style)."""
-        return int(self.stats().get("gen", 0))
+            self._doclens_live(spark).write.mode("overwrite").parquet(
+                os.path.join(tmp, "doclens")
+            )
 
     def _stats_as_of(self, spark: SparkSession, gen: int) -> tuple[int, int]:
         """(n_docs, total_len) of the corpus AS OF ``gen`` — BM25's
@@ -387,15 +310,8 @@ class TextIndex:
         only, so the snapshot recounts from the as-of doclens table:
         one O(n_docs) aggregation per snapshot query batch, never a
         postings scan."""
-        from distributedvectordatabase_spark.sources.tombstones import (
-            filter_as_of,
-        )
-
         n_docs, total_len = (
-            filter_as_of(
-                spark, self._doclens(spark), self._tombstone_path,
-                "doc_id", gen,
-            )
+            self._visible(spark, self._doclens(spark), gen)
             .agg(F.count("*"), F.sum("dl"))
             .first()
         )
@@ -536,22 +452,13 @@ class TextIndex:
         # tombstone anti-filter sits ABOVE the bucket/term-pruned scan,
         # so deletes never change the partition-pruned plan shape; the
         # commit filter is two more literal predicates on the same scan
-        pruned = self._committed(
+        post = self._visible(
+            spark,
             self.postings(spark)
             .filter(F.col("term_bucket").isin(buckets))
-            .filter(F.col("term").isin(terms))
-        )
-        if as_of_gen is None:
-            post = filter_live(spark, pruned, self._tombstone_path, "doc_id")
-        else:
-            from distributedvectordatabase_spark.sources.tombstones import (
-                filter_as_of,
-            )
-
-            post = filter_as_of(
-                spark, pruned, self._tombstone_path, "doc_id", int(as_of_gen)
-            )
-        post = post.drop(GEN_COL)
+            .filter(F.col("term").isin(terms)),
+            as_of_gen,
+        ).drop(GEN_COL)
         df_t = post.groupBy("term").agg(F.count("*").alias("df"))
         m = F.lit(1e6)
         qz6 = lambda c: F.floor(c * m + F.lit(0.5)) / m  # noqa: E731

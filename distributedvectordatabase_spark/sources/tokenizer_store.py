@@ -15,8 +15,8 @@ BQ config — sources/vector_store.py pattern):
   the training loop ever needs folds out of this table, so no
   lifecycle operation re-reads the corpus: ``append`` adds the new
   docs' counts (one tokenize pass over the new docs only), ``delete``
-  tombstones a document's counts (merge-on-read, shared
-  sources/tombstones.py mechanics), and each retrain aggregates the
+  tombstones a document's counts (merge-on-read), and each retrain
+  aggregates the
   live rows to the (word, freq) vocabulary — vocab-bounded from there
   (operators/bpe.py merge-loop economics).
 - **merges/** — ``(ord, a, b, cnt)``: the learned merges in order,
@@ -24,7 +24,8 @@ BQ config — sources/vector_store.py pattern):
   repairs by calling ``retrain()`` again (same repair contract as the
   IVF codes tables).
 - **_config.json** — n_merges, the tokenize rule (whitespace words,
-  the bpe_pair_stats gate's split), gen; authoritative on reopen.
+  the bpe_pair_stats gate's split), and the ``tombstones.GenerationalStore``
+  commit fields; authoritative on reopen.
 
 Train/append/delete all leave the artifact CONSISTENT with a fresh
 train over the live registered corpus (pinned in
@@ -41,7 +42,6 @@ retrain cost is O(n_merges × vocabulary), independent of corpus size.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -53,25 +53,22 @@ from distributedvectordatabase_spark.operators.bpe import (
 )
 from distributedvectordatabase_spark.sources.tombstones import (
     GEN_COL,
-    append_tombstones,
-    atomic_dump_json,
-    filter_committed,
-    filter_live,
-    heal_pending,
+    StreamedStore,
     locked_writer,
-    next_gen,
 )
 
 __all__ = ["TokenizerStore"]
 
 
-class TokenizerStore:
+class TokenizerStore(StreamedStore):
+    _SIDECAR = "_config.json"
+
     def __init__(self, path: str, n_merges: int | None = None):
         self.path = path
         # reopen contract (IVFStore pattern): the persisted config wins
         # over the default; an EXPLICIT n_merges wins for new trains
         self.n_merges = 50 if n_merges is None else int(n_merges)
-        if n_merges is None and os.path.exists(self._config_path):
+        if n_merges is None:
             self.n_merges = int(self._config().get("n_merges", self.n_merges))
 
     # -- layout ---------------------------------------------------------
@@ -87,22 +84,6 @@ class TokenizerStore:
     @property
     def _pieces_path(self) -> str:
         return os.path.join(self.path, "pieces")
-
-    @property
-    def _config_path(self) -> str:
-        return os.path.join(self.path, "_config.json")
-
-    @property
-    def _tombstone_path(self) -> str:
-        return os.path.join(self.path, "_tombstones")
-
-    def _config(self) -> dict:
-        with open(self._config_path) as f:
-            return json.load(f)
-
-    def _write_config(self, cfg: dict) -> None:
-        os.makedirs(self.path, exist_ok=True)
-        atomic_dump_json(self._config_path, cfg)
 
     # -- sufficient statistics -------------------------------------------
 
@@ -127,17 +108,7 @@ class TokenizerStore:
         )
 
     def _counts_live(self, spark: SparkSession) -> DataFrame:
-        cfg = self._config()
-        return filter_live(
-            spark,
-            filter_committed(
-                spark.read.parquet(self._counts_path),
-                int(cfg.get("gen", 0)),
-                cfg.get("aborted_gens", ()),
-            ),
-            self._tombstone_path,
-            "doc_id",
-        )
+        return self._visible(spark, spark.read.parquet(self._counts_path))
 
     def vocab(self, spark: SparkSession) -> DataFrame:
         """(word, freq) over the LIVE registered corpus — what the
@@ -194,16 +165,7 @@ class TokenizerStore:
         }
         if ingest_batch is not None:
             cfg["ingest_batch"] = int(ingest_batch)
-        self._write_config(cfg)
-
-    def ingest_batch(self) -> int:
-        """Last streaming batch id whose registration COMMITTED
-        (recorded by the same config dump that bumps gen —
-        stream_tokenizer_ingest's exactly-once marker). -1 if the
-        store never streamed."""
-        if os.path.exists(self._config_path):
-            return int(self._config().get("ingest_batch", -1))
-        return -1
+        self._dump(cfg)
 
     @locked_writer
     def train(
@@ -241,25 +203,17 @@ class TokenizerStore:
         exact regardless of when the loop runs). ``ingest_batch``
         rides the config commit (the shared exactly-once marker).
 
-        Crash-atomic counts (tombstones.heal_pending two-phase
-        protocol): the merges rewrite is derived data, repaired by
-        ``retrain()``."""
+        Crash-atomic counts (the GenerationalStore two-phase protocol):
+        the merges rewrite is derived data, repaired by ``retrain()``."""
         spark = docs.sparkSession
-        cfg = heal_pending(self._config())
-        gen = next_gen(cfg)
-        cfg["pending_gen"] = gen
-        self._write_config(cfg)
+        gen = self._begin_append()
         (
             self._word_counts_of(docs, id_col, text_col)
             .withColumn(GEN_COL, F.lit(gen))
             .write.mode("append")
             .parquet(self._counts_path)
         )
-        cfg["gen"] = gen
-        cfg["pending_gen"] = None
-        if ingest_batch is not None:
-            cfg["ingest_batch"] = int(ingest_batch)
-        self._write_config(cfg)
+        self._commit(gen, ingest_batch)
         return self.retrain(spark) if retrain else []
 
     @locked_writer
@@ -270,11 +224,7 @@ class TokenizerStore:
         corpus. The take-down story the vector stores already have,
         for the one artifact that would otherwise embed a removed
         document's vocabulary forever."""
-        cfg = heal_pending(self._config())
-        gen = next_gen(cfg)
-        cfg["gen"] = gen  # gen durable BEFORE its tombstones exist
-        self._write_config(cfg)
-        append_tombstones(spark, self._tombstone_path, "doc_id", ids, gen)
+        self._tombstone(spark, ids)
         return self.retrain(spark)
 
     @locked_writer
@@ -287,26 +237,20 @@ class TokenizerStore:
         versions stay reproducible through compaction."""
         import shutil
 
-        tmp = self.path.rstrip("/") + "__compacting"
-        self._counts_live(spark).write.mode("overwrite").parquet(
-            os.path.join(tmp, "word_counts")
-        )
-        cfg = self._config()
-        cfg["aborted_gens"] = []
-        cfg["pending_gen"] = None
-        atomic_dump_json(os.path.join(tmp, "_config.json"), cfg)
-        if os.path.exists(self._merges_path):
-            shutil.copytree(
-                self._merges_path, os.path.join(tmp, "merges")
+        with self._compaction() as tmp:
+            self._counts_live(spark).write.mode("overwrite").parquet(
+                os.path.join(tmp, "word_counts")
             )
-        if os.path.exists(self._pieces_path):
-            # the unigram artifact versions ride through compaction
-            # exactly like the merge versions
-            shutil.copytree(
-                self._pieces_path, os.path.join(tmp, "pieces")
-            )
-        shutil.rmtree(self.path)
-        shutil.move(tmp, self.path)
+            if os.path.exists(self._merges_path):
+                shutil.copytree(
+                    self._merges_path, os.path.join(tmp, "merges")
+                )
+            if os.path.exists(self._pieces_path):
+                # the unigram artifact versions ride through compaction
+                # exactly like the merge versions
+                shutil.copytree(
+                    self._pieces_path, os.path.join(tmp, "pieces")
+                )
 
     @locked_writer
     def retrain(self, spark: SparkSession) -> list[tuple[str, str, int]]:
@@ -321,7 +265,7 @@ class TokenizerStore:
         retrain at the same gen overwrites its own version directory —
         the crash repair for a failed merges write stays idempotent
         (derived data, like the IVF codes tables)."""
-        gen = int(self._config().get("gen", 0))
+        gen = self._gen()
         merges = bpe_train_from_vocab(self.vocab(spark), self.n_merges)
         rows = [(i, a, b, int(c)) for i, (a, b, c) in enumerate(merges)]
         if rows:
@@ -353,7 +297,7 @@ class TokenizerStore:
         reproducibility."""
         from distributedvectordatabase_spark.operators.unigram import unigram_train
 
-        gen = int(self._config().get("gen", 0))
+        gen = self._gen()
         vocab, _report = unigram_train(None, wv=self.vocab(spark), **train_kw)
         rows = sorted(vocab.items())
         df = spark.createDataFrame(rows or [], "piece string, logp double")
@@ -364,7 +308,7 @@ class TokenizerStore:
         cfg["unigram"] = {
             k: v for k, v in train_kw.items() if isinstance(v, (int, float, str))
         }
-        self._write_config(cfg)
+        self._dump(cfg)
         return vocab
 
     def unigram_versions(self, spark: SparkSession) -> list[int]:
@@ -427,11 +371,6 @@ class TokenizerStore:
         )
 
     # -- use --------------------------------------------------------------
-
-    def current_gen(self) -> int:
-        """The store's persisted generation — pin it when a training
-        run starts (the shared store contract)."""
-        return int(self._config().get("gen", 0))
 
     def merge_versions(self, spark: SparkSession) -> list[int]:
         """Gens that have a trained merge version, ascending. Empty if

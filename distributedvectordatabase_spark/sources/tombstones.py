@@ -1,33 +1,54 @@
-"""Shared merge-on-read tombstone mechanics for the stores.
+"""The generational commit protocol of every store, written once.
 
-Both VectorStore and IVFStore implement delete the same way (the
-reference has no delete endpoint at all — coordinator_server.py
-exposes only add_vectors/search/stats — but a training-data store
-needs take-downs): every written row carries a ``_gen`` generation,
-``delete`` appends (id, ``_del_gen``) rows to a hidden
-``_tombstones/`` directory inside the store (underscore-prefixed, so
-Spark's file index never treats it as data), and reads drop a row
-when a tombstone for its id carries a gen >= the row's own. The
-filter is ONE broadcast join of the aggregated tombstone table above
-the scan — partition pruning and predicate pushdown on the store side
-are unaffected — and compaction folds tombstones in physically.
+All five stores (VectorStore, IVFStore, SigStore, TextIndex,
+TokenizerStore) subclass :class:`GenerationalStore`, which owns the
+whole append/delete/compact lifecycle over one JSON sidecar inside the
+store directory. The sidecar holds the store's own config next to the
+protocol fields ``gen``, ``pending_gen``, ``aborted_gens`` and (for
+streamed stores) ``ingest_batch``:
+
+============== ===================== =======================================
+store          sidecar               store fields
+============== ===================== =======================================
+VectorStore    ``_lsh.json``         LSH dim/num_fns/num_tables/seed, columns
+IVFStore       ``_centroids.json``   centers, n_cells, meta_cols, radii
+SigStore       ``_config.json``      bands, rows, shingle_n, n_buckets
+TextIndex      ``_stats.json``       n_docs, total_len, n_buckets, stats_gen
+TokenizerStore ``_config.json``      n_merges, tokenize, unigram
+============== ===================== =======================================
+
+The reference has no delete endpoint at all (coordinator_server.py
+exposes only add_vectors/search/stats), but a training-data store needs
+take-downs. Every written row carries a ``_gen`` generation, ``delete``
+appends (id, ``_del_gen``) rows to a hidden ``_tombstones/`` directory
+inside the store (underscore-prefixed, so Spark's file index never
+treats it as data), and reads drop a row when a tombstone for its id
+carries a gen >= the row's own. The filter is ONE broadcast join of the
+aggregated tombstone table above the scan — partition pruning and
+predicate pushdown on the store side are unaffected — and compaction
+folds tombstones in physically.
 
 Generation ordering makes the scheme crash-safe without transactions:
-a delete persists its gen to the store's config sidecar BEFORE its
-tombstones exist, a write persists its gen only AFTER its data lands,
-so any crash burns at most an unused gen number — never a resurrected
-row, never a wrongly-killed one (the survival rule is strict
-``row._gen > tombstone gen``).
+a delete persists its gen to the sidecar BEFORE its tombstones exist;
+an append persists a ``pending_gen`` intent before its data jobs and
+commits the gen (with its ingest marker and store fields) in one dump
+only AFTER its data lands. Any crash burns at most an unused gen number
+or leaves orphan rows above the commit horizon that the next writer
+heals into ``aborted_gens`` — never a resurrected row, never a
+wrongly-killed one (the survival rule is strict ``row._gen > tombstone
+gen``).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import tempfile
 import threading
 import time
 import uuid
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -584,3 +605,171 @@ def max_tombstoned_id(spark: SparkSession, tomb_dir: str, id_col: str) -> int:
         return 0
     v = spark.read.parquet(tomb_dir).agg(F.max(id_col)).first()[0]
     return int(v or 0)
+
+
+class GenerationalStore:
+    """The commit protocol over one store's sidecar, shared by all five
+    stores. A subclass sets ``_SIDECAR`` (the JSON file name inside
+    ``self.path``), may set ``_key`` (the id column its tombstones
+    carry) and may override :meth:`_config_fields` (config it re-stamps
+    on every protocol dump); it keeps its data tables, codes sidecars
+    and builds to itself."""
+
+    _SIDECAR: str
+    _key = "doc_id"
+    # on-disk layout: VectorStore and SigStore sidecars list both intent
+    # fields from their first append or delete on; the other stores
+    # only once a crash heal or a compact sets them
+    _LISTS_INTENT_FIELDS = False
+
+    @property
+    def _sidecar_path(self) -> str:
+        return os.path.join(self.path, self._SIDECAR)
+
+    @property
+    def _tombstone_path(self) -> str:
+        return os.path.join(self.path, "_tombstones")
+
+    def _config_fields(self) -> dict:
+        return {}
+
+    def _config(self) -> dict:
+        """The sidecar ({} before the first commit)."""
+        try:
+            with open(self._sidecar_path) as f:
+                return json.load(f)
+        except FileNotFoundError:
+            return {}
+
+    def _dump(self, side: dict) -> None:
+        os.makedirs(self.path, exist_ok=True)
+        atomic_dump_json(self._sidecar_path, side)
+
+    def _gen(self) -> int:
+        """Last persisted (committed) write/delete generation (0 for a
+        new or pre-generation store)."""
+        return int(self._config().get("gen", 0))
+
+    def current_gen(self) -> int:
+        """The store's persisted write/delete generation — pin it when
+        a run starts and the store's ``as_of_gen`` reads reconstruct
+        exactly the corpus that run saw (see filter_as_of for the
+        semantics and the compaction-bounded history caveat)."""
+        return self._gen()
+
+    def _committed(self, df: DataFrame) -> DataFrame:
+        """Scan-level commit filter (filter_committed): rows above the
+        persisted gen (crashed/in-flight append) or in the aborted list
+        are invisible to every read."""
+        side = self._config()
+        return filter_committed(
+            df, int(side.get("gen", 0)), side.get("aborted_gens", ())
+        )
+
+    def _visible(
+        self, spark: SparkSession, df: DataFrame, as_of_gen: int | None = None
+    ) -> DataFrame:
+        """Committed rows of any store table (raw or codes), tombstone
+        filtered live or reconstructed as of ``as_of_gen``. Aborted
+        gens were never committed at ANY point in history, so snapshots
+        exclude them too. ``_gen`` stays in the output."""
+        df = self._committed(df)
+        if as_of_gen is None:
+            return filter_live(spark, df, self._tombstone_path, self._key)
+        return filter_as_of(spark, df, self._tombstone_path, self._key, as_of_gen)
+
+    def _begin_append(self) -> int:
+        """Append phase 1: heal a crashed write, allocate the next gen
+        and persist it as the ``pending_gen`` intent BEFORE any data
+        job — a crash from here on leaves rows no read sees."""
+        side = heal_pending(self._config())
+        gen = next_gen(side)
+        side.update(self._config_fields())
+        side["pending_gen"] = gen
+        if self._LISTS_INTENT_FIELDS:
+            side.setdefault("aborted_gens", [])
+        self._dump(side)
+        return gen
+
+    def _commit(self, gen: int, ingest_batch: int | None = None, **fields) -> None:
+        """Append phase 2 — THE commit, only AFTER the data lands: one
+        dump bumps ``gen``, clears the intent and stamps the streaming
+        ``ingest_batch`` marker plus the store's ``fields``, so "batch
+        committed" and "rows visible" are the same file write."""
+        side = self._config()
+        side.update(self._config_fields(), **fields)
+        side["gen"] = int(gen)
+        side["pending_gen"] = None
+        if ingest_batch is not None:
+            side["ingest_batch"] = int(ingest_batch)
+        self._dump(side)
+
+    def _rebuild_gen(self) -> int:
+        """The gen a whole-store rebuild writes at (no intent: the
+        rebuild's overwrite replaces the sidecar with its commit)."""
+        return next_gen(heal_pending(self._config()))
+
+    def _burn_gen(self) -> int:
+        """Allocate a gen and make it durable at once (deletes, and the
+        gen a stream's rows carry). A crashed append's orphans are
+        healed into ``aborted_gens`` FIRST, or bumping the horizon past
+        them would surface them as committed."""
+        side = heal_pending(self._config())
+        gen = next_gen(side)
+        side.update(self._config_fields())
+        side["gen"] = gen
+        if self._LISTS_INTENT_FIELDS:
+            side.setdefault("pending_gen", None)
+            side.setdefault("aborted_gens", [])
+        self._dump(side)
+        return gen
+
+    def _tombstone(self, spark: SparkSession, ids) -> int:
+        """Burn the delete gen, THEN record ``ids`` as deleted at it: a
+        crash between the two leaves a harmless unused gen, while the
+        reverse order could hand a later append the tombstone's own gen
+        and wrongly kill its rows. Returns the gen."""
+        gen = self._burn_gen()
+        append_tombstones(spark, self._tombstone_path, self._key, ids, gen)
+        return gen
+
+    @locked_writer
+    def delete(self, spark: SparkSession, ids) -> None:
+        """Merge-on-read delete: hide every current row whose id is in
+        ``ids`` (a list/iterable or a one-column DataFrame). O(deleted)
+        bytes written, nothing rewritten — ``compact()`` reclaims the
+        space. Rows appended AFTER the delete are untouched (strict
+        ``row._gen > tombstone gen`` survival), so delete-then-append
+        of the same id is a well-defined upsert."""
+        self._tombstone(spark, ids)
+
+    @contextmanager
+    def _compaction(self, side: dict | None = None):
+        """The compact swap: the body writes the live tables into the
+        yielded sibling directory; on success the sidecar (``side``, or
+        the current one) is carried with the aborted/pending gens
+        cleared — the live rewrite dropped their orphan rows physically
+        — and the new copy replaces the old directory. Tombstones are
+        NOT carried: the swap is the physical delete. The copy is
+        complete before the old one is removed, so a failed compaction
+        never loses the store."""
+        tmp = self.path.rstrip("/") + "__compacting"
+        yield tmp
+        side = self._config() if side is None else side
+        if side:
+            side["aborted_gens"] = []
+            side["pending_gen"] = None
+            atomic_dump_json(os.path.join(tmp, self._SIDECAR), side)
+        shutil.rmtree(self.path)
+        shutil.move(tmp, self.path)
+
+
+class StreamedStore(GenerationalStore):
+    """A store that streaming ingest feeds batch by batch."""
+
+    def ingest_batch(self) -> int:
+        """Last streaming batch id whose build/append COMMITTED
+        (recorded by the same sidecar dump that bumps gen — the
+        exactly-once marker of the store's streaming ingest). -1 if the
+        store never streamed."""
+        return int(self._config().get("ingest_batch", -1))

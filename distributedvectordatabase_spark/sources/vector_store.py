@@ -36,11 +36,9 @@ never scans it as data); ``read()`` drops a row when a tombstone for
 its id has gen >= the row's — one broadcast join of a tiny
 aggregated tombstone table above the scan, so shard partition
 pruning and filter pushdown are unaffected. ``compact()`` folds
-tombstones in physically and clears them. The delete gen is
-persisted to the sidecar config BEFORE tombstones are written and
-the write gen only AFTER a successful data write, so a crash
-anywhere leaves at most an unused gen number, never a resurrected
-or wrongly-killed row.
+tombstones in physically and clears them. The generation commit
+protocol (append intent and commit, delete gen burn, compact swap) is
+``tombstones.GenerationalStore``'s, over the ``_lsh.json`` sidecar.
 """
 
 from __future__ import annotations
@@ -52,7 +50,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from distributedvectordatabase_spark.functions.lsh import SignLSH
+from distributedvectordatabase_spark.sources.scan_cache import cached_parquet
 from distributedvectordatabase_spark.sources.tombstones import (
+    GenerationalStore,
     atomic_dump_json,
     locked_writer,
 )
@@ -64,7 +64,79 @@ class DimensionMismatchError(ValueError):
     error (shard/shard_node.py:72-74)."""
 
 
-class VectorStore:
+class VectorTable(GenerationalStore):
+    """The read/delete surface shared by the two vector stores: rows
+    keyed by ``id_col`` in one parquet table at ``self.path``, plus
+    codes sidecar tables whose rows carry the raw rows' ``_gen``."""
+
+    @property
+    def _key(self) -> str:
+        return self.id_col
+
+    def _read_live(self, spark: SparkSession) -> DataFrame:
+        """All live rows, ``_gen`` retained (internal; read() drops it).
+
+        The tombstone side aggregates to one row per deleted id and is
+        broadcast — deletes are rare relative to the corpus, and the
+        join sits ABOVE the scan, so partition pruning and predicate
+        pushdown on the store side are unaffected. If tombstones ever
+        grow large, compact() folds them away.
+        """
+        return self._visible(spark, cached_parquet(spark, self.path))
+
+    def read(self, spark: SparkSession, as_of_gen: int | None = None) -> DataFrame:
+        return self._visible(
+            spark, cached_parquet(spark, self.path), as_of_gen
+        ).drop("_gen")
+
+    def _codes(
+        self, spark: SparkSession, path: str, as_of_gen: int | None = None
+    ) -> DataFrame:
+        """A codes sidecar's committed rows at ``path``, tombstone-filtered
+        live or reconstructed as-of."""
+        return self._visible(spark, cached_parquet(spark, path), as_of_gen)
+
+    def _allowed_ids(
+        self, spark: SparkSession, where: str, as_of_gen: int | None
+    ) -> DataFrame:
+        """(id) rows matching a metadata predicate — one pass over the
+        store's own table (predicate + id column push to the raw scan),
+        semi-joined into a compressed codes scan BEFORE its shortlist
+        (the ``bm25_batch(allowed_ids=)`` hard-constraint contract)."""
+        return (
+            self.read(spark, as_of_gen=as_of_gen)
+            .filter(where)
+            .select(self.id_col)
+        )
+
+    @locked_writer
+    def delete_where(self, spark: SparkSession, predicate) -> int:
+        """Predicate delete (retention sweeps, policy take-downs):
+        tombstone every LIVE row matching ``predicate`` (a Column or a
+        SQL string, typically over co-located metadata columns).
+        Returns the number of ids tombstoned. One scan to find the ids;
+        the delete itself stays O(deleted)."""
+        cond = F.expr(predicate) if isinstance(predicate, str) else predicate
+        # pin the matching ids BEFORE tombstoning: the tombstone write
+        # must not re-execute a plan that reads the tombstone dir it is
+        # appending to (self-referential read-under-write)
+        ids = (
+            self.read(spark)
+            .filter(cond)
+            .select(self.id_col)
+            .localCheckpoint(eager=True)
+        )
+        n = ids.count()
+        if n:
+            self.delete(spark, ids)
+        return n
+
+
+class VectorStore(VectorTable):
+    _SIDECAR = "_lsh.json"
+    _LISTS_INTENT_FIELDS = True
+    _lsh_config = GenerationalStore._config
+
     def __init__(
         self,
         path: str,
@@ -80,13 +152,10 @@ class VectorStore:
         # store built with different parameters would silently bucket
         # queries wrong (the TextIndex reopen bug class). An EXPLICIT
         # lsh argument still wins — callers who pass one own the match.
-        cfg = None
+        cfg = {}
         if lsh is None or id_col is None or vec_col is None:
-            cfg_path = os.path.join(path, "_lsh.json")
-            if os.path.exists(cfg_path):
-                with open(cfg_path) as f:
-                    cfg = json.load(f)
-        if lsh is None and cfg is not None:
+            cfg = self._config()
+        if lsh is None and cfg:
             lsh = SignLSH(
                 dim=int(cfg["dim"]),
                 num_fns=int(cfg["num_fns"]),
@@ -94,17 +163,9 @@ class VectorStore:
                 seed=int(cfg["seed"]),
             )
         self.lsh = lsh or SignLSH()
-        self.id_col = id_col or (cfg or {}).get("id_col", "vec_id")
-        self.vec_col = vec_col or (cfg or {}).get("vec_col", "embedding")
+        self.id_col = id_col or cfg.get("id_col", "vec_id")
+        self.vec_col = vec_col or cfg.get("vec_col", "embedding")
         self.files_per_shard = files_per_shard
-
-    @property
-    def _lsh_config_path(self) -> str:
-        return os.path.join(self.path, "_lsh.json")
-
-    @property
-    def _tombstone_path(self) -> str:
-        return os.path.join(self.path, "_tombstones")
 
     # underscore-prefixed entries are invisible to spark.read.parquet
     # on self.path, so the SQ8 codes table and its bounds sidecar can
@@ -125,45 +186,25 @@ class VectorStore:
     def _bq_params_path(self) -> str:
         return os.path.join(self.path, "_bq_params.json")
 
-    def _gen(self) -> int:
-        """Last persisted write/delete generation (0 for a new or
-        pre-generation store)."""
-        if os.path.exists(self._lsh_config_path):
-            with open(self._lsh_config_path) as f:
-                return int(json.load(f).get("gen", 0))
-        return 0
-
-    def _lsh_config(self) -> dict:
-        if os.path.exists(self._lsh_config_path):
-            with open(self._lsh_config_path) as f:
-                return json.load(f)
-        return {}
-
-    def _aborted_gens(self) -> tuple:
-        """Gens burned by crashed appends (tombstones.heal_pending) —
-        their orphan rows are filtered from every read and reclaimed
-        physically by compact()."""
-        return tuple(self._lsh_config().get("aborted_gens", ()))
+    def _config_fields(self) -> dict:
+        return {
+            "dim": self.lsh.dim,
+            "num_fns": self.lsh.num_fns,
+            "num_tables": self.lsh.num_tables,
+            "seed": self.lsh.seed,
+            "id_col": self.id_col,
+            "vec_col": self.vec_col,
+        }
 
     def _write_lsh_config(self, gen: int | None = None, **extras) -> None:
-        """Persist the sidecar, PRESERVING commit-protocol fields
-        (pending_gen/aborted_gens) unless overridden via ``extras`` —
-        the LSH fields themselves are always refreshed from self."""
-        os.makedirs(self.path, exist_ok=True)
+        """Persist the sidecar with the LSH fields refreshed from self,
+        the given ``gen`` (default: unchanged) and ``extras``; other
+        fields are preserved."""
         cfg = self._lsh_config()
-        cfg.update(
-            {
-                "dim": self.lsh.dim,
-                "num_fns": self.lsh.num_fns,
-                "num_tables": self.lsh.num_tables,
-                "seed": self.lsh.seed,
-                "id_col": self.id_col,
-                "vec_col": self.vec_col,
-                "gen": self._gen() if gen is None else int(gen),
-            }
-        )
+        cfg.update(self._config_fields())
+        cfg["gen"] = int(cfg.get("gen", 0) if gen is None else gen)
         cfg.update(extras)
-        atomic_dump_json(self._lsh_config_path, cfg)
+        self._dump(cfg)
 
     # -- ingest -------------------------------------------------------------
 
@@ -213,28 +254,16 @@ class VectorStore:
                 "present): batch-appended files would be invisible to "
                 "reads; run compact(spark) to finalize the sink first"
             )
-        if mode == "append" and os.path.exists(self._lsh_config_path):
+        if mode == "append" and os.path.exists(self._sidecar_path):
             raw = df.sparkSession.read.parquet(self.path)
             if "_gen" not in raw.columns:
                 raise ValueError(
                     "store predates delete support (no _gen column); run "
                     "compact(spark) once to upgrade before appending"
                 )
-        from distributedvectordatabase_spark.sources.tombstones import (
-            heal_pending,
-            next_gen,
-        )
-
-        cfg = heal_pending(self._lsh_config())
-        gen = next_gen(cfg)
-        if mode == "append":
-            # phase 1 (tombstones.heal_pending protocol, shared with
-            # TextIndex/IVFStore): persist the write intent BEFORE any
-            # data job — a crash from here on leaves rows no read sees
-            self._write_lsh_config(
-                pending_gen=gen,
-                aborted_gens=cfg.get("aborted_gens", []),
-            )
+        # an overwrite drops the whole store dir, sidecar included, so
+        # only an append persists a write intent first
+        gen = self._begin_append() if mode == "append" else self._rebuild_gen()
         # keep the SQ8 codes sidecar in sync on append: pin the
         # prepared batch so the raw write and the codes write see the
         # SAME rows (a non-deterministic input recomputed per write
@@ -247,15 +276,12 @@ class VectorStore:
             if sync_sq:
                 out = out.cache()
             out.write.mode(mode).partitionBy("shard_id").parquet(self.path)
-            # THE commit: gen bumps and the intent clears in one dump,
-            # only AFTER the data lands — a crash mid-write leaves the
-            # orphan rows above the committed horizon (invisible via
-            # filter_committed) for the next writer to heal. It must
-            # also land BEFORE the SQ encode below: if that second write
-            # fails, _gen (g+1) != the SQ synced gen (g) and knn_sq's
-            # staleness guard trips — persisting after would leave both
-            # at g and the guard would pass on codes missing these rows.
-            self._write_lsh_config(gen=gen, pending_gen=None)
+            # the commit must land BEFORE the SQ encode below: if that
+            # second write fails, _gen (g+1) != the SQ synced gen (g)
+            # and knn_sq's staleness guard trips — committing after
+            # would leave both at g and the guard would pass on codes
+            # missing these rows
+            self._commit(gen)
             if sync_sq:
                 from distributedvectordatabase_spark.operators.sq import sq_encode
 
@@ -339,119 +365,42 @@ class VectorStore:
         sink's fresh log would hide the compacted files."""
         import shutil
 
-        tmp = self.path.rstrip("/") + "__compacting"
         spread = (F.abs(F.hash(self.id_col)) % self.files_per_shard).alias("_spread")
-        (
-            self._read_live(spark)
-            .repartition(self.lsh.num_tables * self.files_per_shard, F.col("shard_id"), spread)
-            .write.mode("overwrite")
-            .partitionBy("shard_id")
-            .parquet(tmp)
-        )
-        if os.path.exists(self._lsh_config_path):
-            # aborted/pending clear — the live rewrite above dropped
-            # their orphan rows physically
-            cfg = self._lsh_config()
-            cfg["aborted_gens"] = []
-            cfg["pending_gen"] = None
-            atomic_dump_json(
-                os.path.join(tmp, os.path.basename(self._lsh_config_path)), cfg
-            )
-        # carry the SQ8 sidecar, folding tombstones into the codes
-        # table the same way the raw rewrite above does (the swap IS
-        # the physical delete for both tables)
-        if os.path.exists(self._sq_params_path):
+        with self._compaction() as tmp:
             (
-                self._sq_codes_live(spark)
+                self._read_live(spark)
+                .repartition(self.lsh.num_tables * self.files_per_shard, F.col("shard_id"), spread)
                 .write.mode("overwrite")
                 .partitionBy("shard_id")
-                .parquet(os.path.join(tmp, os.path.basename(self._sq_path)))
+                .parquet(tmp)
             )
-            shutil.copy(
-                self._sq_params_path,
-                os.path.join(tmp, os.path.basename(self._sq_params_path)),
-            )
-        # same carry for the binary sidecar (no params beyond dim/gen)
-        if os.path.exists(self._bq_params_path):
-            from distributedvectordatabase_spark.sources.tombstones import (
-                filter_live,
-            )
-
-            (
-                filter_live(
-                    spark, self._committed(spark.read.parquet(self._bq_path)),
-                    self._tombstone_path, self.id_col,
-                )
-                .write.mode("overwrite")
-                .partitionBy("shard_id")
-                .parquet(os.path.join(tmp, os.path.basename(self._bq_path)))
-            )
-            shutil.copy(
-                self._bq_params_path,
-                os.path.join(tmp, os.path.basename(self._bq_params_path)),
-            )
-        shutil.rmtree(self.path)
-        shutil.move(tmp, self.path)
+            # carry the SQ8 and binary sidecars, folding tombstones into
+            # each codes table the same way the raw rewrite above does
+            # (the swap IS the physical delete for every table)
+            for codes, params in ((self._sq_path, self._sq_params_path),
+                                  (self._bq_path, self._bq_params_path)):
+                if os.path.exists(params):
+                    (
+                        self._codes(spark, codes)
+                        .write.mode("overwrite")
+                        .partitionBy("shard_id")
+                        .parquet(os.path.join(tmp, os.path.basename(codes)))
+                    )
+                    shutil.copy(params, os.path.join(tmp, os.path.basename(params)))
 
     # -- delete / upsert ----------------------------------------------------
 
     @locked_writer
     def delete(self, spark: SparkSession, ids) -> None:
-        """Merge-on-read delete: hide every current row whose id is in
-        ``ids`` (a list/iterable or a one-column DataFrame). O(deleted)
-        bytes written, nothing rewritten — ``compact()`` reclaims the
-        space. Rows appended AFTER the delete are untouched, so
-        delete-then-append of the same id is a well-defined upsert."""
-        from distributedvectordatabase_spark.sources.tombstones import (
-            heal_pending,
-            next_gen,
-        )
-
-        cfg = heal_pending(self._lsh_config())
-        gen = next_gen(cfg)
-        # persist the gen BEFORE the tombstones exist: if we crashed
-        # between the two, a burned gen number is harmless, while the
-        # reverse order could hand a later append the tombstone's own
-        # gen and wrongly kill its rows. A crashed append's orphans are
-        # healed into aborted_gens FIRST, or bumping the horizon past
-        # them would surface them as committed.
-        self._write_lsh_config(
-            gen=gen,
-            pending_gen=cfg.get("pending_gen"),
-            aborted_gens=cfg.get("aborted_gens", []),
-        )
-        from distributedvectordatabase_spark.sources.tombstones import (
-            append_tombstones,
-        )
-
-        append_tombstones(spark, self._tombstone_path, self.id_col, ids, gen)
-        # a delete never desyncs the codes tables (both sides filter
-        # the same tombstones at read), so the sidecars stay current
+        """Merge-on-read delete (:meth:`GenerationalStore.delete`). It
+        never desyncs the codes tables (both sides filter the same
+        tombstones at read), so their sidecars stay current at the
+        delete's gen."""
+        gen = self._tombstone(spark, ids)
         if os.path.exists(self._sq_params_path):
             self._sq_record_gen(gen)
         if os.path.exists(self._bq_params_path):
             self._bq_record_gen(gen)
-
-    @locked_writer
-    def delete_where(self, spark: SparkSession, predicate) -> int:
-        """Predicate delete (retention sweeps, policy take-downs):
-        tombstone every LIVE row matching ``predicate`` (a Column or a
-        SQL string). Returns the number of ids tombstoned. One scan to
-        find the ids; the delete itself stays O(deleted)."""
-        cond = F.expr(predicate) if isinstance(predicate, str) else predicate
-        # pin the matching ids BEFORE tombstoning: the tombstone write
-        # must not re-execute a plan that reads the tombstone dir it is
-        # appending to (self-referential read-under-write)
-        ids = (
-            self.read(spark)
-            .filter(cond)
-            .select(self.id_col)
-            .localCheckpoint(eager=True)
-        )
-        n = ids.count()
-        if n:
-            self.delete(spark, ids)
-        return n
 
     @locked_writer
     def upsert(self, df: DataFrame, validate_dim: bool = True) -> None:
@@ -513,45 +462,10 @@ class VectorStore:
         with open(self._sq_params_path) as f:
             return int(json.load(f).get("gen", 0))
 
-    def _sq_codes_live(self, spark: SparkSession) -> DataFrame:
-        return self._sq_codes(spark)
-
     def _sq_codes(
         self, spark: SparkSession, as_of_gen: int | None = None
     ) -> DataFrame:
         return self._codes(spark, self._sq_path, as_of_gen)
-
-    def _codes(
-        self, spark: SparkSession, path: str, as_of_gen: int | None = None
-    ) -> DataFrame:
-        """A codes sidecar's committed rows, tombstone-filtered live or
-        reconstructed as-of (codes rows carry the raw rows' ``_gen``)."""
-        from distributedvectordatabase_spark.sources.tombstones import (
-            filter_as_of,
-            filter_live,
-        )
-
-        from distributedvectordatabase_spark.sources.scan_cache import cached_parquet
-
-        df = self._committed(cached_parquet(spark, path))
-        if as_of_gen is None:
-            return filter_live(spark, df, self._tombstone_path, self.id_col)
-        return filter_as_of(
-            spark, df, self._tombstone_path, self.id_col, as_of_gen
-        )
-
-    def _allowed_ids(
-        self, spark: SparkSession, where: str, as_of_gen: int | None
-    ) -> DataFrame:
-        """(id) rows matching a metadata predicate — one pass over the
-        store's own table (predicate + id column push to the raw scan),
-        semi-joined into a compressed codes scan BEFORE its shortlist
-        (the ``bm25_batch(allowed_ids=)`` hard-constraint contract)."""
-        return (
-            self.read(spark, as_of_gen=as_of_gen)
-            .filter(where)
-            .select(self.id_col)
-        )
 
     def _check_codes_gens(
         self, side_gen: int, as_of_gen: int | None, side: dict, what: str
@@ -805,55 +719,6 @@ class VectorStore:
         )
 
     # -- read / query -------------------------------------------------------
-
-    def _read_live(self, spark: SparkSession) -> DataFrame:
-        """All live rows, ``_gen`` retained (internal; read() drops it).
-
-        The tombstone side aggregates to one row per deleted id and is
-        broadcast — deletes are rare relative to the corpus, and the
-        join sits ABOVE the scan, so shard_id partition pruning and
-        predicate pushdown on the store side are unaffected. If
-        tombstones ever grow large, compact() folds them away.
-        """
-        from distributedvectordatabase_spark.sources.tombstones import filter_live
-
-        from distributedvectordatabase_spark.sources.scan_cache import cached_parquet
-
-        return filter_live(
-            spark, self._committed(cached_parquet(spark, self.path)),
-            self._tombstone_path, self.id_col,
-        )
-
-    def _committed(self, df: DataFrame) -> DataFrame:
-        """Scan-level commit filter (tombstones.filter_committed): rows
-        above the persisted gen (crashed/in-flight append) or in the
-        aborted list are invisible to every read."""
-        from distributedvectordatabase_spark.sources.tombstones import (
-            filter_committed,
-        )
-
-        return filter_committed(df, self._gen(), self._aborted_gens())
-
-    def current_gen(self) -> int:
-        """The store's persisted write/delete generation — pin it when
-        a training run starts and ``read(as_of_gen=...)`` reconstructs
-        exactly the corpus that run saw (see tombstones.filter_as_of
-        for the semantics and the compaction-bounded history caveat)."""
-        return self._gen()
-
-    def read(self, spark: SparkSession, as_of_gen: int | None = None) -> DataFrame:
-        if as_of_gen is None:
-            return self._read_live(spark).drop("_gen")
-        from distributedvectordatabase_spark.sources.tombstones import filter_as_of
-
-        # aborted gens were never committed at ANY point in history, so
-        # the snapshot excludes them regardless of as_of_gen
-        from distributedvectordatabase_spark.sources.scan_cache import cached_parquet
-
-        return filter_as_of(
-            spark, self._committed(cached_parquet(spark, self.path)),
-            self._tombstone_path, self.id_col, as_of_gen,
-        ).drop("_gen")
 
     def knn(self, spark: SparkSession, queries: DataFrame, k: int = 10, pruned: bool = True,
             num_candidates: int = 2, metric: str = "l2sq",

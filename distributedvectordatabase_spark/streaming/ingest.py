@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from distributedvectordatabase_spark.sources.tombstones import writer_lease
 from distributedvectordatabase_spark.sources.vector_store import VectorStore
 
 
@@ -42,14 +43,17 @@ def stream_ingest_vectors(
     (batch-incremental, the test/backfill mode); otherwise runs until
     stopped. Exactly-once via the checkpoint.
 
-    Delete interop: every row the stream lands carries the stream's
-    generation, persisted to the store config BEFORE the first batch
-    (the tombstone-side ordering — see sources/tombstones.py), so
-    deletes on a streamed store behave exactly as on a batch-written
-    one. One documented edge: a delete issued WHILE this stream runs
-    covers rows the stream lands after it too (they share the stream's
-    gen, which the delete out-ranks) — restart the stream to open a
-    fresh generation if that matters.
+    Delete interop: every row the stream lands carries one generation,
+    allocated when the stream starts the way a delete burns its gen
+    (``GenerationalStore._burn_gen``): under the store's writer lease
+    (held for that one sidecar dump only, not for the stream's life —
+    a live foreign writer raises ``WriterLeaseHeld``), after healing a
+    crashed append's intent into the aborted list, and durable before
+    any row lands. Deletes on a streamed store therefore behave exactly
+    as on a batch-written one. One documented edge: a delete issued
+    WHILE this stream runs covers rows the stream lands after it too
+    (they share the stream's gen, which the delete out-ranks) — restart
+    the stream to open a fresh generation if that matters.
     """
     reader = spark.readStream
     if schema is not None:
@@ -76,8 +80,8 @@ def stream_ingest_vectors(
                 "into a fresh path (or keep using batch append)"
             )
 
-    gen = store._gen() + 1
-    store._write_lsh_config(gen=gen)  # durable before any row lands
+    with writer_lease(store.path):
+        gen = store._burn_gen()
     bucketed = store.lsh.assign(
         stream, vec_col=store.vec_col, out="shard_id"
     ).withColumn("_gen", F.lit(gen))
@@ -382,8 +386,8 @@ def stream_neardup_ingest(
     Exactly-once: each batch overwrites its own ``batch=<id>`` sink
     directory (replays rewrite identical bytes), and the batch id rides
     the SAME config dump that commits the signature append's gen
-    (``SigStore.append(ingest_batch=...)`` — the r7 heal_pending
-    protocol shared by every store), so "batch committed" and
+    (``SigStore.append(ingest_batch=...)`` — the GenerationalStore
+    commit protocol), so "batch committed" and
     "signatures visible" are one atomic file write. A crash mid-append
     leaves orphan band/token rows above the committed horizon,
     invisible to every join; the replay heals them into the sidecar's
@@ -407,9 +411,7 @@ def stream_neardup_ingest(
     def committed_batch() -> int:
         committed = SigStore(
             sig_path, bands=bands, rows=rows, shingle_n=shingle_n
-        ).ingest_batch() if os.path.exists(
-            os.path.join(sig_path, "_config.json")
-        ) else -1
+        ).ingest_batch()
         if os.path.exists(legacy_marker):
             with open(legacy_marker) as f:
                 committed = max(committed, int(json.load(f)["batch_id"]))
@@ -492,7 +494,7 @@ def stream_text_index_ingest(
     append landed but its marker did not. A crash mid-append leaves
     orphan posting rows above the committed horizon, invisible to
     every read; the replay heals them into the sidecar's aborted-gen
-    list and re-appends under a fresh gen (tombstones.heal_pending
+    list and re-appends under a fresh gen (the GenerationalStore
     protocol), so served scores equal the sequential batch fold's
     exactly — never a double-counted batch (pinned in
     tests/test_streaming.py, including an injected crash between the
@@ -580,7 +582,7 @@ def stream_ivf_ingest(
     A crash mid-append leaves orphan rows (raw and codes) above the
     committed horizon, invisible to every search; the replay heals
     them into the sidecar's aborted-gen list and re-appends under a
-    fresh gen (tombstones.heal_pending protocol) — never a
+    fresh gen (the GenerationalStore protocol) — never a
     double-inserted batch. Radii widened by the crashed attempt stay
     merely conservative. Orphans cost dead bytes until ``compact()``.
     Plain-parquet appends — the store never enters a
@@ -666,7 +668,7 @@ def stream_tokenizer_ingest(
 
     Exactly-once: the batch id rides the SAME config dump that commits
     the counts append's gen (``TokenizerStore.append(ingest_batch=``,
-    the shared heal_pending protocol), so a crash mid-append leaves
+    the GenerationalStore protocol), so a crash mid-append leaves
     orphan counts invisible to every retrain and the replay folds the
     statistics exactly once. The first batch takes the initial
     registration path, whose overwrite writes make its replay

@@ -387,6 +387,44 @@ def test_writer_lease_refuses_live_writer_on_all_five_stores(spark, tmp_path):
         assert not os.path.exists(lock)
 
 
+def test_writer_lease_refuses_live_writer_on_delete_and_compact(spark, tmp_path):
+    """delete and compact are gen-allocating mutators too: under a live
+    foreign writer both refuse before touching the store, on every
+    store kind."""
+    from distributedvectordatabase_spark.sources.ivf_store import IVFStore
+    from distributedvectordatabase_spark.sources.sig_store import SigStore
+    from distributedvectordatabase_spark.sources.text_index import TextIndex
+    from distributedvectordatabase_spark.sources.tokenizer_store import (
+        TokenizerStore,
+    )
+    from distributedvectordatabase_spark.sources.tombstones import (
+        WriterLeaseHeld,
+    )
+    from distributedvectordatabase_spark.sources.vector_store import VectorStore
+
+    for cls, sidecar in [
+        (VectorStore, "_lsh.json"),
+        (IVFStore, "_centroids.json"),
+        (TextIndex, "_stats.json"),
+        (SigStore, "_config.json"),
+        (TokenizerStore, "_config.json"),
+    ]:
+        path = str(tmp_path / cls.__name__)
+        store = cls(path)
+        os.makedirs(path)
+        with open(os.path.join(path, sidecar), "w") as f:
+            json.dump({"gen": 3, "pending_gen": 4}, f)
+        _hold_lock(path, pid=1, ts=time.time())
+        for mutate in (lambda: store.delete(spark, [1]),
+                       lambda: store.compact(spark)):
+            with pytest.raises(WriterLeaseHeld):
+                mutate()
+            with open(os.path.join(path, sidecar)) as f:
+                assert json.load(f) == {"gen": 3, "pending_gen": 4}, cls
+            assert sorted(os.listdir(path)) == [sidecar], cls
+            assert not os.path.exists(path + "__compacting"), cls
+
+
 def test_writer_lease_is_reentrant_within_one_process(tmp_path):
     from distributedvectordatabase_spark.sources.tombstones import writer_lease
 

@@ -418,3 +418,50 @@ def test_delete_compact_upsert_lifecycle(spark, tmp_path, adapter):
     c = adapter.split_col()
     adapter.append(spark, store, df.filter(F.col(c).isin(victims)))
     assert adapter.canon(spark, store) == before
+
+
+LIFECYCLE = [_VS(), _IVF(), _TIX(), _SIG(), _TOK()]
+
+
+@pytest.mark.parametrize("adapter", LIFECYCLE, ids=[a.name for a in LIFECYCLE])
+def test_delete_over_crashed_append_then_compact(spark, tmp_path, adapter):
+    """A delete issued over a crashed append (sidecar rewound to the
+    pre-commit form: old gen plus the ``pending_gen`` intent) heals the
+    intent into the aborted list BEFORE bumping the horizon, so the
+    orphans stay invisible; compact drops them physically, clears the
+    list and keeps the streaming marker where the store has one."""
+    import json
+
+    df = adapter.corpus(spark)
+    c = adapter.split_col()
+    lo, hi = df.filter(F.col(c) % 2 == 0), df.filter(F.col(c) % 2 == 1)
+    store = adapter.build(spark, str(tmp_path / "s"), lo)
+    want = adapter.canon(spark, store)
+    with open(store._sidecar_path) as f:
+        side = json.load(f)
+    adapter.append(spark, store, hi)
+    pending = store.current_gen()
+    side["pending_gen"] = pending
+    streamed = hasattr(store, "ingest_batch")
+    if streamed:
+        side["ingest_batch"] = 7  # an earlier committed streaming batch
+    with open(store._sidecar_path, "w") as f:
+        json.dump(side, f)
+
+    victims = adapter.ids_of(want)[:1]
+    adapter.delete(spark, store, victims)
+    with open(store._sidecar_path) as f:
+        side = json.load(f)
+    assert side["aborted_gens"] == [pending] and side["pending_gen"] is None
+    assert side["gen"] == pending + 1
+    hidden = set(victims) | {r[0] for r in hi.select(c).collect()}
+    after = adapter.canon(spark, store)
+    assert not set(adapter.ids_of(after)) & hidden
+
+    adapter.compact(spark, store)
+    with open(store._sidecar_path) as f:
+        side = json.load(f)
+    assert side["aborted_gens"] == [] and side["pending_gen"] is None
+    if streamed:
+        assert store.ingest_batch() == 7
+    assert adapter.canon(spark, store) == after

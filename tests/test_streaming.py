@@ -553,6 +553,64 @@ def test_streamed_store_delete_and_sink_finalize_lifecycle(spark, tmp_path):
         )
 
 
+def _one_file_source(spark, tmp_path, n):
+    """A stream source dir holding the first ``n`` embeddings rows as
+    one parquet file."""
+    stage, src = tmp_path / "stage", tmp_path / "vin"
+    src.mkdir()
+    load_table(spark, "embeddings", SF_SMALL).limit(n).coalesce(1).write.parquet(
+        str(stage)
+    )
+    part = next(p for p in stage.iterdir() if p.name.endswith(".parquet"))
+    shutil.move(str(part), src / "f0.parquet")
+    return str(src)
+
+
+def test_stream_ingest_heals_a_crashed_append_before_taking_its_gen(
+    spark, tmp_path
+):
+    """A stream started over a crashed append's intent must heal that
+    intent and take a FRESH gen: the stale ``pending_gen`` later heals
+    into the aborted list, so rows landed at that gen would vanish."""
+    p = str(tmp_path / "vstore")
+    VectorStore(p)._write_lsh_config(gen=0, pending_gen=1)
+    store = VectorStore(p)
+    q = stream_ingest_vectors(
+        spark, _one_file_source(spark, tmp_path, 50), store,
+        str(tmp_path / "ckpt"),
+    )
+    q.awaitTermination(120)
+    assert q.exception() is None
+    store.delete(spark, [0])
+    assert store.read(spark).count() == 49
+
+
+def test_stream_ingest_refuses_a_live_writer(spark, tmp_path):
+    """The stream's gen allocation rewrites the sidecar, so it takes
+    the writer lease: a live foreign writer refuses the stream and the
+    sidecar is untouched."""
+    import json
+    import time
+
+    from distributedvectordatabase_spark.sources.tombstones import (
+        WriterLeaseHeld,
+    )
+
+    p = str(tmp_path / "vstore")
+    VectorStore(p)._write_lsh_config(gen=3)
+    with open(os.path.join(p, "_lsh.json"), "rb") as f:
+        before = f.read()
+    with open(p + "__writer.lock", "w") as f:  # pid 1 is always alive
+        json.dump({"pid": 1, "ts": time.time(), "host": os.uname().nodename}, f)
+    with pytest.raises(WriterLeaseHeld):
+        stream_ingest_vectors(
+            spark, _one_file_source(spark, tmp_path, 10), VectorStore(p),
+            str(tmp_path / "ckpt"),
+        )
+    with open(os.path.join(p, "_lsh.json"), "rb") as f:
+        assert f.read() == before
+
+
 def test_stream_text_index_ingest_matches_batch_fold(spark, tmp_path):
     """Streaming posting ingest (r6): after the stream drains, BM25
     over the streamed index must be byte-identical to a fresh build
