@@ -5,7 +5,7 @@
 # bench: the BENCH contract at $SPARK_GRAFT_SF_DIR (default sf0.1) — run on
 #        an idle machine; concurrent Spark work inflates timings ~2.7x
 
-.PHONY: smoke check bench test exact scale bpe-vocab stores
+.PHONY: smoke check bench test exact scale bpe-vocab stores knn
 
 # opt-in scale probe (not a driver contract): 500k synthetic vectors +
 # 200k synthetic docs; run on an idle machine
@@ -27,6 +27,15 @@ stores:
 		tests/test_store.py tests/test_ivf_store.py tests/test_sig_store.py \
 		tests/test_text_index.py tests/test_tokenizer_store.py \
 		tests/test_snapshot.py tests/test_streaming.py
+
+# the search-core modules (operators/knn.py's collect/scan/merge, the
+# compressed legs' rerank and the stores' search legs): a fast gate for
+# search-path changes
+knn:
+	python -m pytest -q tests/test_knn.py tests/test_batch_topk_properties.py \
+		tests/test_filtered_knn_properties.py tests/test_ivf_store.py \
+		tests/test_sq.py tests/test_pq.py tests/test_bq.py \
+		tests/test_engine_parity.py tests/test_search.py
 
 # bit-level oracle comparison of every gated query (the strictest form
 # of the driver's sha256-of-CSV hash check); also runs inside `check`

@@ -16,11 +16,14 @@ first (float32 storage, float64 math — matches numpy/DuckDB widening),
 and stay inside whole-stage codegen: no Python UDFs in the hot path.
 For very wide vectors a vectorized Arrow path may win; see
 operators/knn.py which offers a mapInPandas top-k for the scan-heavy
-case.
+case. Its in-task re-score uses the numpy twins at the end of this
+module (``np_l2sq``/``np_cosine_dist``), which repeat these folds
+operation for operation, so both give the same bits.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -114,3 +117,35 @@ def duckdb_cosine_sim(a: str, b: str) -> str:
 
 def duckdb_cosine_dist(a: str, b: str) -> str:
     return f"(1.0 - {duckdb_cosine_sim(a, b)})"
+
+
+# ---------------------------------------------------------------------------
+# numpy twins — the Spark folds above over paired float64 rows (row i of
+# ``a`` against row i of ``b``), in the same operation order, so each
+# value is bit-identical to the Spark expression on the same inputs.
+# operators/knn.py re-scores its scan slates with them.
+# ---------------------------------------------------------------------------
+
+def _np_fold(t: np.ndarray) -> np.ndarray:
+    """Row sums of ``t`` added left to right from 0.0, the order of
+    ``aggregate(..., 0.0, (s, x) -> s + x)``. ``add.accumulate`` is
+    strictly sequential but seeds with the first term, not 0.0; that
+    differs only when every term so far is -0.0, and the final
+    ``+ 0.0`` turns that -0.0 into the fold's 0.0."""
+    if t.shape[1] == 0:
+        return np.zeros(len(t))
+    return np.add.accumulate(t, axis=1)[:, -1] + 0.0
+
+
+def np_l2sq(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """:func:`l2sq` per row pair."""
+    d = a - b
+    return _np_fold(d * d)
+
+
+def np_cosine_dist(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """:func:`cosine_dist` per row pair: the same sqrt, multiply,
+    divide, zero-norm guard and ``1 - sim``."""
+    denom = np.sqrt(_np_fold(a * a)) * np.sqrt(_np_fold(b * b))
+    sim = np.divide(_np_fold(a * b), denom, out=np.zeros(len(denom)), where=denom != 0.0)
+    return 1.0 - sim

@@ -6,7 +6,8 @@ per-shard FAISS top-k, global merge (reference
 coordinator/coordinator.py:132-254 + shard/shard_node.py:101-133) — as
 a declarative plan. Every search (exact, LSH-pruned, filtered, IVF and
 the SQ8/PQ/BQ compressed legs) runs the same three steps, written once
-here; an index only supplies the parts that differ:
+here (the compressed legs add a rerank, below); an index only supplies
+the parts that differ:
 
 1. **collect** — :func:`query_batch` collects the bounded query batch
    once per call (:func:`collect_query_batch`, capped at
@@ -23,15 +24,23 @@ here; an index only supplies the parts that differ:
    only O(n_queries · k · n_partitions) rows — the reference's
    per-shard top-k + coordinator argsort merge (shard/shard_node.py:127,
    coordinator/coordinator.py:211-249), vectorized and spill-safe. The
-   corpus is scanned once, never shuffled.
-3. **rerank** — :func:`exact_rerank` re-scores a candidate slate with
-   the sequential ``aggregate(zip_with(...))`` expression the SQL
-   oracle uses, against the same validated matrix handed to the JVM as
-   an Arrow-built LocalRelation (:func:`local_query_relation`: a
-   LocalTableScan, no Spark job, no SQL text), joining the slate back
-   to the raw vectors by id when the scan did not carry them. The
-   float-distance paths rerank a 2k slate (:func:`_rescored_topk`);
-   the compressed legs rerank their R·k shortlist.
+   corpus is scanned once, never shuffled. On the raw-vector paths
+   (exact, LSH-pruned, filtered, IVF) the BLAS distances only *select*
+   each batch's slate; the same task re-scores the slate with the
+   sequential fold the SQL oracle uses (``functions.vector``'s numpy
+   twins, bit-identical to ``l2sq``/``cosine_dist``) and keeps the
+   exact top-k, so every emitted ``dist`` is already final.
+3. **merge** — :func:`_final_topk`, the per-query window top-k by
+   (dist, id) over the partials. That is the whole raw-vector search:
+   one corpus scan and one small shuffle.
+
+The compressed legs (SQ8/PQ/BQ) scan codes, not raw vectors, so their
+scan distances are approximate: they cut an R·k shortlist and then
+:func:`exact_rerank` it — join the shortlist back to the raw vectors by
+id and re-score it with the sequential ``aggregate(zip_with(...))``
+expression against the same validated matrix, handed to the JVM as an
+Arrow-built LocalRelation (:func:`local_query_relation`: a
+LocalTableScan, no Spark job, no SQL text).
 
 ``knn(impl="expr")`` and ``filtered_knn(impl="expr")`` keep a pure
 Catalyst form — broadcast join, higher-order-function distance, window
@@ -43,8 +52,9 @@ Semantics pinned for reproducibility / oracle checks:
   argsort tie order is undefined (coordinator/coordinator.py:229);
 - k clamped to >=1 (coordinator.py:145-147) and implicitly to corpus
   size (row_number runs out; reference shard_node.py:118-120);
-- distances are float64 over float32-stored vectors, clamped at >= 0
-  (BLAS norm-identity can yield -1e-16 for exact matches).
+- distances are float64 over float32-stored vectors, summed in the
+  oracle's sequential order (a self-match is exactly 0, and no value
+  depends on partition count or batch split).
 """
 
 from __future__ import annotations
@@ -57,7 +67,12 @@ import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from distributedvectordatabase_spark.functions.vector import cosine_dist, l2sq
+from distributedvectordatabase_spark.functions.vector import (
+    cosine_dist,
+    l2sq,
+    np_cosine_dist,
+    np_l2sq,
+)
 
 _METRICS = {"l2sq", "cosine"}
 
@@ -68,12 +83,6 @@ _METRICS = {"l2sq", "cosine"}
 # similarity JOIN, not a search, and must go through the join-based
 # knn(impl="expr") path (or setsim/near-dup operators) instead.
 MAX_QUERY_BATCH = 100_000
-
-# rescore="auto" switches carry -> joinback at this query dimension:
-# a 2k-slate row then carries >= 2 KB of float64 vector through the
-# merge shuffle, which costs more than the joinback's second (hash,
-# partition-prunable) probe of the corpus by id.
-AUTO_JOINBACK_DIM = 256
 
 
 def collect_query_batch(
@@ -100,8 +109,8 @@ def collect_query_batch(
 class QueryBatch(NamedTuple):
     """The collected query batch as arrays, built once per search call
     by :func:`query_matrix`: ``qids`` (int64, nq) and ``Q`` (float64,
-    nq × dim). The Arrow partial's broadcast payload and the rescore's
-    q side both read this one matrix."""
+    nq × dim). The scan's broadcast payload and the compressed legs'
+    rerank q side both read this one matrix."""
 
     qids: np.ndarray
     Q: np.ndarray
@@ -173,8 +182,9 @@ def local_query_relation(
     """The query batch as an Arrow-built LocalRelation
     ``(qid_col bigint, qvec_col array<double>)``.
 
-    The exact rerank (:func:`exact_rerank`) broadcast-joins the query
-    vectors back to the candidate slate. Referencing the original
+    The compressed legs' rerank (:func:`exact_rerank`) and the BQ query
+    encoder (``bq.bq_search``) join the query vectors back to a
+    candidate shortlist. Referencing the original
     ``queries`` plan there makes the broadcast build re-run the whole
     query-side subplan (e.g. a TakeOrdered scan of the corpus) as its
     own Spark job — once per search call — even though the exact same
@@ -282,27 +292,26 @@ def scan_topk(
     id_col: str,
     shard_col: str | None = None,
     cand_map: dict[int, frozenset] | None = None,
-    carry_vectors: bool = False,
 ) -> DataFrame:
     """Step 2 of every search: the ``mapInPandas`` partial top-k.
 
     Per Arrow batch of ``df.select(id_col, *cols[, shard_col])``, the
     index's distance ``kernel`` gives an (nq × batch) float64 distance
-    matrix; rows outside a query's candidate set (``cand_map``: qid →
-    the ``shard_col`` values it may match) are masked to +inf; and the
-    k best per query (with 2k tie slack in :func:`batch_topk`) are
-    emitted as (qid, neighbor_id, dist[, nvec]).
+    matrix ``D``; rows outside a query's candidate set (``cand_map``:
+    qid → the ``shard_col`` values it may match) are masked to +inf;
+    and each query's best rows are emitted as (qid, neighbor_id, dist).
 
     ``kernel(payload)`` runs once per task on the broadcast ``payload``
-    and returns ``dist(pdf) -> (D, X)``; ``X`` is the batch's float64
-    vectors, which ``carry_vectors`` ships as ``nvec`` so the rerank
-    needs no second scan (``None`` from the compressed kernels, which
-    never carry)."""
+    and returns ``dist(pdf) -> (D, exact)``. A compressed kernel
+    returns ``exact=None``: its k best by (D, id) are emitted (2k tie
+    slack in :func:`batch_topk`). A raw-vector kernel returns
+    ``exact(rows, cols)``, the sequential distance of those
+    (query, batch row) pairs: ``D`` then only selects the slate, which
+    is re-scored and cut in the same task (:func:`_slate_topk`)."""
     qids = batch.qids
     bc = df.sparkSession.sparkContext.broadcast(
         (qids, payload, _candidate_lut(qids, cand_map))
     )
-    take = 2 * k  # slack so dist-ties at the k boundary survive to the merge
 
     def scan(batches):
         qids, payload, lut = bc.value
@@ -311,53 +320,74 @@ def scan_topk(
             if len(pdf) == 0:
                 continue
             ids = pdf[id_col].values.astype(np.int64)
-            D, X = dist(pdf)
+            D, exact = dist(pdf)
             if lut is not None:
                 shards = pdf[shard_col].values.astype(np.int64)
                 in_range = (shards >= 0) & (shards < lut.shape[1])
                 ok = np.zeros((len(qids), len(shards)), dtype=bool)
                 ok[:, in_range] = lut[:, shards[in_range]]
                 D[~ok] = np.inf
-            sel_id, sel_d = batch_topk(D, ids, k, take)
-            keep = np.isfinite(sel_d).ravel()  # drop masked rows
-            if not keep.any():
-                # fully-masked batch: yielding an all-empty frame with an
-                # object nvec column trips Arrow's type inference
-                continue
-            out = {
-                "qid": np.repeat(qids, sel_d.shape[1])[keep],
-                "neighbor_id": sel_id.ravel()[keep],
-                "dist": sel_d.ravel()[keep],
-            }
-            if carry_vectors:
-                # carry the winners' vectors so the merge can re-score
-                # with the deterministic sequential expression (no second
-                # scan): map selected ids back to batch row positions
-                sorter = np.argsort(ids, kind="stable")
-                pos = sorter[np.searchsorted(ids, sel_id.ravel()[keep], sorter=sorter)]
-                out["nvec"] = list(X[pos])
-            yield pd.DataFrame(out)
+            if exact is None:
+                sel_id, sel_d = batch_topk(D, ids, k, 2 * k)
+                keep = np.isfinite(sel_d).ravel()  # drop masked rows
+                rows = np.repeat(np.arange(len(qids)), sel_d.shape[1])[keep]
+                nid, d = sel_id.ravel()[keep], sel_d.ravel()[keep]
+            else:
+                rows, cols, d = _slate_topk(D, ids, k, exact)
+                nid = ids[cols]
+            if len(d):
+                yield pd.DataFrame({"qid": qids[rows], "neighbor_id": nid, "dist": d})
 
     masked = [shard_col] if cand_map is not None else []
-    schema = "qid long, neighbor_id long, dist double"
-    if carry_vectors:
-        schema += ", nvec array<double>"
     return df.select(*dict.fromkeys([id_col, *cols, *masked])).mapInPandas(
-        scan, schema=schema
+        scan, schema="qid long, neighbor_id long, dist double"
     )
+
+
+def _slate_topk(D: np.ndarray, ids: np.ndarray, k: int, exact):
+    """One batch's exact top-k per query, as flat (row, col, dist).
+
+    The BLAS matrix ``D`` sums in a different order than the oracle's
+    sequential fold, so its values may sit an ulp or so off; it only
+    selects the slate: every finite entry within a relative 1e-9 of the
+    row's 2k-th smallest value, so the whole tie group at the boundary
+    rides along. ``exact(rows, cols)`` re-scores the slate and each row
+    keeps its k best by (exact dist, id). Masked (+inf) and NaN entries
+    are dropped by their ``D`` value, never by the re-scored one."""
+    t = min(2 * k, D.shape[1])
+    cut = np.partition(D, t - 1, axis=1)[:, t - 1]
+    # a row with under 2k finite entries keeps all of them
+    thr = np.where(
+        np.isfinite(cut),
+        cut + 1e-9 * np.maximum(1.0, np.abs(cut)),
+        np.finfo(np.float64).max,
+    )
+    rows, cols = np.nonzero(D <= thr[:, None])
+    d = exact(rows, cols)
+    order = np.lexsort((ids[cols], d, rows))
+    rows, cols, d = rows[order], cols[order], d[order]
+    rank = np.arange(len(rows)) - np.searchsorted(rows, rows)
+    keep = rank < k
+    return rows[keep], cols[keep], d[keep]
 
 
 def _exact_kernel(metric: str, vec_col: str):
     """The raw-vector distance kernel for :func:`scan_topk` (payload: the
     query matrix): one BLAS product per batch — squared L2 through the
     norm identity, clamped at 0, or cosine distance with a zero-norm
-    guard. It runs the pruned search on the same BLAS path as the exact
-    one instead of interpreted per-pair expressions (10× at 500k rows;
-    see bench_scale.py)."""
+    guard — to select the slate, and the oracle's sequential fold
+    (``functions.vector.np_l2sq``/``np_cosine_dist``) to score it. The
+    slate pairs are gathered about 2^20 values at a time, so even a
+    ``MAX_QUERY_BATCH`` batch never holds its whole nq × 2k × dim slate
+    in memory."""
+    if metric not in _METRICS:
+        raise ValueError(f"unknown metric {metric!r}; use one of {sorted(_METRICS)}")
+    fold = np_l2sq if metric == "l2sq" else np_cosine_dist
 
     def bind(Q):
         qn = np.einsum("ij,ij->i", Q, Q)
         qnorm = np.sqrt(qn)
+        step = max(1, (1 << 20) // max(Q.shape[1], 1))
 
         def dist(pdf):
             X = np.array(list(pdf[vec_col].values), dtype=np.float64)
@@ -369,7 +399,14 @@ def _exact_kernel(metric: str, vec_col: str):
                 denom = qnorm[:, None] * xnorm[None, :]
                 sim = np.divide(Q @ X.T, denom, out=np.zeros((len(Q), len(X))), where=denom != 0)
                 D = 1.0 - sim
-            return D, X
+
+            def exact(rows, cols):
+                out = np.empty(len(rows))
+                for s in range(0, len(rows), step):
+                    out[s:s + step] = fold(Q[rows[s:s + step]], X[cols[s:s + step]])
+                return out
+
+            return D, exact
 
         return dist
 
@@ -381,107 +418,32 @@ def exact_rerank(
     batch: QueryBatch,
     k: int,
     metric: str,
-    corpus: DataFrame | None = None,
+    corpus: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Step 3 of every search: the final top-k of a candidate ``slate``
-    by exact distance, returned as (qid, neighbor_id, dist, rnk).
+    """The compressed legs' last step: the final top-k of a (qid,
+    neighbor_id) shortlist by exact distance, returned as (qid,
+    neighbor_id, dist, rnk).
 
-    The slate is (qid, neighbor_id, nvec) when the scan carried the
-    vectors, or (qid, neighbor_id) with ``corpus`` given: its ≤ nq·slate
-    ids then join back to the raw vectors by id (a hash probe,
-    partition-prunable on a bucketed or cell-partitioned corpus). The q
-    side is the already-collected ``batch`` as an Arrow-built
-    LocalRelation (:func:`local_query_relation`) — the validated
-    matrix the scan was built from, handed to the JVM as one Arrow
-    buffer — so the rerank neither re-executes the ``queries`` subplan
-    as a broadcast-build job nor parses SQL text. ``dist`` is the sequential
-    ``aggregate(zip_with(...))`` expression the SQL oracle uses, so the
-    output does not depend on partition count or batch split."""
-    if corpus is not None:
-        slate = slate.join(
-            corpus.select(
-                F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("nvec")
-            ),
-            "neighbor_id",
-        )
+    The shortlist's ≤ nq·R·k ids join back to the raw ``corpus``
+    vectors by id (a hash probe, partition-prunable on a bucketed or
+    cell-partitioned corpus). The q side is the already-collected
+    ``batch`` as an Arrow-built LocalRelation
+    (:func:`local_query_relation`) — the validated matrix the scan was
+    built from, handed to the JVM as one Arrow buffer — so the rerank
+    neither re-executes the ``queries`` subplan as a broadcast-build
+    job nor parses SQL text. ``dist`` is the sequential
+    ``aggregate(zip_with(...))`` expression the SQL oracle uses."""
+    slate = slate.join(
+        corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("nvec")),
+        "neighbor_id",
+    )
     q = F.broadcast(local_query_relation(slate.sparkSession, batch, "qid", "_qvec"))
     rescored = slate.join(q, "qid").select(
         "qid", "neighbor_id", _dist_expr(metric, "_qvec", "nvec").alias("dist")
     )
     return _final_topk(rescored, k)
-
-
-def _rescored_topk(
-    partial: DataFrame,
-    batch: QueryBatch,
-    k: int,
-    metric: str,
-    join_corpus: DataFrame | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Deterministic final top-k over a raw-vector partial: cut a 2k
-    slate per query, then :func:`exact_rerank` it.
-
-    The BLAS distance matrix sums in batch order, so its float64 values
-    can land on either side of a rounding boundary depending on
-    parallelism — the oracle's sequential sum is one fixed order. BLAS
-    distances are therefore used only to *select* a 2k candidate slate
-    per query; the reported ``dist`` (and the final (dist, id) ordering)
-    is recomputed by the rerank.
-
-    Slate sufficiency: this assumes the true sequential-sum top-k lies
-    inside the BLAS-selected slate, which holds while BLAS-vs-sequential
-    divergence (ulp-scale) is smaller than the k→2k distance gap. For
-    duplicate-heavy corpora where many candidates tie near the slate
-    boundary, the epsilon guard below widens the slate to include every
-    candidate within ``eps`` of the 2k-th distance (mirroring the
-    boundary-tie guard in batch_topk).
-
-    Scale note: by default the partial carries each candidate's full
-    vector (``nvec``) through the merge shuffle — free at 64-D, ~4 KB/row
-    at 512-D. With ``join_corpus`` (knn(..., rescore="joinback")), the
-    partial omits ``nvec`` and the ≤ nq·(2k+ties) winner ids join back
-    to the corpus instead — the merge shuffle then moves only
-    (qid, id, dist) triples, the right trade at high dimension."""
-    # Relative epsilon: BLAS-vs-sequential float64 divergence scales
-    # with the distance magnitude (~1e-16 relative), so an absolute
-    # guard under-widens for large-magnitude l2sq (unnormalized
-    # high-dim vectors, dist >= ~1e7). 1e-9 relative keeps ~6 orders
-    # of headroom over ulp-scale divergence while still only admitting
-    # genuine boundary ties.
-    eps = 1e-9
-    w = Window.partitionBy("qid").orderBy("dist", "neighbor_id")
-    wq = Window.partitionBy("qid")
-    slate_cols = ["qid", "neighbor_id"] + (["nvec"] if join_corpus is None else [])
-    slate = (
-        partial.withColumn("rnk", F.row_number().over(w))
-        .withColumn(
-            "_cut",
-            F.max(F.when(F.col("rnk") <= 2 * k, F.col("dist"))).over(wq),
-        )
-        .filter(
-            (F.col("rnk") <= 2 * k)
-            | (
-                F.col("dist")
-                <= F.col("_cut")
-                + F.lit(eps) * F.greatest(F.lit(1.0), F.abs(F.col("_cut")))
-            )
-        )
-        .select(*slate_cols)
-    )
-    return exact_rerank(
-        slate, batch, k, metric, corpus=join_corpus, id_col=id_col, vec_col=vec_col
-    )
-
-
-def _resolve_rescore(rescore: str, batch: QueryBatch) -> str:
-    """``rescore="auto"`` → joinback at query dim >= AUTO_JOINBACK_DIM."""
-    if rescore != "auto":
-        return rescore
-    return "joinback" if batch.Q.shape[1] >= AUTO_JOINBACK_DIM else "carry"
 
 
 def _exact_topk(
@@ -491,27 +453,18 @@ def _exact_topk(
     metric: str,
     id_col: str,
     vec_col: str,
-    rescore: str,
     shard_col: str | None = None,
     cand_map: dict[int, frozenset] | None = None,
-    join_corpus: DataFrame | None = None,
 ) -> DataFrame:
-    """Scan + rerank over raw vectors — the exact, LSH-pruned, filtered
-    and IVF searches. ``rescore`` resolves to carry (vectors ride the
-    partial) or joinback (the slate joins ``join_corpus``, by default
-    the scanned ``corpus``, by id)."""
-    carry = _resolve_rescore(rescore, batch) == "carry"
+    """Scan + merge over raw vectors — the exact, LSH-pruned, filtered
+    and IVF searches. An empty batch plans ``limit(0)``, which Catalyst
+    folds to an empty relation: no rows, and no corpus scan."""
     partial = scan_topk(
         corpus, batch, k, _exact_kernel(metric, vec_col), batch.Q, [vec_col], id_col,
-        shard_col=shard_col, cand_map=cand_map, carry_vectors=carry,
+        shard_col=shard_col, cand_map=cand_map,
     )
-    if carry:
-        join_corpus = None
-    elif join_corpus is None:
-        join_corpus = corpus
-    return _rescored_topk(
-        partial, batch, k, metric, join_corpus=join_corpus, id_col=id_col, vec_col=vec_col,
-    )
+    out = _final_topk(partial, k)
+    return out if len(batch.qids) else out.limit(0)
 
 
 def lsh_candidates(
@@ -541,7 +494,6 @@ def knn(
     qid_col: str = "qid",
     qvec_col: str = "qvec",
     impl: str = "arrow",
-    rescore: str = "auto",
     dim: int | None = None,
 ) -> DataFrame:
     """Batch exact kNN: for every query row, the k nearest corpus rows.
@@ -554,18 +506,6 @@ def knn(
     form: broadcast join + sequential distance expression + window
     top-k, whole-stage-codegen'd with zero Python and no driver collect.
 
-    ``rescore`` (arrow impl only) picks how the deterministic re-score
-    gets the candidate vectors: ``"carry"`` ships them inside the
-    partial (one scan; +dim×8 bytes per slate row through the merge
-    shuffle), ``"joinback"`` ships only (qid, id, dist) and joins the
-    ≤ nq·2k winners back to the corpus by id — identical results, the
-    better trade at high dimension or huge query batches. The default
-    ``"auto"`` picks joinback at query dim >= 256 (a 2k-slate row then
-    carries >= 2 KB of vector through the merge shuffle), carry below
-    (the joinback's second corpus probe costs more than shipping small
-    vectors). Resolved from the already-collected query batch — no
-    extra Spark job.
-
     ``dim`` (arrow impl) is the corpus dimension when the caller knows
     it (a store does): a query of another length raises ``ValueError``
     before the scan is planned. Ragged batches and non-finite query
@@ -574,19 +514,9 @@ def knn(
     k = max(int(k), 1)
     if metric not in _METRICS:
         raise ValueError(f"unknown metric {metric!r}")
-    if rescore not in ("auto", "carry", "joinback"):
-        raise ValueError(
-            f"unknown rescore {rescore!r}; use 'auto', 'carry' or 'joinback'"
-        )
-    if impl == "expr" and rescore not in ("auto", "carry"):
-        raise ValueError(
-            "rescore applies to impl='arrow' only: the expr impl already "
-            "scores with the sequential aggregate(zip_with(...)) expression, "
-            "so there is nothing to re-score; drop rescore or use impl='arrow'"
-        )
     if impl == "arrow":
         batch = query_batch(queries, qid_col, qvec_col, dim)
-        return _exact_topk(corpus, batch, k, metric, id_col, vec_col, rescore)
+        return _exact_topk(corpus, batch, k, metric, id_col, vec_col)
     if impl == "expr":
         pairs = corpus.join(F.broadcast(queries.select(qid_col, qvec_col)))
         scored = pairs.select(
@@ -632,7 +562,6 @@ def knn_pruned(
     qid_col: str = "qid",
     qvec_col: str = "qvec",
     shard_col: str = "shard_id",
-    rescore: str = "auto",
 ) -> DataFrame:
     """LSH-pruned approximate kNN (the reference's 2-of-3 shard probe:
     coordinator/coordinator.py:150-175, sharding/lsh_sharding.py:98-161,
@@ -648,16 +577,13 @@ def knn_pruned(
     2. per-batch shard masking inside the same Arrow/BLAS partial top-k
        scan the exact path uses, so each query only ranks rows of its
        own candidate shards.
-
-    ``rescore`` is :func:`knn`'s.
     """
     k = max(int(k), 1)
     batch = query_batch(queries, qid_col, qvec_col, lsh.dim)
     cand_map, shards = lsh_candidates(lsh, batch, num_candidates)
     pruned = corpus_bucketed.filter(F.col(shard_col).isin(shards))
     return _exact_topk(
-        pruned, batch, k, metric, id_col, vec_col, rescore,
-        shard_col=shard_col, cand_map=cand_map,
+        pruned, batch, k, metric, id_col, vec_col, shard_col=shard_col, cand_map=cand_map,
     )
 
 
@@ -684,7 +610,6 @@ def filtered_knn(
     qid_col: str = "qid",
     qvec_col: str = "qvec",
     impl: str = "arrow",
-    rescore: str = "auto",
     dim: int | None = None,
 ) -> DataFrame:
     """Metadata-filtered exact kNN — attribute predicates composed with
@@ -730,18 +655,12 @@ def filtered_knn(
     if filter_col is None:
         return knn(
             corpus, queries, k=k, metric=metric, id_col=id_col, vec_col=vec_col,
-            qid_col=qid_col, qvec_col=qvec_col, impl=impl, rescore=rescore,
-            dim=dim,
+            qid_col=qid_col, qvec_col=qvec_col, impl=impl, dim=dim,
         )
     qf = qfilter_col or filter_col
     if impl == "expr":
         # the equality join IS the constraint — no driver collect, no
         # cap: this is the path for corpus-scale constrained matching
-        if rescore not in ("auto", "carry"):
-            raise ValueError(
-                "rescore applies to impl='arrow' only: the expr impl already "
-                "scores with the sequential aggregate(zip_with(...)) expression"
-            )
         pairs = corpus.join(
             F.broadcast(queries.select(qid_col, qvec_col, F.col(qf).alias("_qf"))),
             on=F.col(filter_col) == F.col("_qf"),
@@ -769,12 +688,13 @@ def filtered_knn(
             continue  # NULL matches nothing; the query stays fully masked
         idx = value_to_idx.setdefault(v, len(value_to_idx))
         cand_map[int(r[qid_col])] = frozenset([idx])
-    spark = corpus.sparkSession
     pruned = corpus.filter(F.col(filter_col).isin(list(value_to_idx)))
     if value_to_idx:
-        map_df = spark.createDataFrame(
-            [(v, i) for v, i in value_to_idx.items()], ["_fval", "_fidx"]
-        )
+        # built from Arrow, a LocalRelation: the broadcast runs no job
+        map_df = corpus.sparkSession.createDataFrame(pa.table({
+            "_fval": pa.array(list(value_to_idx)),
+            "_fidx": pa.array(list(value_to_idx.values()), pa.int64()),
+        }))
         masked = pruned.join(
             F.broadcast(map_df), F.col(filter_col) == F.col("_fval")
         ).drop("_fval")
@@ -782,6 +702,5 @@ def filtered_knn(
         masked = pruned.withColumn("_fidx", F.lit(0))  # pruned is already empty
 
     return _exact_topk(
-        masked, batch, k, metric, id_col, vec_col, rescore,
-        shard_col="_fidx", cand_map=cand_map, join_corpus=pruned,
+        masked, batch, k, metric, id_col, vec_col, shard_col="_fidx", cand_map=cand_map,
     )

@@ -360,8 +360,8 @@ def pq_search(
     With ``rerank=R`` (and ``corpus``), the ADC pass produces an R·k
     shortlist per query whose *exact* distances are then computed by
     joining the ≤ nq·R·k winner ids back to the raw vectors — the
-    FAISS refine pattern, and the same joinback shape as
-    knn(rescore="joinback"): the compressed scan does the heavy
+    FAISS refine pattern, through the shared ``knn.exact_rerank``
+    that every compressed leg uses: the compressed scan does the heavy
     elimination, the float vectors are touched only for the shortlist
     (a hash/partition-prunable id probe). Measured on the 64-D
     testdata (recall@10 vs exact): m=16/nbits=6 raw 0.61 → 0.94 at

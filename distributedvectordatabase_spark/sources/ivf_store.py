@@ -144,8 +144,9 @@ class IVFStore(VectorTable, StreamedStore):
             )
             self.n_cells = len(centers)
         assigned = assigned.withColumn("_gen", F.lit(1))
-        # the static overwrite drops the whole store dir, tombstones and
-        # sidecars included — a rebuild starts a fresh delete history
+        # the rows restart at gen 1, so the delete history restarts too
+        # (the static overwrite below also drops the whole store dir)
+        self._fresh_history()
         assigned.write.mode("overwrite").partitionBy("cell_id").parquet(self.path)
         radii = self._cell_radii_of(
             df.sparkSession.read.parquet(self.path), np.array(centers, dtype=np.float64)
@@ -916,7 +917,6 @@ class IVFStore(VectorTable, StreamedStore):
         metric: str = "l2sq",
         qid_col: str = "qid",
         qvec_col: str = "qvec",
-        rescore: str = "auto",
         where: str | None = None,
         escalate: bool = True,
         as_of_gen: int | None = None,
@@ -928,9 +928,9 @@ class IVFStore(VectorTable, StreamedStore):
         layout are fixed between compactions, so pruning stays exact.
 
         The probed cells are the candidate source (:meth:`_probe`): the
-        probed rows are scored on the same BLAS partial-top-k scan as
-        exact/pruned kNN with a per-query cell mask, then reranked
-        exactly (``knn.exact_rerank``; ``rescore`` is ``knn``'s).
+        probed rows are scored on the same scan as exact/pruned kNN
+        (BLAS slate, sequential re-score in the same task) with a
+        per-query cell mask.
 
         ``where`` is a SQL predicate over the store's metadata columns
         (``build(..., meta_cols=...)`` co-locates them with the
@@ -960,7 +960,7 @@ class IVFStore(VectorTable, StreamedStore):
         batch = query_batch(queries, qid_col, qvec_col, C.shape[1])
         cand_map, probed, order, d2 = self._probe(batch, n_probe, C)
         result = self._knn_probe(
-            spark, batch, cand_map, probed, k, metric, rescore, where, as_of_gen,
+            spark, batch, cand_map, probed, k, metric, where, as_of_gen,
         )
         if where is None or not escalate or n_probe >= self.n_cells:
             return result
@@ -1007,7 +1007,7 @@ class IVFStore(VectorTable, StreamedStore):
             sub = QueryBatch(batch.qids[starved], batch.Q[starved])
             sub_map, sub_probed, _, _ = self._probe(sub, cur, C)
             sub_out = self._knn_probe(
-                spark, sub, sub_map, sub_probed, k, metric, rescore, where, as_of_gen,
+                spark, sub, sub_map, sub_probed, k, metric, where, as_of_gen,
             ).toPandas()
             out = pd_.concat(
                 [out[~out["qid"].isin(starved_ids)], sub_out], ignore_index=True
@@ -1022,7 +1022,6 @@ class IVFStore(VectorTable, StreamedStore):
         probed: list,
         k: int,
         metric: str,
-        rescore: str,
         where: str | None,
         as_of_gen: int | None = None,
     ) -> DataFrame:
@@ -1034,5 +1033,5 @@ class IVFStore(VectorTable, StreamedStore):
             corpus = corpus.filter(where)
         return _exact_topk(
             corpus, batch, max(int(k), 1), metric, self.id_col, self.vec_col,
-            rescore, shard_col="cell_id", cand_map=cand_map,
+            shard_col="cell_id", cand_map=cand_map,
         )

@@ -136,6 +136,10 @@ class SigStore(StreamedStore):
         text_col: str = "text",
         ingest_batch: int | None = None,
     ) -> None:
+        """Index ``docs`` from scratch. A build over an existing store
+        starts a fresh history: its rows restart at gen 1, so the old
+        tombstones and sidecar protocol fields go."""
+        self._fresh_history()
         toks, banded = self._prepared(docs, id_col, text_col)
         (
             banded.withColumn(GEN_COL, F.lit(1))
@@ -150,8 +154,7 @@ class SigStore(StreamedStore):
         # write gen only AFTER the data lands (a crashed build burns
         # nothing — there is no config yet; the streaming batch id
         # rides the same dump)
-        cfg = self._config()
-        cfg.update(self._config_fields())
+        cfg = self._config_fields()
         cfg["gen"] = 1
         if ingest_batch is not None:
             cfg["ingest_batch"] = int(ingest_batch)

@@ -89,7 +89,9 @@ class TextIndex(StreamedStore):
         ``ingest_batch`` (streaming) rides the stats dump so the
         batch-committed marker is atomic with the index becoming
         readable; the overwrite writes make a replayed build
-        idempotent."""
+        idempotent. A build over an existing index starts a fresh
+        history: its rows restart at gen 1, so the old tombstones go."""
+        self._fresh_history()
         toks = F.expr(T.tokens(text_col, T.SPARK))
         base = docs.select(F.col(id_col).alias("doc_id"), toks.alias("toks"))
 

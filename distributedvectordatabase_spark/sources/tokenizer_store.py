@@ -147,11 +147,7 @@ class TokenizerStore(StreamedStore):
         fresh training forever (merges() picks max gen), and old
         tombstones would silently kill re-registered doc ids (new rows
         at _gen=1 fail the '_gen > tombstone gen' survival rule)."""
-        import shutil
-
-        for stale in (self._merges_path, self._tombstone_path):
-            if os.path.exists(stale):
-                shutil.rmtree(stale)
+        self._fresh_history(self._merges_path)
         (
             self._word_counts_of(docs, id_col, text_col)
             .withColumn(GEN_COL, F.lit(1))

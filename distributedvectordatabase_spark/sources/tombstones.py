@@ -704,6 +704,18 @@ class GenerationalStore:
             side["ingest_batch"] = int(ingest_batch)
         self._dump(side)
 
+    def _fresh_history(self, *stale: str) -> None:
+        """Start a fresh history: the first step of every whole-store
+        rebuild whose rows restart at gen 1 (VectorStore's overwrite
+        continues the gen count instead). It drops the old tombstones
+        and ``stale``, a store's own versioned paths. Left behind, an id
+        deleted before the rebuild stays hidden after it, because its
+        re-written row at ``_gen`` 1 fails the ``_gen > tombstone gen``
+        survival rule."""
+        for path in (self._tombstone_path, *stale):
+            if os.path.exists(path):
+                shutil.rmtree(path)
+
     def _rebuild_gen(self) -> int:
         """The gen a whole-store rebuild writes at (no intent: the
         rebuild's overwrite replaces the sidecar with its commit)."""

@@ -302,7 +302,7 @@ class VectorStore(VectorTable):
                     )
                 finally:
                     out.unpersist()
-                self._sq_record_gen(gen)
+                self._record_codes_gen(self._sq_params_path, gen)
         except Exception as e:  # surface the in-flight dim check typed
             if validate_dim and "dimension mismatch" in str(e):
                 raise DimensionMismatchError(
@@ -397,10 +397,17 @@ class VectorStore(VectorTable):
         tombstones at read), so their sidecars stay current at the
         delete's gen."""
         gen = self._tombstone(spark, ids)
-        if os.path.exists(self._sq_params_path):
-            self._sq_record_gen(gen)
-        if os.path.exists(self._bq_params_path):
-            self._bq_record_gen(gen)
+        for params in (self._sq_params_path, self._bq_params_path):
+            if os.path.exists(params):
+                self._record_codes_gen(params, gen)
+
+    @staticmethod
+    def _record_codes_gen(params_path: str, gen: int) -> None:
+        """Stamp a codes sidecar (SQ8 or binary) as synced to ``gen``."""
+        with open(params_path) as f:
+            side = json.load(f)
+        side["gen"] = int(gen)
+        atomic_dump_json(params_path, side)
 
     @locked_writer
     def upsert(self, df: DataFrame, validate_dim: bool = True) -> None:
@@ -451,16 +458,6 @@ class VectorStore(VectorTable):
 
         with open(self._sq_params_path) as f:
             return SQParams.from_dict(json.load(f))
-
-    def _sq_record_gen(self, gen: int) -> None:
-        with open(self._sq_params_path) as f:
-            side = json.load(f)
-        side["gen"] = int(gen)
-        atomic_dump_json(self._sq_params_path, side)
-
-    def _sq_synced_gen(self) -> int:
-        with open(self._sq_params_path) as f:
-            return int(json.load(f).get("gen", 0))
 
     def _sq_codes(
         self, spark: SparkSession, as_of_gen: int | None = None
@@ -656,16 +653,6 @@ class VectorStore(VectorTable):
              # physically absent from the codes (r9)
              "built_gen": self._gen()},
         )
-
-    def _bq_record_gen(self, gen: int) -> None:
-        with open(self._bq_params_path) as f:
-            side = json.load(f)
-        side["gen"] = int(gen)
-        atomic_dump_json(self._bq_params_path, side)
-
-    def _bq_synced_gen(self) -> int:
-        with open(self._bq_params_path) as f:
-            return int(json.load(f).get("gen", 0))
 
     def knn_bq(self, spark: SparkSession, queries: DataFrame, k: int = 10,
                rerank: int = 2, pruned: bool = True, num_candidates: int = 2,

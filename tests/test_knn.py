@@ -105,23 +105,52 @@ def test_large_query_batch_matches_oracle(spark, oracle):
         assert got_set == want_set, f"{impl}: {len(got_set ^ want_set)} mismatches"
 
 
-def test_partition_count_determinism(spark):
-    """The rescored merge makes kNN output independent of partition
-    count and Arrow batch split: identical canonical rows whether the
-    corpus arrives as 1, 7, or default partitions (locks in the
-    _rescored_topk determinism fix structurally)."""
+def test_partition_count_determinism(spark, tmp_path, monkeypatch):
+    """The in-task sequential re-score makes kNN output independent of
+    partition count and Arrow batch split: identical canonical rows
+    (full-precision dist) whether the scanned rows arrive as 1, 7 or
+    default partitions — exact kNN in both metrics, the LSH-pruned
+    search and the IVF store's probed search."""
+    from distributedvectordatabase_spark.functions.lsh import SignLSH
+    from distributedvectordatabase_spark.operators.knn import knn_pruned
+    from distributedvectordatabase_spark.sources.ivf_store import IVFStore
+
     corpus = load_table(spark, "embeddings", SF_DIR)
     queries = queries_fixture(spark, SF_DIR, n=20)
+    lsh = SignLSH()
+    bucketed = lsh.assign(corpus)
+    ivf = IVFStore(str(tmp_path / "ivf"), n_cells=8)
+    ivf.build(corpus)
+    ivf_read = ivf.read
 
     def canon(df):
         return sorted(
             (r.qid, r.neighbor_id, r.rnk, repr(r.dist)) for r in df.collect()
         )
 
-    base = canon(knn(corpus, queries, k=10, metric="l2sq"))
+    def searches(nparts):
+        def split(df):
+            return df if nparts is None else df.repartition(nparts)
+
+        monkeypatch.setattr(
+            ivf, "read", lambda spark, as_of_gen=None: split(ivf_read(spark, as_of_gen))
+        )
+        out = {}
+        for metric in ("l2sq", "cosine"):
+            out["knn", metric] = canon(knn(split(corpus), queries, k=10, metric=metric))
+            out["knn_pruned", metric] = canon(
+                knn_pruned(split(bucketed), queries, lsh, k=10, metric=metric)
+            )
+            out["ivf", metric] = canon(
+                ivf.knn(spark, queries, k=10, n_probe=2, metric=metric)
+            )
+        return out
+
+    base = searches(None)
     for nparts in (1, 7):
-        got = canon(knn(corpus.repartition(nparts), queries, k=10, metric="l2sq"))
-        assert got == base, f"output differs at repartition({nparts})"
+        got = searches(nparts)
+        for key, want in base.items():
+            assert got[key] == want, f"{key} differs at repartition({nparts})"
 
 
 def test_large_magnitude_boundary_ties_deterministic(spark):
@@ -159,13 +188,6 @@ def test_large_magnitude_boundary_ties_deterministic(spark):
         assert got == want, f"arrow != expr at repartition({nparts})"
 
 
-def test_rescore_rejected_on_expr_impl(spark):
-    corpus = load_table(spark, "embeddings", SF_DIR)
-    queries = queries_fixture(spark, SF_DIR, n=2)
-    with pytest.raises(ValueError, match="arrow"):
-        knn(corpus, queries, k=3, impl="expr", rescore="joinback")
-
-
 def test_query_batch_collect_guard(spark, monkeypatch):
     """The driver-side query collect is capped: an over-size query set
     raises instead of OOMing the driver (the join-based path is the
@@ -181,42 +203,6 @@ def test_query_batch_collect_guard(spark, monkeypatch):
     monkeypatch.setattr(knnmod, "MAX_QUERY_BATCH", 5)
     with pytest.raises(ValueError, match="MAX_QUERY_BATCH"):
         knn(corpus, queries, k=3)
-
-
-def test_joinback_rescore_identical_to_carry(spark):
-    """rescore='joinback' (merge shuffle without vectors, corpus
-    point-lookup join) must produce byte-identical results to the
-    default carry path — same slate, same sequential re-score."""
-    corpus = load_table(spark, "embeddings", SF_DIR)
-    queries = queries_fixture(spark, SF_DIR, n=20)
-
-    def canon(df):
-        return sorted(
-            (r.qid, r.neighbor_id, r.rnk, repr(r.dist)) for r in df.collect()
-        )
-
-    for metric in ("l2sq", "cosine"):
-        carry = canon(knn(corpus, queries, k=10, metric=metric))
-        joinback = canon(knn(corpus, queries, k=10, metric=metric, rescore="joinback"))
-        assert carry == joinback, metric
-
-
-def test_pruned_joinback_identical_to_carry(spark):
-    from distributedvectordatabase_spark.functions.lsh import SignLSH
-    from distributedvectordatabase_spark.operators.knn import knn_pruned
-
-    lsh = SignLSH()
-    corpus = lsh.assign(load_table(spark, "embeddings", SF_DIR))
-    queries = queries_fixture(spark, SF_DIR, n=20)
-
-    def canon(df):
-        return sorted(
-            (r.qid, r.neighbor_id, r.rnk, repr(r.dist)) for r in df.collect()
-        )
-
-    carry = canon(knn_pruned(corpus, queries, lsh, k=10))
-    joinback = canon(knn_pruned(corpus, queries, lsh, k=10, rescore="joinback"))
-    assert carry == joinback
 
 
 def test_filtered_knn_global_predicate_pushdown(spark):
@@ -364,13 +350,6 @@ def test_filtered_knn_negative_and_null_constraints(spark):
         want = -1 if r.qid == 0 else 5
         assert labels[r.neighbor_id] == want, r
 
-    # joinback path hits the same mask (used to crash on a fully-masked
-    # batch when carrying vectors)
-    jb = filtered_knn(
-        corpus, queries, k=3, filter_col="label", qfilter_col="qlabel",
-        impl="arrow", rescore="joinback",
-    )
-    assert canon(jb) == a
 
 
 def test_filtered_knn_string_constraint_values(spark):
@@ -396,9 +375,10 @@ def test_filtered_knn_string_constraint_values(spark):
 
 
 def test_local_query_relation_round_trips_exactly(spark):
-    """The Arrow-built LocalRelation the rescore uses as its q side must
-    reproduce every double bit-for-bit: the float64 matrix crosses to
-    the JVM as one Arrow buffer, with no decimal text in between."""
+    """The Arrow-built LocalRelation the compressed legs' rerank uses as
+    its q side must reproduce every double bit-for-bit: the float64
+    matrix crosses to the JVM as one Arrow buffer, with no decimal text
+    in between."""
     import math
     import struct
 
@@ -499,28 +479,57 @@ def rescore_paths(spark, tmp_path_factory):
 
 
 def test_knn_rescore_side_is_local_relation(spark, rescore_paths):
-    """The deterministic rescore must NOT re-execute the query subplan
-    as a broadcast-build job: the final plan carries a LocalTableScan
-    for the q side — the Arrow-built relation, never an RDD-backed one
-    — and exactly one scan per store table the search reads: the
-    corpus for the raw paths, the codes table plus the raw table for
-    the compressed legs' rerank."""
+    """A raw-vector search is one corpus scan and one merge: its plan
+    has exactly one ``Scan parquet``, no LocalTableScan and no
+    BroadcastExchange — the slate is re-scored inside the scan task,
+    so there is no q relation, no joinback and no second scan. The
+    filtered search adds only its constraint dictionary, a broadcast
+    Arrow-built LocalRelation (never an RDD-backed one, which would
+    cost a Spark job). The compressed legs rerank their shortlist
+    against the Arrow-built q side: a LocalTableScan and one scan per
+    store table, the codes plus the raw vectors."""
     from tests.conftest import SF_SMALL
 
-    queries = queries_fixture(spark, SF_SMALL, n=3)
-    tables = {
-        "knn": 1, "vector_store_pruned": 1, "vector_store_exact": 1,
-        "ivf_store": 1, "vector_store_sq": 2, "vector_store_bq": 2,
-        "ivf_sq": 2, "ivf_pq": 2, "ivf_bq": 2,
-    }
-    for path, n_tables in tables.items():
-        plan = (
-            rescore_paths[path](queries)
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-        assert "LocalTableScan" in plan, path
-        assert "LogicalRDD" not in plan and "Scan ExistingRDD" not in plan, path
-        assert plan.count("Scan parquet") == n_tables, path
+    # queries_fixture's rows plus the label filtered_knn constrains on
+    queries = load_table(spark, "embeddings", SF_SMALL).orderBy("vec_id").limit(3).select(
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec"), "label"
+    )
+
+    def plan(path):
+        return rescore_paths[path](queries)._jdf.queryExecution().executedPlan().toString()
+
+    for path in ("knn", "knn_pruned", "vector_store_pruned", "vector_store_exact", "ivf_store"):
+        p = plan(path)
+        assert p.count("Scan parquet") == 1, path
+        assert "LocalTableScan" not in p and "BroadcastExchange" not in p, path
+
+    p = plan("filtered_knn")
+    assert p.count("Scan parquet") == 1 and p.count("BroadcastExchange") == 1
+    assert "LocalTableScan" in p
+    assert "LogicalRDD" not in p and "Scan ExistingRDD" not in p
+
+    for path in ("vector_store_sq", "vector_store_bq", "ivf_sq", "ivf_pq", "ivf_bq"):
+        p = plan(path)
+        assert "LocalTableScan" in p, path
+        assert "LogicalRDD" not in p and "Scan ExistingRDD" not in p, path
+        assert p.count("Scan parquet") == 2, path
+
+
+def test_empty_query_batch_plans_no_scan(spark, rescore_paths):
+    """An empty query batch returns no rows on every raw-vector path,
+    and its plan reads no corpus file."""
+    import pyarrow as pa
+
+    queries = spark.createDataFrame(pa.table({
+        "qid": pa.array([], pa.int64()),
+        "qvec": pa.array([], pa.list_(pa.float64())),
+        "label": pa.array([], pa.int32()),
+    }))
+    for path in ("knn", "knn_pruned", "filtered_knn", "vector_store_pruned",
+                 "vector_store_exact", "ivf_store"):
+        df = rescore_paths[path](queries)
+        assert df.collect() == [], path
+        assert "Scan parquet" not in df._jdf.queryExecution().executedPlan().toString(), path
 
 
 def test_compressed_legs_collect_queries_once(spark, rescore_paths, monkeypatch):

@@ -465,3 +465,24 @@ def test_delete_over_crashed_append_then_compact(spark, tmp_path, adapter):
     if streamed:
         assert store.ingest_batch() == 7
     assert adapter.canon(spark, store) == after
+
+
+@pytest.mark.parametrize("adapter", LIFECYCLE, ids=[a.name for a in LIFECYCLE])
+def test_rebuild_over_deleted_ids_starts_fresh_history(spark, tmp_path, adapter):
+    """A whole-store rebuild over an existing path starts a fresh
+    history: ids deleted before the rebuild are live again after it.
+    The rebuilt rows restart at gen 1, so tombstones left behind would
+    keep hiding them (build, delete 2, rebuild the same corpus → the
+    canonical query must equal the first build's)."""
+    df = adapter.corpus(spark)
+    path = str(tmp_path / "s")
+    store = adapter.build(spark, path, df)
+    before = adapter.canon(spark, store)
+    victims = adapter.ids_of(before)[:2]
+    assert victims
+    adapter.delete(spark, store, victims)
+    assert not set(adapter.ids_of(adapter.canon(spark, store))) & set(victims)
+
+    rebuilt = adapter.build(spark, path, df)
+    assert adapter.canon(spark, rebuilt) == before
+    assert not os.path.exists(adapter.tombstone_path(rebuilt))
