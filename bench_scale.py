@@ -129,7 +129,7 @@ def main() -> None:
     dim = int(sys.argv[2]) if len(sys.argv) > 2 else DIM
     n_docs = int(sys.argv[3]) if len(sys.argv) > 3 else 0
     rank = int(sys.argv[4]) if len(sys.argv) > 4 else 0
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 1)
     spark = get_spark(
         app_name="dvdb-bench-scale", master=f"local[{cpus}]", shuffle_partitions=int(cpus)
     )

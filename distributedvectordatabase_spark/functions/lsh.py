@@ -30,10 +30,12 @@ way).
 
 Spark-side evaluation is a scalar ``pandas_udf`` (Arrow batches, one
 float64 BLAS matmul per batch — the analog of the reference's
-vectorized ``batch_get_shard_ids``, lsh_sharding.py:163-190). A pure
-SQL-expression variant is provided for Structured Streaming and for
-engines without Python workers, and a DuckDB dialect generator embeds
-the same projection constants for oracle checks.
+vectorized ``batch_get_shard_ids``, lsh_sharding.py:163-190); batch
+writes, Structured Streaming ingest and ``assign`` all use it. A pure
+Catalyst-expression variant (``bucket_expr``) and a Spark SQL string
+(``bucket_sql_spark``, behind the ``lsh_bucket`` SQL function) run
+without Python workers, and a DuckDB dialect generator embeds the same
+projection constants for oracle checks.
 """
 
 from __future__ import annotations
@@ -128,12 +130,21 @@ class SignLSH:
         return lsh_bucket
 
     def assign(self, df: DataFrame, vec_col: str = "embedding", out: str = "shard_id") -> DataFrame:
-        """Add the shard_id column (reference batch_get_shard_ids)."""
-        return df.withColumn(out, self.bucket_udf()(F.col(vec_col)))
+        """Add the shard_id column (reference batch_get_shard_ids).
+
+        The UDF is marked nondeterministic so Catalyst evaluates it once
+        per row: a deterministic one is copied into any filter on
+        ``out`` pushed below this projection (``knn_pruned``'s shard
+        ``IN``), which runs the Python UDF a second time. Catalyst then
+        pushes no filter through this projection, so filter other
+        columns before ``assign``, not after."""
+        return df.withColumn(out, self.bucket_udf().asNondeterministic()(F.col(vec_col)))
 
     def bucket_expr(self, vec_col: Column | str) -> Column:
-        """Pure Catalyst expression variant (no Python worker) — used by
-        Structured Streaming ingest; same formula, codegen'd."""
+        """Pure Catalyst expression variant (no Python worker); same
+        formula, codegen'd. The package's ingest paths (``assign``,
+        ``stream_ingest_vectors``) use the pandas UDF instead; this
+        serves callers that cannot start Python workers."""
         c = (F.col(vec_col) if isinstance(vec_col, str) else vec_col).cast("array<double>")
         acc = F.lit(0).cast("long")
         for j in range(self.num_bits):

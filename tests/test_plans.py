@@ -6,14 +6,18 @@ instead of broadcast, full scan instead of pruned partitions). These
 tests pin the shapes that make the engine viable at 100 TB.
 """
 
+import re
+
 import pyspark.sql.functions as F
 import pytest
 
-from distributedvectordatabase_spark.operators.knn import knn, knn_single
+from distributedvectordatabase_spark.functions.lsh import SignLSH
+from distributedvectordatabase_spark.operators.knn import knn, knn_pruned, knn_single
 from distributedvectordatabase_spark.plans import (
     codegen_stage_count,
     has_broadcast,
     has_take_ordered,
+    physical_plan,
     scan_partition_filters,
     scan_pushed_filters,
     scan_read_schema,
@@ -60,6 +64,18 @@ def test_pruned_knn_has_partition_filters(spark, corpus, qs, tmp_path):
     df = store.knn(spark, qs, k=5)
     pf = scan_partition_filters(df)
     assert pf and any("shard_id" in f for f in pf), pf
+
+
+def test_lsh_assign_runs_bucket_udf_once_under_shard_filter(spark, corpus, qs):
+    """A shard filter over ``SignLSH.assign`` must not re-run the
+    ``lsh_bucket`` pandas UDF: PushDownPredicates copies a deterministic
+    UDF into the pushed filter, which planned a second ArrowEvalPython
+    under ``knn_pruned``'s shard ``IN``."""
+    lsh = SignLSH(dim=64)
+    filtered = lsh.assign(corpus.limit(50)).filter(F.col("shard_id").isin([0, 1]))
+    pruned = knn_pruned(lsh.assign(corpus), qs, lsh, k=5)
+    for df in (filtered, pruned):
+        assert len(re.findall(r"\n\(\d+\) ArrowEvalPython", physical_plan(df))) == 1
 
 
 def test_ivf_exact_probe_still_prunes_by_cell(spark, corpus, qs, tmp_path):
