@@ -35,7 +35,7 @@ knn:
 	python -m pytest -q tests/test_knn.py tests/test_batch_topk_properties.py \
 		tests/test_filtered_knn_properties.py tests/test_ivf_store.py \
 		tests/test_sq.py tests/test_pq.py tests/test_bq.py \
-		tests/test_engine_parity.py tests/test_search.py
+		tests/test_engine_parity.py tests/test_search.py tests/test_kmeans.py
 
 # bit-level oracle comparison of every gated query (the strictest form
 # of the driver's sha256-of-CSV hash check); also runs inside `check`

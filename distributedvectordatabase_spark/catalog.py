@@ -3818,9 +3818,9 @@ def _ivf_gate_store(sf_dir: str):
 
 def _run_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN through the persistent store: build once per sf_dir
-    (KMeans fit + cell-partitioned write), then query with partition
-    pruning — the build/query split a real index workload uses, and
-    ~5 s less KMeans per bench call than the fit-per-query operator."""
+    (sampled k-means fit + cell-partitioned write), then query with
+    partition pruning — the build/query split a real index workload
+    uses."""
     from distributedvectordatabase_spark.sources.tables import load_table, queries_fixture
 
     store = _ivf_gate_store(sf_dir)

@@ -1,6 +1,3 @@
-# NOTE: operators.ann.ivf_knn is intentionally not re-exported — it
-# refits KMeans per call (plan-shape demo); the production IVF path is
-# sources.ivf_store.IVFStore (build once, partition-pruned probes).
 from distributedvectordatabase_spark.operators.asof import asof_join
 from distributedvectordatabase_spark.operators.bpe import bpe_apply, bpe_train, word_vocab
 from distributedvectordatabase_spark.operators.chunking import chunk_documents, pack_documents

@@ -42,6 +42,11 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from distributedvectordatabase_spark.operators.kmeans import (
+    DEFAULT_TRAIN_SAMPLE,
+    lloyd,
+    train_sample,
+)
 from distributedvectordatabase_spark.operators.knn import (
     QueryBatch,
     _final_topk,
@@ -49,12 +54,6 @@ from distributedvectordatabase_spark.operators.knn import (
     query_batch,
     scan_topk,
 )
-
-# Bounded driver-side training sample (vectors, not bytes): 64k × 512-D
-# float64 is 256 MB — safe; the sample is taken with a deterministic
-# content hash so training is reproducible across runs/cluster sizes.
-DEFAULT_TRAIN_SAMPLE = 65_536
-
 
 @dataclass(frozen=True)
 class PQCodebook:
@@ -92,45 +91,6 @@ class PQCodebook:
         )
 
 
-def _kmeans_1d(X: np.ndarray, k: int, seed: int, iters: int) -> np.ndarray:
-    """Seeded Lloyd k-means for one subspace (X: (n, dsub)) — plain
-    numpy, deterministic. Empty clusters are re-seeded on the point
-    farthest from its centroid (standard split heuristic)."""
-    rng = np.random.RandomState(seed)
-    n = len(X)
-    C = X[rng.choice(n, size=min(k, n), replace=False)].astype(np.float64)
-    if len(C) < k:  # degenerate tiny sample: pad with repeats
-        C = np.vstack([C, C[rng.choice(len(C), size=k - len(C))]])
-    xn = np.einsum("ij,ij->i", X, X)
-    prev = None
-    for _ in range(iters):
-        # assign: (n, k) squared distances via the norm identity
-        d = xn[:, None] - 2.0 * (X @ C.T) + np.einsum("ij,ij->i", C, C)[None, :]
-        a = d.argmin(axis=1)
-        if prev is not None and np.array_equal(a, prev):
-            break  # converged: update would be a no-op
-        prev = a
-        # vectorized centroid update (bincount per dim beats a python
-        # loop over k by ~20×; dsub is small by construction)
-        counts = np.bincount(a, minlength=k)
-        sums = np.stack(
-            [np.bincount(a, weights=X[:, t], minlength=k) for t in range(X.shape[1])],
-            axis=1,
-        )
-        nonempty = counts > 0
-        C[nonempty] = sums[nonempty] / counts[nonempty, None]
-        n_empty = int((~nonempty).sum())
-        if n_empty:
-            # reseed each empty cluster on a DISTINCT farthest point —
-            # seeding them all on the same point would leave duplicate
-            # centroids that tie on every assignment and never separate
-            # np.resize wraps when a degenerate sample has fewer points
-            # than empty clusters (k > n)
-            far = np.resize(np.argsort(d.min(axis=1))[::-1], n_empty)
-            C[~nonempty] = X[far]
-    return C
-
-
 def pq_train(
     df: DataFrame,
     vec_col: str = "embedding",
@@ -146,16 +106,11 @@ def pq_train(
 ) -> PQCodebook:
     """Train PQ codebooks on a deterministic bounded sample of ``df``.
 
-    The sample is selected and *ordered* by a content-independent hash
-    of the id (the same engine-portable trick as the catalog's hash
-    sampling), so the trained codebooks are reproducible across runs,
-    partitionings, and cluster sizes. A naive ``orderBy(hash).limit(s)``
-    makes every partition feed ``s`` rows into the driver's
-    TakeOrdered merge (measured 116 s at 500k×64-D); the hash
-    *threshold* prefilter below keeps only ~1.3·s rows before the
-    sort, so the merge cost is O(s) regardless of corpus size (1.5 s
-    on the same corpus). Raises if the vector dimension is not
-    divisible by ``m``.
+    The sample is ``kmeans.train_sample``'s md5-ordered one, so the
+    trained codebooks are reproducible across runs, partitionings, and
+    cluster sizes; each subspace is fit by ``kmeans.lloyd`` with seed
+    ``seed + j``. Raises if the vector dimension is not divisible by
+    ``m``.
 
     With ``cell_centroids`` (an (n_cells, dim) array; ``cell_col``
     must hold each row's cell id), the codebooks are trained on the
@@ -174,32 +129,11 @@ def pq_train(
     The same matrix must be passed to pq_encode / pq_search.
     """
     ksub = 2 ** int(nbits)
-    s = int(sample)
-    md5 = F.md5(F.col(id_col).cast("string"))
-    extra = [F.col(cell_col)] if cell_centroids is not None else []
-    cand = df.select(
-        F.col(vec_col),
-        F.conv(F.substring(md5, 1, 8), 16, 10).cast("bigint").alias("_h"),
-        md5.alias("_md5"),
-        *extra,
-    )
-    n = df.count()
-    if n > 1.5 * s:
-        # keep rows whose 32-bit hash prefix falls under the sample
-        # fraction (with 1.3 slack for binomial jitter); the top-s by
-        # hash of the survivors equals the top-s by hash of the corpus
-        cut = int(min(1.0, 1.3 * s / n) * (16**8))
-        cand = cand.filter(F.col("_h") < cut)
-    # order by the full digest: the 32-bit prefix alone collides at
-    # birthday rates over a 64k sample, which would leave the order
-    # partition-dependent within tied prefixes
-    sel = [vec_col] + ([cell_col] if cell_centroids is not None else [])
-    rows = cand.orderBy("_md5").limit(s).select(*sel).collect()
-    X = np.array([list(r[0]) for r in rows], dtype=np.float64)
+    extra = (cell_col,) if cell_centroids is not None else ()
+    X, cols = train_sample(df, vec_col, id_col, sample, extra)
     if cell_centroids is not None:
         MU = np.asarray(cell_centroids, dtype=np.float64)
-        cells = np.array([int(r[1]) for r in rows])
-        X = X - MU[cells]
+        X = X - MU[cols[cell_col].astype(np.int64)]
     if rotation is not None:
         X = X @ np.asarray(rotation, dtype=np.float64)
     dim = X.shape[1]
@@ -208,7 +142,7 @@ def pq_train(
     dsub = dim // m
     subs = X.reshape(len(X), m, dsub).transpose(1, 0, 2)
     cents = np.stack(
-        [_kmeans_1d(np.ascontiguousarray(subs[j]), ksub, seed + j, iters) for j in range(m)]
+        [lloyd(np.ascontiguousarray(subs[j]), ksub, seed + j, iters) for j in range(m)]
     )
     return PQCodebook(centroids=cents, dim=dim)
 

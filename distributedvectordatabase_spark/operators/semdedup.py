@@ -41,22 +41,23 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from distributedvectordatabase_spark.operators.kmeans import lloyd, train_sample
+
 
 def fit_centroids(
     df: DataFrame,
     n_clusters: int,
     *,
     vec_col: str = "embedding",
+    id_col: str = "vec_id",
     seed: int = 42,
 ) -> np.ndarray:
-    """Distributed KMeans (Spark ML) → (n_clusters, d) centroid matrix.
-    Seeded, so the same corpus always yields the same clustering."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    feats = df.select(array_to_vector(F.col(vec_col)).alias("_f"))
-    model = KMeans(k=int(n_clusters), seed=seed, featuresCol="_f").fit(feats)
-    return np.array([np.asarray(c) for c in model.clusterCenters()], dtype=np.float64)
+    """(n_clusters, d) centroid matrix: seeded ``kmeans.lloyd`` over
+    ``kmeans.train_sample``'s bounded md5-of-``id_col`` sample — the
+    IVF cell trainer. The same corpus always yields the same
+    clustering, at any partitioning."""
+    X, _ = train_sample(df, vec_col, id_col)
+    return lloyd(X, int(n_clusters), seed)
 
 
 def assign_members(
@@ -85,8 +86,8 @@ def assign_members(
             # one gemm per batch, reused by both the assignment argmin
             # and the reported cosine — it dominates the pass cost
             XC = X @ C.T
-            # nearest by L2² via the norm identity (matches KMeans
-            # assignment); similarity reported as cosine
+            # nearest by L2² via the norm identity; similarity
+            # reported as cosine
             d2 = (xn**2)[:, None] - 2.0 * XC + (cn**2)[None, :]
             cell = d2.argmin(axis=1)
             safe_xn = np.where(xn == 0.0, 1.0, xn)
@@ -221,10 +222,10 @@ def semantic_dedup(
     """The corpus minus semantic duplicates: every duplicate group
     (cosine >= threshold within a cluster) keeps exactly one member
     per the ``keep`` policy; rows with no duplicate pass through.
-    ``centroids`` is a (k, d) matrix, or an int to fit seeded
-    distributed KMeans here. Returns ``df``'s original columns."""
+    ``centroids`` is a (k, d) matrix, or an int to fit them here with
+    :func:`fit_centroids`. Returns ``df``'s original columns."""
     if isinstance(centroids, (int, np.integer)):
-        centroids = fit_centroids(df, int(centroids), vec_col=vec_col)
+        centroids = fit_centroids(df, int(centroids), vec_col=vec_col, id_col=id_col)
     dropped = (
         semantic_dup_members(
             df, centroids, threshold=threshold, id_col=id_col,

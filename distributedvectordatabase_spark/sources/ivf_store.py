@@ -1,14 +1,14 @@
 """IVF (inverted-file) vector store — build-once / query-many ANN.
 
-``operators/ann.py.ivf_knn`` fits KMeans per call, which is the honest
-cold-start cost but not how an index is used. This store separates the
-phases the way the reference separates index build from search
-(shard/shard_node.py:51-99 build vs :101-133 search):
+This store separates the phases the way the reference separates index
+build from search (shard/shard_node.py:51-99 build vs :101-133 search):
 
-- **build**: distributed KMeans over the corpus → per-row cell
-  assignment → Parquet ``partitionBy("cell_id")``; the tiny centroid
-  matrix is persisted next to the data as JSON. At 100 TB the KMeans
-  pass and the partitioned write are the only full scans.
+- **build**: seeded numpy Lloyd (``operators/kmeans.py``) on a bounded
+  md5-ordered sample of the corpus, the way FAISS trains its coarse
+  quantizer → per-row nearest-centroid assignment → Parquet
+  ``partitionBy("cell_id")``; the tiny centroid matrix is persisted
+  next to the data as JSON. At 100 TB the partitioned write is the
+  only full pass that is not a bounded sample or a count.
 - **query**: load centroids (KBs), rank cells per query driver-side,
   then ``cell_id IN (...)`` + per-query equi-join — Catalyst partition
   pruning skips the unprobed cells' files entirely, so query cost is
@@ -16,6 +16,8 @@ phases the way the reference separates index build from search
 
 Append ingest assigns new rows to the *existing* centroids (no refit),
 matching standard IVF semantics; periodic rebuild is a caller policy.
+Build, split and append assign with the one rule
+``kmeans.nearest_cells``, so every live row sits in its nearest cell.
 Append, delete and compact follow ``tombstones.GenerationalStore``'s
 commit protocol over the ``_centroids.json`` sidecar.
 """
@@ -36,6 +38,11 @@ from distributedvectordatabase_spark.sources.tombstones import (
 )
 from distributedvectordatabase_spark.sources.vector_store import VectorTable
 
+from distributedvectordatabase_spark.operators.kmeans import (
+    lloyd,
+    nearest_cells_udf,
+    train_sample,
+)
 from distributedvectordatabase_spark.operators.knn import (
     QueryBatch,
     _exact_topk,
@@ -105,39 +112,38 @@ class IVFStore(VectorTable, StreamedStore):
         split_threshold: float | None = None,
         max_split_rounds: int = 3,
     ) -> None:
-        """Fit KMeans cells and write the cell-partitioned table.
+        """Train the cells and write the cell-partitioned table.
 
-        ``split_threshold=t`` bounds cell skew: KMeans minimizes SSE,
-        not balance, so a dense region (one tight mode holding most of
-        the mass) collapses into ONE cell — and at 100 TB a hot cell is
-        a straggler scan on every probe that touches it (the same
-        failure class as the MinHash hot band keys, which got a cap +
-        audit in r5). After the initial fit, any cell holding more than
-        ``t×`` the mean count is recursively re-fit: KMeans splits it
-        into ``ceil(size/(t·mean))`` subcells, the parent centroid is
+        The ``n_cells`` centroids are ``kmeans.lloyd`` (seed
+        ``self.seed``, 20 iterations) over ``kmeans.train_sample``'s
+        bounded md5-ordered sample, so they are byte-identical at any
+        input partitioning; the write assigns every row with
+        ``kmeans.nearest_cells``.
+
+        ``split_threshold=t`` bounds cell skew: k-means minimizes SSE,
+        not balance, so a dense region can leave one cell far above the
+        mean — most often after appends route a new mode into frozen
+        centroids — and at 100 TB a hot cell is a straggler scan on
+        every probe that touches it (the same failure class as the
+        MinHash hot band keys, which are capped and audited). After
+        the initial fit, any cell holding more than ``t×`` the mean
+        count is recursively re-fit: Lloyd splits it into
+        ``ceil(size/(t·mean))`` subcells, the parent centroid is
         replaced by the subcentroids, and ONE global nearest-centroid
         reassignment pass restores the store invariant (every row in
         its nearest cell — exactly what append/query assume), repeated
         up to ``max_split_rounds`` or until no cell exceeds the bound.
-        Cost per round: one bounded per-cell fit per oversized cell +
+        Cost per round: one bounded sample + fit per oversized cell +
         one matmul projection over the corpus — never an extra
         shuffle; the partitioned write at the end is unchanged. Audit
-        via :meth:`cell_metrics` / :meth:`cell_distribution`; probed
-        in tests + BASELINE.md on a planted-hot-mode corpus."""
-        from pyspark.ml.clustering import KMeans
-        from pyspark.ml.functions import array_to_vector
-
-        feats = df.select(
+        via :meth:`cell_metrics` / :meth:`cell_distribution`."""
+        X, _ = train_sample(df, self.vec_col, self.id_col)
+        C = lloyd(X, self.n_cells, self.seed)
+        assigned = df.select(
             self.id_col, self.vec_col, *self.meta_cols,
-            array_to_vector(F.col(self.vec_col)).alias("_f"),
+            nearest_cells_udf(C)(F.col(self.vec_col)).alias("cell_id"),
         )
-        model = KMeans(
-            k=self.n_cells, seed=self.seed, featuresCol="_f", predictionCol="cell_id"
-        ).fit(feats)
-        assigned = model.transform(feats).select(
-            self.id_col, self.vec_col, *self.meta_cols, "cell_id"
-        )
-        centers = [list(map(float, np.asarray(c))) for c in model.clusterCenters()]
+        centers = C.tolist()
         if split_threshold is not None:
             assigned, centers = self._split_oversized(
                 assigned, centers, float(split_threshold), int(max_split_rounds)
@@ -202,9 +208,6 @@ class IVFStore(VectorTable, StreamedStore):
         matrix. ``keep_cols`` ride through the reassignment unchanged
         (compact passes ``_gen`` so snapshot history survives a
         rebalance)."""
-        from pyspark.ml.clustering import KMeans
-        from pyspark.ml.functions import array_to_vector
-
         if t <= 1.0:
             raise ValueError("split_threshold must exceed 1 (t x mean cells split)")
         assigned = assigned.localCheckpoint(eager=True)
@@ -221,34 +224,17 @@ class IVFStore(VectorTable, StreamedStore):
             new_centers = [c for i, c in enumerate(centers) if i not in set(oversized)]
             for c in oversized:
                 m = max(2, -(-sizes[c] // int(max(t * mean, 1))))
-                sub = assigned.filter(F.col("cell_id") == c).select(
-                    array_to_vector(F.col(self.vec_col)).alias("_f")
+                X, _ = train_sample(
+                    assigned.filter(F.col("cell_id") == c), self.vec_col,
+                    self.id_col, n=sizes[c],
                 )
-                subm = KMeans(
-                    k=min(m, sizes[c]), seed=self.seed + 1 + c, featuresCol="_f",
-                    predictionCol="_sub",
-                ).fit(sub)
-                new_centers.extend(
-                    [list(map(float, np.asarray(sc))) for sc in subm.clusterCenters()]
-                )
+                new_centers.extend(lloyd(X, min(m, sizes[c]), self.seed + 1 + c).tolist())
             centers = new_centers
             # one global nearest-centroid pass: restores the invariant
             # every row sits in its nearest cell of the FINAL set
-            C = np.array(centers, dtype=np.float64)
-
-            @F.pandas_udf("int")
-            def nearest(vecs: pd.Series) -> pd.Series:
-                X = np.array(list(vecs.values), dtype=np.float64)
-                d2 = (
-                    (X ** 2).sum(1)[:, None]
-                    - 2.0 * X @ C.T
-                    + (C ** 2).sum(1)[None, :]
-                )
-                return pd.Series(d2.argmin(axis=1), dtype="int32")
-
             assigned = assigned.select(
                 self.id_col, self.vec_col, *self.meta_cols, *keep_cols,
-                nearest(F.col(self.vec_col)).alias("cell_id"),
+                nearest_cells_udf(centers)(F.col(self.vec_col)).alias("cell_id"),
             ).localCheckpoint(eager=True)
         return assigned, centers
 
@@ -277,8 +263,8 @@ class IVFStore(VectorTable, StreamedStore):
     @locked_writer
     def append(self, df: DataFrame, ingest_batch: int | None = None) -> None:
         """Assign new rows to the existing centroids (no refit) and
-        append — the nearest-centroid math runs as a pandas_udf batch
-        matmul, no shuffle beyond the partitioned write.
+        append — ``kmeans.nearest_cells`` runs as a pandas_udf batch
+        GEMM, no shuffle beyond the partitioned write.
 
         Crash-atomic (the GenerationalStore two-phase protocol): a
         write intent persists before any data job runs, and one final
@@ -288,16 +274,7 @@ class IVFStore(VectorTable, StreamedStore):
         invisible to every read until the next writer heals them; the
         replay lands under a fresh gen. ``compact()`` reclaims aborted
         rows physically."""
-        from pyspark.sql.functions import pandas_udf
-
         C = self.centroids()
-
-        @pandas_udf("int")
-        def nearest_cell(vecs: pd.Series) -> pd.Series:
-            X = np.array(list(vecs.values), dtype=np.float64)
-            d2 = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-            return pd.Series(d2.argmin(axis=1), dtype="int32")
-
         raw_cols = df.sparkSession.read.parquet(self.path).columns
         if "_gen" not in raw_cols:
             raise ValueError(
@@ -306,7 +283,7 @@ class IVFStore(VectorTable, StreamedStore):
             )
         gen = self._begin_append()
         out = df.select(self.id_col, self.vec_col, *self.meta_cols).withColumn(
-            "cell_id", nearest_cell(F.col(self.vec_col))
+            "cell_id", nearest_cells_udf(C)(F.col(self.vec_col))
         ).withColumn("_gen", F.lit(gen))
         has_pq = os.path.exists(self._pq_codebook_path)
         has_sq = os.path.exists(self._sq_params_path)

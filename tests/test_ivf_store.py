@@ -410,8 +410,10 @@ def test_ivfsq_compact_carries_sidecar(spark, built_sq):
 
 
 def _skewed_df(spark, n=6000, dim=16):
-    """80% of rows in one tight mode: KMeans minimizes SSE, so the
-    mode collapses into one hot cell — the straggler-scan shape."""
+    """80% of rows in one tight mode (ids 0..0.8n-1), the rest spread
+    wide (the last 0.2n ids). A cell trained on the spread rows alone
+    catches the whole mode when it is appended later — the hot-cell
+    shape of a live store whose centroids are frozen."""
     import numpy as np
 
     rng = np.random.RandomState(0)
@@ -436,19 +438,27 @@ def test_cell_metrics_audit(spark, built):
 
 
 def test_split_threshold_bounds_hot_cell(spark, tmp_path):
+    """Cells trained on the spread rows, then the dense mode appended
+    to the frozen centroids: one cell takes the whole mode, and the
+    split rebalance must bring every cell under t x the mean."""
     df = _skewed_df(spark)
     n = df.count()
-    plain = IVFStore(str(tmp_path / "plain"), n_cells=8)
-    plain.build(df)
-    m0 = plain.cell_metrics(spark).first()
+    hot = F.col("vec_id") < int(n * 0.8)
+    s = IVFStore(str(tmp_path / "s"), n_cells=8)
+    s.build(df.filter(~hot))
+    s.append(df.filter(hot))
+    m0 = s.cell_metrics(spark).first()
     assert m0.max_count > 0.5 * n  # the skew is real before the fix
 
-    split = IVFStore(str(tmp_path / "split"), n_cells=8)
-    split.build(df, split_threshold=2.0)
-    m1 = split.cell_metrics(spark).first()
-    assert split.n_cells > 8  # subcells were added
+    # each round sizes its subcells against the current mean, which
+    # falls as cells are added, so a mode the fit never saw takes more
+    # rounds than the default 3 (as in the streamed-skew test below)
+    s.compact(spark, split_threshold=2.0, max_split_rounds=6)
+    m1 = s.cell_metrics(spark).first()
+    assert s.n_cells > 8  # subcells were added
     assert m1.max_count <= 2.0 * m1.avg_count + 1  # the promised bound
     assert m1.max_count < 0.2 * n
+    assert s.read(spark).count() == n
 
 
 def test_split_store_exact_probe_and_reopen(spark, tmp_path):
