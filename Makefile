@@ -5,7 +5,7 @@
 # bench: the BENCH contract at $SPARK_GRAFT_SF_DIR (default sf0.1) — run on
 #        an idle machine; concurrent Spark work inflates timings ~2.7x
 
-.PHONY: smoke check bench test exact scale bpe-vocab stores knn
+.PHONY: smoke check bench test exact scale bpe-vocab stores knn text
 
 # opt-in scale probe (not a driver contract): 500k synthetic vectors +
 # 200k synthetic docs; run on an idle machine
@@ -36,6 +36,17 @@ knn:
 		tests/test_filtered_knn_properties.py tests/test_ivf_store.py \
 		tests/test_sq.py tests/test_pq.py tests/test_bq.py \
 		tests/test_engine_parity.py tests/test_search.py tests/test_kmeans.py
+
+# the text gates and the modules behind them (catalog templates,
+# operators/langid, dsir, substring_dedup, bq): a fast gate for
+# catalog-template and text-operator changes, then the bit-level oracle
+# compare of the five text gates and knn_hamming
+text:
+	python -m pytest -q tests/test_langid.py tests/test_dsir.py \
+		tests/test_substring_dedup.py tests/test_bq.py tests/test_plans.py \
+		tests/test_catalog.py
+	python -m tests.exact_compare doc_langid curation_pipeline_langid \
+		doc_tfidf_top3 doc_dsir_weights doc_substring_dedup knn_hamming
 
 # bit-level oracle comparison of every gated query (the strictest form
 # of the driver's sha256-of-CSV hash check); also runs inside `check`

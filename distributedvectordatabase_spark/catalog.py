@@ -1,16 +1,19 @@
 """The declared-query catalog: every operator from SURVEY §2 exposed as
 a named query with (a) a Spark runner and (b) a DuckDB oracle.
 
-Two kinds of entries:
+Two kinds of entries, and no third:
 
 - **SQL-templated**: one template, rendered per dialect via
   functions/text.py primitives — Spark runs ``spark.sql(render("spark"))``
   (pure Catalyst, whole-stage codegen), the oracle is
-  ``render("duckdb")``. Structural parity by construction.
-- **DataFrame-API**: vector/LSH operators whose Spark side is the
-  engine's real API (arrow kNN, pandas_udf bucketing, partitioned
-  store); their oracles are generated SQL embedding the same seeded
-  projection constants.
+  ``render("duckdb")``. Structural parity by construction. A Spark-only
+  plan fix lives in the template itself, in both dialects.
+- **Operator**: the gate runs the package operator it checks (arrow
+  kNN, pandas_udf bucketing, partitioned store, substring dedup, DSIR,
+  chunking); its oracle is the shared template or generated SQL
+  embedding the same seeded constants.
+
+No gate keeps a hand-written DataFrame copy of its own template.
 
 Money aggregations cast to DECIMAL before summing: double summation
 order differs between engines (Spark partial aggs vs DuckDB sequential)
@@ -329,12 +332,9 @@ def _q_doc_quality(d: str) -> str:
     """
 
 
-def _q_curation_pipeline(d: str) -> str:
-    """The north-star end-to-end: a training-data curation pass over
-    the documents table — quality gate (length + stopword + alpha
-    ratios), language filter, exact-dedup keep-first — reporting what
-    survives each stage per language. One declarative plan: Catalyst
-    fuses the gates into the scan and the dedup into one shuffle."""
+def _quality_measures(d: str) -> tuple[str, str, str]:
+    """The curation gates' per-row measures over ``text``: (token
+    count, alphabetic-character ratio, English stopword ratio)."""
     toks = T.tokens("text", d)
     n = f"{_asize(d)}({toks})"
     stop = T.marker_score(toks, T.STOPWORDS_EN, d)
@@ -345,6 +345,16 @@ def _q_curation_pipeline(d: str) -> str:
         else "regexp_replace(text, '[^A-Za-z]', '', 'g')"
     )
     alpha_ratio = f"(cast(length({strip}) as double) / nullif(length(text), 0))"
+    return n, alpha_ratio, stop_ratio
+
+
+def _q_curation_pipeline(d: str) -> str:
+    """The north-star end-to-end: a training-data curation pass over
+    the documents table — quality gate (length + stopword + alpha
+    ratios), language filter, exact-dedup keep-first — reporting what
+    survives each stage per language. One declarative plan: Catalyst
+    fuses the gates into the scan and the dedup into one shuffle."""
+    n, alpha_ratio, stop_ratio = _quality_measures(d)
     return f"""
     WITH gated AS (
       SELECT doc_id, lang, md5(text) AS content_hash
@@ -367,6 +377,53 @@ def _q_curation_pipeline(d: str) -> str:
     """
 
 
+def _langid_ctes(d: str, cols: str, src: str) -> str:
+    """The classifier's CTE stack shared by the two langid gates:
+    ``lowered`` → ``g`` (grams) → ``b`` (buckets) → ``s`` (the five
+    exact bigint scores) → ``p`` (``lang_pred``), carrying ``cols``
+    through. ``lang_pred`` sits in its own CTE and consumers read the
+    column: the argmax CASE is non-cheap, so CollapseProject keeps the
+    two projections apart when the column is used twice and the CASE
+    is evaluated once per row; columns a consumer does not read are
+    pruned by both planners. DuckDB cross-joins the one-row model CTE
+    (:func:`operators.langid.model_cte_sql`); Spark constant-folds the
+    inlined tables."""
+    from distributedvectordatabase_spark.operators import langid as LID
+
+    score_cols = {lang: f"score_{lang}_micro" for lang in LID.LANGS}
+    tbl = (lambda lang: None) if d == SPARK else (lambda lang: f"t_{lang}")
+    scores = ",\n             ".join(
+        f"{LID.score_sql('bks', lang, d, tbl(lang))} AS {score_cols[lang]}"
+        for lang in LID.LANGS
+    )
+    score_list = ", ".join(score_cols[lang] for lang in LID.LANGS)
+    mdl = "" if d == SPARK else f"mdl AS ({LID.model_cte_sql(d)}),"
+    b = "b" if d == SPARK else "b CROSS JOIN mdl"
+    return f"""
+    {mdl}
+    lowered AS (SELECT {cols}, lower(coalesce(text, '')) AS lt FROM {src}),
+    g AS (SELECT {cols}, {LID.grams_sql("lt", d)} AS gs FROM lowered),
+    b AS (SELECT {cols}, {LID.buckets_sql("gs", d)} AS bks FROM g),
+    s AS (
+      SELECT {cols}, cast({_asize(d)}(bks) as bigint) AS n_grams,
+             {scores}
+      FROM {b}
+    ),
+    p AS (
+      SELECT {cols}, n_grams, {score_list},
+             {LID.pred_sql(score_cols)} AS lang_pred
+      FROM s
+    )"""
+
+
+def _spread_docs(d: str) -> str:
+    """The documents relation for per-row-heavy templates: on Spark the
+    ``documents_spread`` view (sources/tables.register_views), which
+    repartitions the single-row-group scan to the session's parallelism
+    so the scoring runs on every core; DuckDB reads ``documents``."""
+    return "documents_spread" if d == SPARK else "documents"
+
+
 def _q_doc_langid(d: str) -> str:
     """Language identification from RAW TEXT (operators/langid.py —
     the CCNet/fastText-style hashed char-n-gram classifier, VERDICT r10
@@ -381,92 +438,20 @@ def _q_doc_langid(d: str) -> str:
 
     100 TB shape: one scan, pure per-row expression work — grams and
     buckets materialize once per row (multi-use aliases survive
-    CollapseProject), then five integer folds. No shuffle, no join."""
-    from distributedvectordatabase_spark.operators import langid as LID
-
-    gs = LID.grams_sql("lt", d)
-    bks = LID.buckets_sql("gs", d)
-    score_cols = {lang: f"score_{lang}_micro" for lang in LID.LANGS}
-    tbl = (lambda lang: None) if d == SPARK else (lambda lang: f"t_{lang}")
-    scores = ",\n             ".join(
-        f"{LID.score_sql('bks', lang, d, tbl(lang))} AS score_{lang}_micro"
-        for lang in LID.LANGS
-    )
-    pred = LID.pred_sql(score_cols)
-    mdl = "" if d == SPARK else f"mdl AS ({LID.model_cte_sql(d)}),"
-    src = "b" if d == SPARK else "b CROSS JOIN mdl"
+    CollapseProject), then five integer folds and one argmax. No join;
+    on Spark the only exchange is the spread scan's repartition
+    (:func:`_spread_docs`). Spark 4.1.2, local[4], sf0.1, noop sink:
+    14.65 s for this template over the unspread scan with the argmax
+    evaluated twice, 4.68 s for the spread, evaluate-once shape."""
     return f"""
-    WITH {mdl}
-    lowered AS (
-      SELECT doc_id, lang, lower(coalesce(text, '')) AS lt FROM documents
-    ),
-    g AS (SELECT doc_id, lang, {gs} AS gs FROM lowered),
-    b AS (SELECT doc_id, lang, {bks} AS bks FROM g),
-    s AS (
-      SELECT doc_id, lang, cast({_asize(d)}(bks) as bigint) AS n_grams,
-             {scores}
-      FROM {src}
-    )
+    WITH {_langid_ctes(d, "doc_id, lang", _spread_docs(d))}
     SELECT doc_id, lang, n_grams,
            score_en_micro, score_de_micro, score_es_micro,
            score_fr_micro, score_zh_micro,
-           {pred} AS lang_pred,
-           CASE WHEN {pred} = lang THEN 1 ELSE 0 END AS agree
-    FROM s
+           lang_pred,
+           CASE WHEN lang_pred = lang THEN 1 ELSE 0 END AS agree
+    FROM p
     """
-
-
-def _run_doc_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DataFrame mirror of ``_q_doc_langid`` over a spread scan (r11):
-    identical expressions and output columns, but the input repartitions
-    to the session's parallelism first (sources/tables._spread_scan) so
-    the ~1,430-gram-per-doc md5 scoring runs on every core instead of
-    the testdata's single row group. Real cost at sf0.1 (noop sink):
-    8.5 s → ~1 s; the bench's count() number barely moves either way
-    because count prunes the pure projection entirely."""
-    from pyspark.sql import functions as F
-
-    from distributedvectordatabase_spark.operators import langid as LID
-    from distributedvectordatabase_spark.sources.tables import load_table
-
-    gs = LID.grams_sql("lt", SPARK)
-    bks = LID.buckets_sql("gs", SPARK)
-    score_names = {lang: f"score_{lang}_micro" for lang in LID.LANGS}
-    pred = LID.pred_sql(score_names)
-    docs = load_table(spark, "documents", sf_dir, spread=True)
-    b = (
-        docs.select(
-            "doc_id", "lang", F.expr("lower(coalesce(text, ''))").alias("lt")
-        )
-        .withColumn("gs", F.expr(gs))
-        .withColumn("bks", F.expr(bks))
-    )
-    s = b.select(
-        "doc_id",
-        "lang",
-        F.expr(f"cast({_asize(SPARK)}(bks) as bigint)").alias("n_grams"),
-        *[
-            F.expr(LID.score_sql("bks", lang, SPARK)).alias(score_names[lang])
-            for lang in LID.LANGS
-        ],
-    )
-    # lang_pred projected FIRST, agree derived from the column in a
-    # follow-up select (r12, ADVICE r11): the argmax CASE is non-cheap
-    # and referencing it twice in one projection re-expands it twice —
-    # CollapseProject's multi-use guard keeps the two-Project form, so
-    # the CASE is evaluated exactly once per row (the restructured
-    # curation runner's shape).
-    return s.select(
-        "doc_id",
-        "lang",
-        "n_grams",
-        "score_en_micro",
-        "score_de_micro",
-        "score_es_micro",
-        "score_fr_micro",
-        "score_zh_micro",
-        F.expr(pred).alias("lang_pred"),
-    ).withColumn("agree", F.expr("CASE WHEN lang_pred = lang THEN 1 ELSE 0 END"))
 
 
 def _q_curation_pipeline_langid(d: str) -> str:
@@ -477,63 +462,36 @@ def _q_curation_pipeline_langid(d: str) -> str:
     curation_pipeline; the grouping key and the en-conditioned stopword
     gate both use ``lang_pred``.
 
-    The Spark side does NOT execute this template (r11): Catalyst's
-    PushDownPredicate substitutes the ``lang_pred`` alias into the
-    WHERE clause and pushes it through every CTE projection down to the
-    scan, re-expanding the argmax CASE's ~30 score references into ~30
-    full copies of the gram→bucket→fold pipeline per row (CASE arms are
-    conditionally evaluated, so codegen subexpression elimination
-    cannot merge them) — measured 70.9 s vs doc_langid's 0.11 s at
-    sf0.1. The registered runner is :func:`_run_curation_pipeline_langid`,
-    which computes the identical result with no filter below the first
-    aggregate. DuckDB (the oracle) materializes CTEs and is fine."""
-    from distributedvectordatabase_spark.operators import langid as LID
+    Plan shape (both dialects; Spark needs it):
 
-    toks = T.tokens("text", d)
-    n = f"{_asize(d)}({toks})"
-    stop = T.marker_score(toks, T.STOPWORDS_EN, d)
-    stop_ratio = f"(cast({stop} as double) / nullif({n}, 0))"
-    strip = (
-        "regexp_replace(text, '[^A-Za-z]', '')"
-        if d == SPARK
-        else "regexp_replace(text, '[^A-Za-z]', '', 'g')"
-    )
-    alpha_ratio = f"(cast(length({strip}) as double) / nullif(length(text), 0))"
-    gs = LID.grams_sql("lt", d)
-    bks = LID.buckets_sql("gs", d)
-    score_cols = {lang: f"score_{lang}_micro" for lang in LID.LANGS}
-    tbl = (lambda lang: None) if d == SPARK else (lambda lang: f"t_{lang}")
-    scores = ",\n             ".join(
-        f"{LID.score_sql('bks', lang, d, tbl(lang))} AS score_{lang}_micro"
-        for lang in LID.LANGS
-    )
-    pred = LID.pred_sql(score_cols)
-    mdl = "" if d == SPARK else f"mdl AS ({LID.model_cte_sql(d)}),"
-    src = "b" if d == SPARK else "b CROSS JOIN mdl"
+    - the two lang-INDEPENDENT gates (token count, alpha ratio) are a
+      WHERE over the scan, referencing only the raw ``text`` column;
+    - the classifier runs once per surviving row (:func:`_langid_ctes`);
+    - the lang-DEPENDENT gate (``lang_pred <> 'en' OR stop_ratio > 0``)
+      is a conditional count in the first aggregate, and groups with
+      no gated row leave through ``HAVING n_copies > 0``.
+
+    No filter on ``lang_pred`` ever sits below an aggregate. A WHERE
+    there lets Catalyst's PushDownPredicate substitute the alias and
+    push it to the scan, re-expanding the argmax CASE's ~30 score
+    references into ~30 copies of the gram→bucket→fold pipeline per
+    row (CASE arms evaluate conditionally, so subexpression elimination
+    cannot merge them): 70.9 s vs ~1 s at sf0.1, and on Spark 4.1.2 a
+    201 KB executed plan with 32 ``md5(`` against 28 KB with 2."""
+    n, alpha_ratio, stop_ratio = _quality_measures(d)
     return f"""
-    WITH {mdl}
-    lowered AS (
-      SELECT doc_id, text, lower(coalesce(text, '')) AS lt FROM documents
+    WITH gated AS (
+      SELECT doc_id, text FROM {_spread_docs(d)}
+      WHERE {n} >= 10 AND {alpha_ratio} >= 0.5
     ),
-    g AS (SELECT doc_id, text, {gs} AS gs FROM lowered),
-    b AS (SELECT doc_id, text, {bks} AS bks FROM g),
-    s AS (
-      SELECT doc_id, text,
-             {scores}
-      FROM {src}
-    ),
-    p AS (SELECT doc_id, text, {pred} AS lang_pred FROM s),
-    gated AS (
-      SELECT lang_pred AS lang, doc_id, md5(text) AS content_hash
-      FROM p
-      WHERE {n} >= 10
-        AND {alpha_ratio} >= 0.5
-        AND (lang_pred <> 'en' OR {stop_ratio} > 0)
-    ),
+    {_langid_ctes(d, "doc_id, text", "gated")},
     kept AS (
-      SELECT lang, content_hash, min(doc_id) AS keeper_doc_id, count(*) AS n_copies
-      FROM gated
-      GROUP BY lang, content_hash
+      SELECT lang_pred AS lang, md5(text) AS content_hash,
+             count(CASE WHEN lang_pred <> 'en' OR {stop_ratio} > 0
+                        THEN 1 END) AS n_copies
+      FROM p
+      GROUP BY lang_pred, md5(text)
+      HAVING n_copies > 0
     )
     SELECT lang,
            count(*) AS docs_kept,
@@ -542,78 +500,6 @@ def _q_curation_pipeline_langid(d: str) -> str:
     FROM kept
     GROUP BY lang
     """
-
-
-def _run_curation_pipeline_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DataFrame form of ``_q_curation_pipeline_langid`` with the plan
-    shape fixed (r11, guide §1.2 step 1): same per-row expressions, but
-
-    - the two lang-INDEPENDENT gates (token count, alpha ratio) filter
-      directly over the scan, where the pushed-down condition only
-      references the raw ``text`` column — nothing to re-expand;
-    - the classifier runs once per surviving row as a stack of
-      projections (multi-use non-cheap aliases survive CollapseProject,
-      the doc_langid shape);
-    - the lang-DEPENDENT gate (``lang_pred <> 'en' OR stop_ratio > 0``)
-      is folded into the first aggregate as a conditional count instead
-      of a WHERE, so no Filter ever sits below the aggregate to trigger
-      the PushDownPredicate alias re-expansion the template docstring
-      describes. Groups with zero gated rows are dropped above the
-      aggregate (``n_copies > 0`` is on an aggregate result, which
-      cannot push down).
-
-    Results identical to the template/oracle (pinned in
-    tests/test_langid.py and the driver's hash check): 70.9 s → scan-
-    rate at sf0.1."""
-    from pyspark.sql import functions as F
-
-    from distributedvectordatabase_spark.operators import langid as LID
-    from distributedvectordatabase_spark.sources.tables import load_table
-
-    toks = T.tokens("text", SPARK)
-    n = f"{_asize(SPARK)}({toks})"
-    stop = T.marker_score(toks, T.STOPWORDS_EN, SPARK)
-    stop_ratio = f"(cast({stop} as double) / nullif({n}, 0))"
-    strip = "regexp_replace(text, '[^A-Za-z]', '')"
-    alpha_ratio = f"(cast(length({strip}) as double) / nullif(length(text), 0))"
-
-    gs = LID.grams_sql("lt", SPARK)
-    bks = LID.buckets_sql("gs", SPARK)
-    score_names = {lang: f"score_{lang}_micro" for lang in LID.LANGS}
-    pred = LID.pred_sql(score_names)
-
-    docs = load_table(spark, "documents", sf_dir, spread=True)
-    staged = (
-        docs.filter(F.expr(f"{n} >= 10 AND {alpha_ratio} >= 0.5"))
-        .select(
-            "doc_id",
-            "text",
-            F.expr("lower(coalesce(text, ''))").alias("lt"),
-        )
-        .withColumn("gs", F.expr(gs))
-        .withColumn("bks", F.expr(bks))
-    )
-    for lang in LID.LANGS:
-        staged = staged.withColumn(
-            score_names[lang], F.expr(LID.score_sql("bks", lang, SPARK))
-        )
-    p = staged.withColumn("lang_pred", F.expr(pred))
-    gated_ok = (F.col("lang_pred") != F.lit("en")) | F.expr(f"{stop_ratio} > 0")
-    p2 = p.select(
-        F.col("lang_pred").alias("lang"),
-        F.expr("md5(text)").alias("content_hash"),
-        gated_ok.alias("ok"),
-    )
-    kept = (
-        p2.groupBy("lang", "content_hash")
-        .agg(F.count(F.when(F.col("ok"), F.lit(1))).alias("n_copies"))
-        .filter(F.col("n_copies") > 0)
-    )
-    return kept.groupBy("lang").agg(
-        F.count("*").alias("docs_kept"),
-        F.sum("n_copies").cast("bigint").alias("docs_after_gates"),
-        (F.sum("n_copies") - F.count("*")).cast("bigint").alias("dups_removed"),
-    )
 
 
 def _q_doc_tfidf_top3(d: str) -> str:
@@ -644,49 +530,6 @@ def _q_doc_tfidf_top3(d: str) -> str:
     ) ranked
     WHERE rnk <= 3
     """
-
-
-def _run_doc_tfidf_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DataFrame form of _q_doc_tfidf_top3 with the exploded (doc,
-    term) frame cached — the SQL template's `ex` CTE feeds both TF and
-    DF aggregations, and Catalyst inlines CTEs, so the template
-    tokenizes the corpus twice. Caching halves the work; every
-    expression mirrors the template so values stay oracle-identical."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from distributedvectordatabase_spark.sources.tables import load_table
-
-    docs = load_table(spark, "documents", sf_dir)
-    ex = docs.select(
-        "doc_id", F.explode(F.expr(T.tokens("text", SPARK))).alias("term")
-    ).cache()
-    tf = ex.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
-    idf = ex.groupBy("term").agg(F.countDistinct("doc_id").alias("df"))
-    # n_docs rides the plan as a broadcast one-row aggregate (the
-    # template's own CROSS JOIN n shape) instead of a docs.count()
-    # driver job — one fewer blocking action per call (guide §5), same
-    # value: count(*) is an exact integer, and casting it to double in
-    # the ln argument equals the old Python-float literal bit for bit.
-    n = docs.agg(F.count("*").alias("n_docs"))
-    scored = tf.join(idf, "term").crossJoin(F.broadcast(n)).select(
-        "doc_id",
-        "term",
-        # the ln() is quantized BEFORE the tf multiply: Java Math.log and
-        # DuckDB's libm log may differ by one ulp on the same argument,
-        # and tf (up to ~200) amplifies that past the final 1e-6 grain —
-        # a deterministic log factor makes the product engine-identical
-        _qz_col(
-            F.col("tf")
-            * _qz_col(F.log(F.col("n_docs").cast("double") / F.col("df")))
-        ).alias("tfidf"),
-    )
-    w = Window.partitionBy("doc_id").orderBy(F.col("tfidf").desc(), "term")
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 3)
-        .select("doc_id", "term", "tfidf")
-    )
 
 
 def _q_doc_substring_dedup(d: str) -> str:
@@ -825,13 +668,14 @@ def _q_doc_dsir_weights(d: str) -> str:
 
     Scale shape: the corpus is touched once (tokenize + shingle +
     per-(doc, term) count); buckets fold that to ≤ {B} rows per doc;
-    the λ table is {B} rows — broadcast-sized at any corpus scale (the
-    DataFrame form in operators/dsir.py broadcasts it); only the gate's
-    final rank is a global window over one skinny row per doc, and the
-    production path (dsir_select) replaces it with a top-k. The final
-    BROADCAST(docs) hint is likewise gate-only decoration (the lang
-    join-back for a driver-sized result); the production path returns
-    weights keyed by doc_id with no corpus join at all."""
+    the λ table is {B} rows — broadcast-sized at any corpus scale
+    (operators/dsir.py, which this gate's Spark side runs, broadcasts
+    it); only the gate's final rank is a global window over one skinny
+    row per doc, and the production path (dsir_select) replaces it with
+    a top-k. The final BROADCAST(docs) hint is likewise gate-only
+    decoration (the lang join-back for a driver-sized result); the
+    production path returns weights keyed by doc_id with no corpus join
+    at all."""
     B = 512
     toks = T.tokens("text", d)
     sh2 = T.word_shingles("toks", 2, d)
@@ -896,105 +740,35 @@ def _q_doc_dsir_weights(d: str) -> str:
     """
 
 
-def _run_doc_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DataFrame mirror of ``_q_doc_dsir_weights`` (r12, VERDICT r11
-    #7) with one plan-shape fix, no persist and no extra driver
-    actions (the r11 persist restructure measured SLOWER and was
-    reverted — OPTIMIZATION_r11.md negative results): the per-bucket
-    raw and target counts fold into ONE aggregation over ``dt`` joined
-    with the broadcast (doc_id, lang) slice — ``rc = sum(k)``,
-    ``tc = sum(k) FILTER (lang = 'en')`` as a conditional sum (the
-    langid-gate pattern), instead of the template's two separate
-    aggregations + LEFT JOIN. One fewer pass over ``dt`` and one fewer
-    join; identical exact bigints (the doc_id join is key-preserving,
-    conditional-sum nulls reproduce the LEFT JOIN's missing-bucket
-    nulls). Measured at sf0.1 (idle, min-of-5): noop 3.38 → 2.60 s,
-    count 1.95 → 1.79 s. A spread-scan variant of the heavy pipeline
-    was A/B'd and REJECTED (noop 3.50, count 2.88 — the repartition
-    exchange rides every inlined copy of the ``dt`` subtree and costs
-    more than it parallelizes; OPTIMIZATION_r12.md).
-
-    Every arithmetic expression is the template's verbatim (exact
-    integer products, one IEEE divide inside ln, floor-quantized
-    micro-units, exact bigint dot products), so rows are byte-identical
-    to the DuckDB oracle."""
+def _run_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The ``doc_dsir_weights`` gate runs the operator it checks,
+    :func:`operators.dsir.dsir_weights`, with the corpus's ``lang =
+    'en'`` slice as target, then adds the gate's global rank, the
+    top-20% ``selected`` flag and the ``lang`` join-back — the same
+    expressions as the template's last two CTEs. Rows are identical to
+    the DuckDB oracle (exact integers; ``weight`` is one IEEE divide).
+    Spark 4.1.2, local[4], sf0.1, min of 5 in two alternating sessions:
+    noop sink 2.45/2.32 s against 3.85/3.56 s for the hand-written
+    DataFrame copy it replaced (the template on Spark read 8.14 s);
+    count() 2.17/2.57 against 1.78/2.01 s, since the operator's λ fit
+    is an eager collect, a second pass over the corpus."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
+    from distributedvectordatabase_spark.operators.dsir import dsir_weights
     from distributedvectordatabase_spark.sources.tables import load_table
 
-    B = 512
-    toks = T.tokens("text", SPARK)
-    sh2 = T.word_shingles("toks", 2, SPARK)
-    heavy = load_table(spark, "documents", sf_dir)
     docs = load_table(spark, "documents", sf_dir)
-    base = heavy.select("doc_id", F.expr(toks).alias("toks"))
-    occ = base.select("doc_id", F.explode("toks").alias("s")).unionAll(
-        base.select("doc_id", F.expr(sh2).alias("sh2")).select(
-            "doc_id", F.explode("sh2").alias("s")
-        )
-    )
-    term = occ.groupBy("doc_id", "s").agg(F.count("*").alias("c"))
-    dt = term.groupBy(
-        "doc_id", F.expr(f"{T.hash64('s', SPARK)} % {B}").alias("bkt")
-    ).agg(F.expr("cast(sum(c) as bigint)").alias("k"))
-    # merged raw+target bucket stats: one aggregation, conditional sum
-    lang = docs.select("doc_id", "lang")
-    bs = (
-        dt.join(F.broadcast(lang), "doc_id")
-        .groupBy("bkt")
-        .agg(
-            F.expr("cast(sum(k) as bigint)").alias("rc"),
-            F.expr(
-                "cast(sum(CASE WHEN lang = 'en' THEN k END) as bigint)"
-            ).alias("tc"),
-        )
-    )
-    tots = bs.agg(
-        F.expr(f"cast(sum(rc) as bigint) + {B}").alias("rtot"),
-        F.expr(f"cast(coalesce(sum(tc), 0) as bigint) + {B}").alias("ttot"),
-    )
-    logr = (
-        "ln(cast((coalesce(tc, 0) + 1) * rtot as double)"
-        " / cast((rc + 1) * ttot as double))"
-    )
-    lam = bs.crossJoin(F.broadcast(tots)).select(
-        "bkt",
-        F.expr(
-            f"cast(floor(({logr}) * cast(1000000 as double)"
-            " + cast(0.5 as double)) as bigint)"
-        ).alias("lam_u"),
-    )
-    scored = (
-        dt.join(F.broadcast(lam), "bkt")
-        .groupBy("doc_id")
-        .agg(
-            F.expr("cast(sum(k) as bigint)").alias("n_feats"),
-            F.expr("cast(sum(k * lam_u) as bigint)").alias("weight_micro"),
-        )
-    )
-    ranked = scored.withColumn(
-        "rnk",
-        F.row_number().over(
-            Window.orderBy(F.col("weight_micro").desc(), "doc_id")
-        ),
-    )
-    n = docs.agg(F.expr("cast(count(*) as bigint)").alias("n_docs"))
+    w = dsir_weights(docs, docs.filter("lang = 'en'"))
+    rnk = F.row_number().over(Window.orderBy(F.col("weight_micro").desc(), "doc_id"))
+    n = docs.agg(F.count("*").alias("n_docs"))
     return (
-        ranked.join(F.broadcast(docs.select("doc_id", "lang")), "doc_id")
+        w.withColumn("rnk", rnk.cast("bigint"))
+        .join(F.broadcast(docs.select("doc_id", "lang")), "doc_id")
         .crossJoin(F.broadcast(n))
         .select(
-            "doc_id",
-            "lang",
-            "n_feats",
-            "weight_micro",
-            F.expr(
-                "cast(weight_micro as double) / cast(1000000 as double)"
-            ).alias("weight"),
-            F.expr("cast(rnk as bigint)").alias("rnk"),
-            F.expr("CASE WHEN rnk * 5 <= n_docs THEN 1 ELSE 0 END").alias(
-                "selected"
-            ),
+            "doc_id", "lang", "n_feats", "weight_micro", "weight", "rnk",
+            F.expr("CASE WHEN rnk * 5 <= n_docs THEN 1 ELSE 0 END").alias("selected"),
         )
     )
 
@@ -3978,7 +3752,7 @@ def _bq_corpus_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-cached packed corpus codes for the knn_hamming gate —
     the same keying as tables._LOADED (mtime+size invalidates on
     testdata regeneration) plus a memory+disk persist: the identity
-    sign-pack is a wide codegen projection that otherwise re-runs on
+    sign-pack is a full-corpus Arrow UDF pass that otherwise re-runs on
     every bench rep (~2× the whole scan-bound query, VERDICT r5 #5).
     The persisted table is 2 bigints/row — KBs at gate scale. Persist
     is session-lifetime, the doc_lm_score_df contract; stores persist
@@ -4012,13 +3786,20 @@ def _run_knn_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
     surface (no quantize step at all). Corpus codes come from the
     session cache (_bq_corpus_codes) so bench reps measure the scan,
     not the re-encode; rows are byte-identical either way (the pack is
-    deterministic)."""
+    deterministic). The fixture is collected first and encoded as a
+    LocalRelation, as ``bq.bq_search`` does: the encode UDF above the
+    fixture's ``orderBy().limit()`` would plan a full range-partitioned
+    sort instead of a TakeOrderedAndProject."""
     from distributedvectordatabase_spark.operators.bq import bq_encode, bq_topk
+    from distributedvectordatabase_spark.operators.knn import (
+        local_query_relation,
+        query_batch,
+    )
     from distributedvectordatabase_spark.sources.tables import queries_fixture
 
-    qcodes = bq_encode(
-        queries_fixture(spark, sf_dir, n=N_QUERIES), EMB_DIM, "qvec", out_col="qcode"
-    )
+    batch = query_batch(queries_fixture(spark, sf_dir, n=N_QUERIES), dim=EMB_DIM)
+    q = local_query_relation(spark, batch, "qid", "qvec")
+    qcodes = bq_encode(q, EMB_DIM, "qvec", out_col="qcode")
     return bq_topk(
         _bq_corpus_codes(spark, sf_dir),
         qcodes.select("qid", "qcode"),
@@ -4210,14 +3991,11 @@ def build_catalog() -> dict[str, Query]:
         # token-stats/repetition queries, doc_sample_fingerprint the old
         # fingerprint/sample-hash ones)
         _sql_query("doc_quality", _q_doc_quality),
-        Query("doc_tfidf_top3", _run_doc_tfidf_top3, _q_doc_tfidf_top3(DUCKDB)),
+        _sql_query("doc_tfidf_top3", _q_doc_tfidf_top3),
         # language identification from raw text (r11, VERDICT r10 #1):
         # the frozen hashed-char-n-gram classifier — integer-only
         # scoring, no float parity surface
-        # r11: Spark side runs the spread-scan DataFrame mirror (the
-        # scoring otherwise single-threads on the one-row-group
-        # testdata); oracle stays the shared template.
-        Query("doc_langid", _run_doc_langid, _q_doc_langid(DUCKDB)),
+        _sql_query("doc_langid", _q_doc_langid),
         # lexical ranked retrieval (north star: hybrid search's text leg)
         Query("doc_bm25_topk", _run_bm25, bm25_oracle_sql()),
         # training-data shaping (north star): sliding-window chunking
@@ -4228,15 +4006,7 @@ def build_catalog() -> dict[str, Query]:
         _sql_query("curation_pipeline", _q_curation_pipeline),
         # the derived-lang curation pass (r11): same gates/dedup, but
         # language comes from the classifier, as a real crawl requires
-        # r11: the Spark side runs the restructured DataFrame form (the
-        # template's WHERE triggers a ~650× PushDownPredicate expression
-        # re-expansion; see _q_curation_pipeline_langid's docstring);
-        # the oracle stays the shared template.
-        Query(
-            "curation_pipeline_langid",
-            _run_curation_pipeline_langid,
-            _q_curation_pipeline_langid(DUCKDB),
-        ),
+        _sql_query("curation_pipeline_langid", _q_curation_pipeline_langid),
         # benchmark decontamination (north star: eval-overlap pass)
         Query("decontam_overlap", _run_decontam, _q_decontam(DUCKDB)),
         Query(
@@ -4299,12 +4069,11 @@ def build_catalog() -> dict[str, Query]:
         _sql_query("events_zorder_key", _q_events_zorder_key),
         Query("embedding_drift", _run_embedding_drift, embedding_drift_oracle_sql()),
         _sql_query("doc_gopher_repetition", _q_doc_gopher_repetition),
-        Query(
-            "doc_dsir_weights", _run_doc_dsir_weights, _q_doc_dsir_weights(DUCKDB)
-        ),
-        # r11: Spark side runs the operator's window-strategy form
-        # (one explode pass; measured faster at every probed scale);
-        # oracle stays the shared template.
+        # operator gates: Spark runs operators/dsir.py and the window
+        # strategy of operators/substring_dedup.py (one explode pass;
+        # measured faster at every probed scale); oracles are the
+        # shared templates
+        Query("doc_dsir_weights", _run_dsir_weights, _q_doc_dsir_weights(DUCKDB)),
         Query(
             "doc_substring_dedup",
             _run_doc_substring_dedup,

@@ -15,14 +15,13 @@ until the shortlist joinback.
 The reference ships raw FlatL2 only (shard/shard_node.py:42-49); this
 module is scale-path depth beyond it, mirroring the SQ8/PQ designs.
 
-Spark-first — everything is Catalyst integer arithmetic, no Python in
-the hot path, no join node in the scoring stage:
+Spark-first — the scoring stage is Catalyst integer arithmetic with
+no Python and no join node; only the encode runs numpy:
 
-- **encode** — one scan, no shuffle: 32 sign bits OR-folded into each
-  bigint word (32, not 64, because DuckDB's checked ``<<`` refuses to
-  set a bigint's sign bit, and oracle parity matters more than halving
-  an already-tiny code column). The OR chain is one codegen-fused
-  projection.
+- **encode** — one scan, no shuffle: one Arrow UDF packs 32 sign bits
+  into each bigint word (32, not 64, because DuckDB's checked ``<<``
+  refuses to set a bigint's sign bit, and oracle parity matters more
+  than halving an already-tiny code column).
 - **search** — the bounded query batch is collected driver-side (the
   exact-kNN pattern, knn.py:61-79) and fanned out as a LITERAL array
   explode against ONE corpus scan — q rows per corpus row, no join
@@ -46,7 +45,7 @@ from __future__ import annotations
 from functools import reduce
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -66,21 +65,14 @@ def n_words(dim: int) -> int:
     return (int(dim) + BITS_PER_WORD - 1) // BITS_PER_WORD
 
 
-def _pack_word(vec_col: str, w: int, dim: int) -> Column:
-    """One packed word: OR of ``1 << j`` over the word's positive dims
-    (element_at is 1-based; dims past ``dim`` in the last word stay 0)."""
-    bits = []
-    for j in range(BITS_PER_WORD):
-        i = w * BITS_PER_WORD + j
-        if i >= dim:
-            break
-        bits.append(
-            F.when(
-                F.element_at(F.col(vec_col), i + 1) > F.lit(0.0),
-                F.lit(1 << j).cast("long"),
-            ).otherwise(F.lit(0).cast("long"))
-        )
-    return reduce(lambda a, b: a.bitwiseOR(b), bits)
+def _sign_words(S: np.ndarray) -> np.ndarray:
+    """Pack an (n, bits) boolean matrix into (n, ceil(bits/32)) int64
+    words: bit j of word w is column 32·w + j (trailing bits stay 0)."""
+    n, bits = S.shape
+    padded = np.zeros((n, n_words(bits) * BITS_PER_WORD), dtype=np.int64)
+    padded[:, :bits] = S
+    weights = np.int64(1) << np.arange(BITS_PER_WORD, dtype=np.int64)
+    return padded.reshape(n, -1, BITS_PER_WORD) @ weights
 
 
 def bq_encode(
@@ -93,40 +85,46 @@ def bq_encode(
 ) -> DataFrame:
     """Append ``out_col: array<bigint>`` — the sign-bit pack of
     ``vec_col`` (ceil(bits/32) words, 32 bits each). No shuffle either
-    way.
+    way: one Arrow UDF packs each batch with numpy.
 
-    ``n_bits=None`` (default) packs the RAW dimension signs — a pure
-    Catalyst projection, codegen-fused, and exactly reproducible in
-    the DuckDB oracle (the ``knn_hamming`` gate).
+    ``n_bits=None`` (default) packs the RAW dimension signs, bit i set
+    iff component i > 0 under Spark's ordering — a NaN component sets
+    its own bit (NaN sorts above every number), a null component or a
+    null vector leaves it 0 — exactly reproducible in the DuckDB oracle
+    (the ``knn_hamming`` gate). No matmul, so a NaN stays local to its
+    own bit. (A per-bit Catalyst CASE projection grew past the 64 KB
+    codegen method limit at 512-D.)
 
     ``n_bits=B`` packs the signs of B seeded gaussian projections
     instead (sign-random-projection / SimHash for vectors, Charikar
     2002) — the scale path: identity signs give only dim+1 Hamming
     levels, so at 500k×64-D the shortlist drowns in ties (recall 0.16,
-    BASELINE.md), while B=256 decouples code length from dim. Runs as
-    an Arrow ``pandas_udf`` matmul — B·dim literal expressions would
-    blow past janino's method limit (the 512-D identity pack already
-    trips the codegen fallback), and one BLAS GEMM per batch is the
-    faster shape anyway. ``np.random.default_rng(seed)`` streams are
-    stable across platforms, so codes are deterministic."""
-    if n_bits is None:
-        words = F.array(*[_pack_word(vec_col, w, dim) for w in range(n_words(dim))])
-        return df.withColumn(out_col, words)
+    BASELINE.md), while B=256 decouples code length from dim; one BLAS
+    GEMM per batch. ``np.random.default_rng(seed)`` streams are stable
+    across platforms, so codes are deterministic."""
+    dim = int(dim)
+    R = None
+    if n_bits is not None:
+        if int(n_bits) % BITS_PER_WORD:
+            raise ValueError(f"n_bits must be a multiple of {BITS_PER_WORD}")
+        R = np.random.default_rng(int(seed)).standard_normal((dim, int(n_bits)))
 
-    B = int(n_bits)
-    if B % BITS_PER_WORD:
-        raise ValueError(f"n_bits must be a multiple of {BITS_PER_WORD}")
-    R = np.random.default_rng(int(seed)).standard_normal((int(dim), B))
-    weights = (np.int64(1) << np.arange(BITS_PER_WORD, dtype=np.int64))
-
-    @F.pandas_udf("array<long>")
-    def _pack(vs: pd.Series) -> pd.Series:
-        X = np.vstack(vs.to_numpy()).astype(np.float64)
-        S = (X @ R) > 0
-        codes = np.empty((len(X), B // BITS_PER_WORD), dtype=np.int64)
-        for w in range(B // BITS_PER_WORD):
-            codes[:, w] = S[:, w * BITS_PER_WORD:(w + 1) * BITS_PER_WORD] @ weights
-        return pd.Series(list(codes))
+    @F.arrow_udf("array<long>")
+    def _pack(vs: pa.Array) -> pa.Array:
+        live = vs.is_valid().to_numpy(zero_copy_only=False)
+        flat = vs.flatten()
+        if len(flat) != int(live.sum()) * dim:
+            raise ValueError(f"bq_encode: every vector must have {dim} components")
+        X = np.zeros((len(vs), dim))
+        X[live] = flat.to_numpy(zero_copy_only=False).reshape(-1, dim)
+        if R is None:
+            S = (X > 0) | np.isnan(X)
+            S[live] &= flat.is_valid().to_numpy(zero_copy_only=False).reshape(-1, dim)
+        else:
+            S = (X @ R) > 0
+        codes = _sign_words(S)
+        offsets = pa.array(np.arange(0, codes.size + 1, codes.shape[1], dtype=np.int32))
+        return pa.ListArray.from_arrays(offsets, pa.array(codes.ravel()))
 
     return df.withColumn(out_col, _pack(F.col(vec_col)))
 

@@ -1,6 +1,8 @@
 """DSIR data selection (Xie et al. 2023, "Data Selection for Language
-Models via Importance Resampling") — the DataFrame scale path behind
-the ``doc_dsir_weights`` gate (catalog._q_doc_dsir_weights).
+Models via Importance Resampling") — the DataFrame scale path that
+the ``doc_dsir_weights`` gate runs on Spark (``dsir_weights`` with the
+corpus's ``lang = 'en'`` slice as target, plus the gate's rank column);
+the gate's oracle is the SQL template catalog._q_doc_dsir_weights.
 
 Select pretraining documents whose hashed-n-gram profile looks like a
 target corpus: features are unigrams + word bigrams hashed into a
@@ -21,7 +23,7 @@ is Σ_b n_b(doc)·λ_b. Selection takes the highest-weight documents.
   uses a global row_number() only because the driver needs every row.
 - The only ``.collect()``s are two single-row totals (O(1), bounded).
 
-Determinism matches the gate bit-for-bit (pinned in tests/test_dsir.py):
+Determinism matches the template bit-for-bit (pinned in tests/test_dsir.py):
 the λ argument is one IEEE division of exact integer products, λ is
 floor-quantized to micro-units, weights are exact bigint dot products.
 """

@@ -105,19 +105,10 @@ def _marks(base: DataFrame, k: int, via: str = "join") -> DataFrame:
     return sh.join(dup, "s").select("doc_id", "pos")
 
 
-def duplicated_spans(
-    docs: DataFrame,
-    k: int = K_DEFAULT,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    via: str = "join",
-    tokens_col: str | None = None,
-) -> DataFrame:
-    """Maximal merged duplicate spans per document: (doc_id, s_start,
-    s_end) in 0-based token positions, end inclusive. Overlapping or
-    adjacent K-windows merge (gaps-and-islands over mark starts)."""
-    base = _tokenized(docs, text_col, id_col, tokens_col)
-    marks = _marks(base, k, via)
+def _spans(marks: DataFrame, k: int) -> DataFrame:
+    """Gaps-and-islands over each doc's mark starts: overlapping or
+    adjacent K-windows merge into maximal spans (doc_id, s_start,
+    s_end), 0-based token positions, end inclusive."""
     w = Window.partitionBy("doc_id").orderBy("pos")
     prev_end = F.max(F.col("pos") + k - 1).over(
         w.rowsBetween(Window.unboundedPreceding, -1)
@@ -135,6 +126,21 @@ def duplicated_spans(
     ).select("doc_id", "s_start", "s_end")
 
 
+def duplicated_spans(
+    docs: DataFrame,
+    k: int = K_DEFAULT,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    via: str = "join",
+    tokens_col: str | None = None,
+) -> DataFrame:
+    """Maximal merged duplicate spans per document: (doc_id, s_start,
+    s_end) in 0-based token positions, end inclusive. Overlapping or
+    adjacent K-windows merge (gaps-and-islands over mark starts)."""
+    base = _tokenized(docs, text_col, id_col, tokens_col)
+    return _spans(_marks(base, k, via), k)
+
+
 def substring_stats(
     docs: DataFrame,
     k: int = K_DEFAULT,
@@ -149,22 +155,7 @@ def substring_stats(
     base = _tokenized(docs, text_col, id_col, tokens_col)
     st = base.select("doc_id", F.size("toks").alias("n_words"))
     marks = _marks(base.filter(F.size("toks") >= k), k, via)
-
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    prev_end = F.max(F.col("pos") + k - 1).over(
-        w.rowsBetween(Window.unboundedPreceding, -1)
-    )
-    islands = marks.withColumn(
-        "is_new",
-        F.when(prev_end.isNull() | (F.col("pos") > prev_end + 1), 1).otherwise(0),
-    ).withColumn(
-        "island",
-        F.sum("is_new").over(w.rowsBetween(Window.unboundedPreceding, 0)),
-    )
-    spans = islands.groupBy("doc_id", "island").agg(
-        F.min("pos").alias("s_start"), (F.max("pos") + k - 1).alias("s_end")
-    )
-    per_doc = spans.groupBy("doc_id").agg(
+    per_doc = _spans(marks, k).groupBy("doc_id").agg(
         F.count("*").cast("bigint").alias("n_spans"),
         F.sum(F.col("s_end") - F.col("s_start") + 1).cast("bigint").alias("dup_tokens"),
     )

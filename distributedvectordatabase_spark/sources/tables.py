@@ -170,7 +170,10 @@ def _sf_fingerprint(sf_dir: str) -> tuple:
 
 def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:
     """Register every table as a temp view so spark.sql() works on the
-    same names the DuckDB oracle uses. Idempotent and cached per
+    same names the DuckDB oracle uses, plus ``documents_spread``: the
+    documents scan repartitioned to the session's parallelism
+    (``load_table(..., spread=True)``) for templates whose per-row work
+    would otherwise run on one core. Idempotent and cached per
     (session, sf_dir, testdata fingerprint) — see _REGISTERED."""
     fp = _sf_fingerprint(sf_dir)
     state = _REGISTERED.get(spark)
@@ -178,6 +181,9 @@ def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:
         return
     for t in TABLES:
         load_table(spark, t, sf_dir).createOrReplaceTempView(t)
+    load_table(spark, "documents", sf_dir, spread=True).createOrReplaceTempView(
+        "documents_spread"
+    )
     _REGISTERED[spark] = {"sf_dir": sf_dir, "fp": fp}
 
 

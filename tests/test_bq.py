@@ -54,6 +54,35 @@ def test_encode_matches_numpy_reference(corpus):
         assert list(e.bq_code) == _np_pack(np.array(r.embedding)), r.vec_id
 
 
+def test_encode_512d_matches_spark_sign_semantics(spark):
+    """At 512-D, with -0.0, NaN and null components and a null vector,
+    the pack equals Spark's own ``element_at(v, i) > 0`` per bit: NaN
+    sets its bit (Spark orders NaN above every number), -0.0 and null
+    leave it clear, a null vector packs to zeros."""
+    dim = 512
+    rng = np.random.default_rng(5)
+    rows = []
+    for i in range(40):
+        v = rng.standard_normal(dim).tolist()
+        for j, val in zip(rng.choice(dim, 9, replace=False), [-0.0, float("nan"), None] * 3):
+            v[int(j)] = val
+        rows.append((i, v))
+    rows.append((40, None))
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    ref = F.array(*[
+        F.expr(
+            f"aggregate(sequence(0, {BITS_PER_WORD - 1}), 0L, (acc, j) -> acc | "
+            f"CASE WHEN coalesce(element_at(embedding, {w * BITS_PER_WORD} + j + 1) > 0, "
+            "false) THEN shiftleft(1L, j) ELSE 0L END)"
+        )
+        for w in range(n_words(dim))
+    ])
+    got = bq_encode(df, dim).select("vec_id", "bq_code", ref.alias("ref")).collect()
+    assert len(got) == 41
+    for r in got:
+        assert list(r.bq_code) == list(r.ref), r.vec_id
+
+
 def test_encode_word_width_avoids_sign_bit(corpus):
     """32-bit words: every packed word fits in [0, 2^32) so the DuckDB
     oracle's checked ``<<`` arithmetic is reproducible."""

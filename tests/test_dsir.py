@@ -1,11 +1,12 @@
 """DSIR importance weighting (operators/dsir.py) and its gate.
 
-Pins: (1) the DataFrame scale path reproduces the SQL gate's
-weight_micro bit-for-bit on real testdata, (2) planted target-like
-documents outscore off-target ones and dsir_select picks them,
-(3) the scoring join broadcasts the λ table and selection compiles to
-TakeOrderedAndProject (no global sort), (4) an empty target slice
-still runs (pure smoothing)."""
+Pins: (1) the DataFrame scale path (which the doc_dsir_weights gate
+runs) reproduces the gate's SQL template, run by DuckDB, bit-for-bit
+on real testdata, (2) planted target-like documents outscore
+off-target ones and dsir_select picks them, (3) the scoring join
+broadcasts the λ table and selection compiles to TakeOrderedAndProject
+(no global sort), (4) an empty target slice still runs (pure
+smoothing)."""
 
 from __future__ import annotations
 
@@ -23,8 +24,10 @@ from tests.conftest import SF_DIR
 
 
 def test_matches_gate_bitwise(spark, oracle):
-    """weight_micro from the DataFrame path == the hash-gated SQL form
-    for every document (exact integers, no tolerance)."""
+    """weight_micro and n_feats from the DataFrame path == the
+    hash-gated SQL template run by DuckDB, for every document (exact
+    integers, no tolerance). The registered gate runs this operator,
+    so the template is the independent side."""
     from distributedvectordatabase_spark.catalog import build_catalog
 
     docs = load_table(spark, "documents", SF_DIR)
@@ -33,8 +36,13 @@ def test_matches_gate_bitwise(spark, oracle):
         r.doc_id: (r.weight_micro, r.n_feats)
         for r in dsir_weights(docs, target).collect()
     }
-    gate = build_catalog()["doc_dsir_weights"].run(spark, SF_DIR)
-    want = {r.doc_id: (r.weight_micro, r.n_feats) for r in gate.collect()}
+    sql = build_catalog()["doc_dsir_weights"].oracle
+    want = {
+        int(d): (int(w), int(n))
+        for d, w, n in oracle.sql(
+            f"SELECT doc_id, weight_micro, n_feats FROM ({sql})"
+        ).fetchall()
+    }
     assert got == want
 
 

@@ -6,22 +6,23 @@ drift AND cross-platform libm drift in math.log loudly), held-out
 accuracy on real multilingual sentences (the thing the synthetic-label
 driver gate cannot measure), DataFrame-operator vs Python-twin parity
 (including empty/NULL/unknown-script inputs), shuffle-free plan shape,
-and the dual-dialect gates against the DuckDB oracle."""
+and the registered gates against the DuckDB oracle, with their plan
+shapes."""
 
 from __future__ import annotations
 
 import hashlib
 import json
+import re
+
+import duckdb
 
 import pytest
 
-from distributedvectordatabase_spark.catalog import (
-    _q_curation_pipeline_langid,
-    _q_doc_langid,
-)
-from distributedvectordatabase_spark.functions.text import DUCKDB, SPARK
+from distributedvectordatabase_spark.catalog import build_catalog
+from distributedvectordatabase_spark.functions.text import SPARK
 from distributedvectordatabase_spark.operators import langid as L
-from tests.conftest import assert_matches_oracle
+from tests.conftest import SF_DIR, SF_SMALL, assert_matches_oracle
 
 # Pinned at freeze time (r11). If this fails the model drifted —
 # either the seeds/params changed (update deliberately, bump the gate
@@ -107,23 +108,27 @@ def test_plan_is_shuffle_free(spark):
 
 
 def test_doc_langid_gate_matches_oracle(spark, oracle):
-    from distributedvectordatabase_spark.sources.tables import register_views
-
-    register_views(spark, "/root/testdata/sf0.01")
-    assert_matches_oracle(
-        spark.sql(_q_doc_langid(SPARK)), oracle, _q_doc_langid(DUCKDB)
-    )
+    q = build_catalog()["doc_langid"]
+    assert_matches_oracle(q.run(spark, SF_DIR), oracle, q.oracle)
 
 
 def test_curation_pipeline_langid_gate_matches_oracle(spark, oracle):
-    from distributedvectordatabase_spark.sources.tables import register_views
+    """The registered gate runs the shared template on Spark; its rows
+    match the same template on DuckDB."""
+    q = build_catalog()["curation_pipeline_langid"]
+    assert_matches_oracle(q.run(spark, SF_DIR), oracle, q.oracle)
 
-    register_views(spark, "/root/testdata/sf0.01")
-    assert_matches_oracle(
-        spark.sql(_q_curation_pipeline_langid(SPARK)),
-        oracle,
-        _q_curation_pipeline_langid(DUCKDB),
-    )
+
+def test_doc_langid_gate_reads_spread_view_and_argmax_once(spark):
+    """The registered doc_langid reads ``documents_spread`` (the
+    repartitioned scan, so the scoring runs on every core) and keeps
+    ``lang_pred`` in its own projection: the argmax CASE appears once
+    in the executed plan, and ``agree`` reads the column."""
+    df = build_catalog()["doc_langid"].run(spark, SF_DIR)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "RoundRobinPartitioning" in plan, plan[:2000]
+    assert plan.count("THEN en") == 1, plan.count("THEN en")
+    assert re.search(r"CASE WHEN \(lang_pred#\d+ = lang#\d+\)", plan)
 
 
 def test_bucket_hash_matches_sql_hash64(spark):
@@ -140,35 +145,39 @@ def test_bucket_hash_matches_sql_hash64(spark):
     assert got == [L.bucket_py(g) for g in grams]
 
 
-def test_curation_pipeline_langid_runner_matches_oracle(spark, oracle):
-    """r11: the registered Spark runner is the restructured DataFrame
-    form (conditional-count aggregation, no WHERE below the first
-    aggregate — the template's WHERE triggers a ~650x PushDownPredicate
-    expression re-expansion, 70.9 s vs ~1 s at sf0.1). Its rows must
-    stay identical to the shared-template oracle."""
-    from distributedvectordatabase_spark.catalog import (
-        _run_curation_pipeline_langid,
+def test_curation_pipeline_langid_runner_matches_oracle(spark):
+    """The registered runner on a second corpus (sf0.001): its rows
+    match the DuckDB template over the same parquet files, so the
+    ``WHERE`` text gates, the conditional count and ``HAVING n_copies >
+    0`` agree across dialects on data other than the sf0.01 gate's."""
+    from distributedvectordatabase_spark.sources.tables import (
+        TABLES,
+        register_views,
     )
 
-    assert_matches_oracle(
-        _run_curation_pipeline_langid(spark, "/root/testdata/sf0.01"),
-        oracle,
-        _q_curation_pipeline_langid(DUCKDB),
-    )
+    q = build_catalog()["curation_pipeline_langid"]
+    con = duckdb.connect()
+    try:
+        for t in TABLES:
+            con.sql(
+                f"CREATE VIEW {t} AS SELECT * FROM "
+                f"read_parquet('{SF_SMALL}/{t}.parquet')"
+            )
+        assert con.sql(q.oracle).fetchall(), "empty oracle at sf0.001"
+        assert_matches_oracle(q.run(spark, SF_SMALL), con, q.oracle)
+    finally:
+        con.close()
+        register_views(spark, SF_DIR)
 
 
 def test_curation_pipeline_langid_runner_plan_shape(spark):
-    """The runner's whole point: no Filter may sit between the first
-    aggregate and the scan except the two cheap text-only gates — i.e.
-    the scoring expressions appear ONCE. Proxy assertion: the argmax
-    CASE re-expansion blows the plan string up ~10x; the fixed plan
-    stays compact and contains no Filter above a Project."""
-    from distributedvectordatabase_spark.catalog import (
-        _run_curation_pipeline_langid,
-    )
-
-    df = _run_curation_pipeline_langid(spark, "/root/testdata/sf0.01")
+    """The registered gate's plan shape: no Filter may sit between the
+    first aggregate and the scan except the two cheap text-only gates —
+    i.e. the scoring expressions appear ONCE. Proxy assertion: the
+    argmax CASE re-expansion blows the plan string up ~7x (201 KB with
+    32 ``md5(`` on Spark 4.1.2); the fixed plan stays near 28 KB with
+    2."""
+    df = build_catalog()["curation_pipeline_langid"].run(spark, SF_DIR)
     plan = df._jdf.queryExecution().executedPlan().toString()
-    # the template's pushed-down form measured ~200 KB of plan text;
-    # the restructured form ~30 KB. 80 KB splits the two regimes.
     assert len(plan) < 80_000, f"plan re-expanded to {len(plan)} chars"
+    assert plan.count("md5(") <= 4, plan.count("md5(")

@@ -222,9 +222,9 @@ def test_no_catalog_query_plans_a_cartesian_or_shuffled_join(spark):
         "hybrid_rrf_topk",
         # one-row aggregate crossJoins, the legitimate BNLJ shape:
         # events_zorder_key broadcasts its min-max stats row,
-        # doc_dsir_weights its three scalar totals (rtot/ttot/n_docs),
-        # doc_tfidf_top3 its n_docs count (r12: the former docs.count()
-        # driver job folded into the plan)
+        # doc_dsir_weights its n_docs count (the operator collects the
+        # λ totals, so they enter the plan as literals), doc_tfidf_top3
+        # its template's CROSS JOIN n
         "events_zorder_key",
         "doc_dsir_weights",
         "doc_tfidf_top3",
